@@ -182,7 +182,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // ARTIFACT PROTOCOL (judge r17): the detail file used to be the
     // hard-coded repo-root BENCH_FULL.json, so ANY bench invocation
     // clobbered the previous party's detail (the r17 judge's adjudication
@@ -207,18 +206,7 @@ object Bench {
       sys.env.get("SPARK_GRAFT_BENCH_PAIR").exists(v => v == "1" || v == "true")
     val mediansPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_MEDIANS", "BENCH_MEDIANS.json")
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // in-process chmod for local writes (no libhadoop here — the stock
-      // LocalFileSystem forks one `chmod` per created file/dir; r18 JFR
-      // counted 1,557 forks in two q215 runs). Same bytes, same perms.
-      .config("spark.hadoop.fs.file.impl", classOf[graft.sources.NioLocalFileSystem].getName)
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.sources.NioLocalFs].getName)
-      .getOrCreate()
+    val spark = GraftSession.local(GraftSession.envCores)
     spark.sparkContext.setLogLevel("WARN")
     // JVM/codegen warmup so the first measured query isn't charged ~3s of
     // one-time session cost.

@@ -2,9 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Production session factory: one place owning the configuration that
-  * makes the engine behave at scale, so jobs, tests, and the driver mains
-  * can't drift.
+/** The session factory: the only code in `src/` that builds a
+  * `SparkSession`. The driver mains (`Verify`, `Bench`), every
+  * `graft.tools` main that opens a session, `LifecycleFuzz` and the spec
+  * suite call [[local]]; the sync benchmark calls [[builder]] and adds its
+  * own master. So the oracle, the bench, the specs and the benchmark run
+  * one configuration (`GraftSessionSpec` keeps it that way).
   *
   * Settings and why:
   *   - AQE on + skew-join: runtime re-planning replaces the reference's
@@ -36,10 +39,18 @@ object GraftSession {
       .config("spark.hadoop.fs.file.impl", classOf[graft.sources.NioLocalFileSystem].getName)
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.sources.NioLocalFs].getName)
 
-  /** Local session with the engine's SQL surface registered. */
+  /** Local session (UI off) with the engine's SQL surface registered.
+    * A second call returns the same session; registration is idempotent.
+    */
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
-    val spark = builder(cores).master(s"local[$cores]").getOrCreate()
+    val spark = builder(cores).master(s"local[$cores]")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
     GraftExtensions.register(spark)
     spark
   }
+
+  /** Cores for the mains sized by `SPARK_GRAFT_CPUS` (default: all of them). */
+  def envCores: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(Runtime.getRuntime.availableProcessors())
 }

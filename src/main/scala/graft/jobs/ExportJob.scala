@@ -17,8 +17,8 @@ import org.apache.spark.sql.types.LongType
   * `manifest.json` with per-shard doc/token counts — the file a training
   * launcher reads to plan its data loader.
   *
-  * Publish discipline (the house two-phase commit, as in [[CompactionJob]]
-  * / `DedupIndexJob` / `SignalV2Sink`): everything lands in
+  * Publish discipline (the house two-phase commit, as in
+  * `DedupIndexJob` / `SignalV2Sink`): everything lands in
   * `outDir/_tmp-<epoch>`, and a single atomic rename publishes it as
   * `outDir/vN` with a `LATEST` pointer written last. Readers either see a
   * complete versioned snapshot or the previous one — never a torn export.

@@ -67,9 +67,7 @@ private[graft] object LifecycleFuzz {
   def main(args: Array[String]): Unit = {
     val seed = args.lift(0).map(_.toLong).getOrElse(new java.util.Random().nextLong())
     val trials = args.lift(1).map(_.toInt).getOrElse(8)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
     try {
       val t0 = System.nanoTime()

@@ -2,7 +2,6 @@ package graft.tools
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Head-to-head timing of the pushed-aggregate reader's two paths on a
@@ -22,9 +21,7 @@ object AggPathProbe {
     val rowsPerShard = args.lift(1).map(_.toInt).getOrElse(2000000)
     val tokensPerShard = args.lift(2).map(_.toInt).getOrElse(100000)
 
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
 
     val dir = Files.createTempDirectory("graft-aggprobe").toFile

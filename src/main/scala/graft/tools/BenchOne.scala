@@ -1,10 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Single-entry bench adjudicator: times the named entries in isolation
-  * under the EXACT `graft.Bench` session posture (local[N], AQE, 32
-  * shuffle partitions, warmed session), N iterations with a
+  * on `graft.Bench`'s session (`GraftSession.local` at `SPARK_GRAFT_CPUS`
+  * cores, warmed the same way), N iterations with a
   * module-fresh cache per iteration, reporting wall + process-CPU per
   * run plus the min/median. This is the "profile it once on a provably
   * idle host" tool for adjudicating entries the driver's contended runs
@@ -13,23 +11,14 @@ import org.apache.spark.sql.SparkSession
   * another, and the difference must be attributed to the host or the
   * plan, not guessed.
   *
-  * Usage: runMain graft.tools.BenchOne [name[,name...]] [iters]
+  * Usage: [SPARK_GRAFT_SF_DIR=<sfDir>] runMain graft.tools.BenchOne [name[,name...]] [iters]
   */
 object BenchOne {
   def main(args: Array[String]): Unit = {
     val names = args.headOption.getOrElse("q121_bloom_filter").split(",").toSet
     val iters = args.lift(1).map(_.toInt).getOrElse(6)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.hadoop.fs.file.impl", classOf[graft.sources.NioLocalFileSystem].getName)
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.sources.NioLocalFs].getName)
-      .getOrCreate()
+    val spark = graft.GraftSession.local(graft.GraftSession.envCores)
     spark.sparkContext.setLogLevel("WARN")
     spark.read.parquet(s"$sfDir/region.parquet").count()
     val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean

@@ -2,7 +2,7 @@ package graft.tools
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -29,9 +29,7 @@ object BloomProbe {
     val ratePm = args.lift(2).map(_.toInt).getOrElse(50) // ‰ of tokens reporting per epoch
     val lookups = args.lift(3).map(_.toInt).getOrElse(8)
 
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
 
     val schema = StructType(Seq(

@@ -2,7 +2,6 @@ package graft.tools
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Generic scaling probe: clone the sf0.1 tables N× in a chosen direction
@@ -20,7 +19,7 @@ import org.apache.spark.sql.functions._
   *   - `ratio`: `keys` cloning, but each query is ALSO timed on the
   *     unscaled sf0.1 baseline (min of 2 runs each) and the t(N×)/t(1×)
   *     ratio is printed — the per-entry scale-curve evidence (r6 verdict
-  *     Next #7). On fixed local[32] cores, linear work ⇒ ratio ≈ N; an
+  *     Next #7). On a fixed core count, linear work ⇒ ratio ≈ N; an
   *     entry is flagged when ratio > 3N (super-linear blow-up).
   *
   * Usage: runMain graft.tools.CloneProbe <keys|dense|ratio> <mult> q140,q157,...
@@ -33,10 +32,7 @@ object CloneProbe {
     val wanted = args.lift(2).map(_.split(",").toSeq).getOrElse(Seq("q171", "q172", "q173", "q175", "q176"))
     val shiftKeys = direction != "dense"
 
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
 
     val base = "/root/testdata/sf0.1"

@@ -2,7 +2,6 @@ package graft.tools
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measures the r8 newline-count path for pushed global `count(*)` against
@@ -19,9 +18,7 @@ object CountPathProbe {
     val nShards = args.lift(1).map(_.toInt).getOrElse(8)
     val reps = args.lift(2).map(_.toInt).getOrElse(3)
 
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
 
     val dir = Files.createTempDirectory("graft-cntprobe").toFile

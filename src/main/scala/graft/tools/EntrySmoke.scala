@@ -1,17 +1,11 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Replicates the driver's round-start smoke check: SparkEntry.entry must
   * return >0 rows on sf0.001. Run: `sbt "runMain graft.tools.EntrySmoke"`.
   */
 object EntrySmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     val df = graft.SparkEntry.entry(spark)
     val n = df.count()

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan audit over EVERY declared query in one session: writes each
   * query's `explain("formatted")` to `<outDir>/<name>.txt` and prints a
   * one-line summary (parquet scans, exchanges, sort-merge vs broadcast
@@ -17,14 +15,7 @@ object ExplainAll {
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.01")
     val only = args.lift(2)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.hadoop.fs.file.impl", classOf[graft.sources.NioLocalFileSystem].getName)
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.sources.NioLocalFs].getName)
-      .getOrCreate()
+    val spark = graft.GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
     for (q <- graft.SparkEntry.allDefs if only.forall(q.name.startsWith)) {
       spark.catalog.clearCache()

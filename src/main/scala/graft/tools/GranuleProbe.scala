@@ -3,7 +3,7 @@ package graft.tools
 import java.io.File
 import java.nio.file.Files
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -36,9 +36,7 @@ object GranuleProbe {
     val gens = args.lift(1).map(_.toInt).getOrElse(20)
     val lookups = args.lift(2).map(_.toInt).getOrElse(16)
 
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
 
     val schema = StructType(Seq(

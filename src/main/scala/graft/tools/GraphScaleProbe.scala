@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Round-6 probe (r5 verdict Next #5): measure the q140/q141 graph tier's
@@ -21,10 +21,7 @@ import org.apache.spark.sql.functions._
 object GraphScaleProbe {
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
     val emb = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet")
       .select(col("vec_id"), col("embedding"), col("label")).cache()

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measures the LIVE wire tier's throughput against a loopback stub: N
@@ -19,9 +18,7 @@ object LiveProbe {
     val nSubjects = args.lift(1).map(_.toInt).getOrElse(2000)
     val batch = args.lift(2).map(_.toInt).getOrElse(1000)
 
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
 
     println(s"[liveprobe] corpus: $nDocs docs x $nSubjects subjects, page=$batch")

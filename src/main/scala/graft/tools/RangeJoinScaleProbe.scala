@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scaling probe for the bounded-range join family: native merge exec
@@ -22,10 +22,7 @@ import org.apache.spark.sql.functions._
 object RangeJoinScaleProbe {
   def main(args: Array[String]): Unit = {
     val mults = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(1, 4, 10)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
 
     val base = graft.queries.Tables.load(spark, "/root/testdata/sf0.1", "events")

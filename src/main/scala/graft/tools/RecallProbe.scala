@@ -1,10 +1,8 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 object RecallProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions","8").config("spark.ui.enabled","false").getOrCreate()
+    val spark = graft.GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
     import graft.operators.Similarity
     for (sf <- Seq("0.001", "0.01")) {

@@ -2,7 +2,6 @@ package graft.tools
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measures the r8 group-sequential pushed-agg path over a SORTED layout
@@ -21,9 +20,7 @@ object SortedAggProbe {
     val reps = args.lift(2).map(_.toInt).getOrElse(3)
     val nShards = 8
 
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
 
     // token-ascending rows: the layout the graft-sharded writer produces

@@ -2,7 +2,6 @@ package graft.tools
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measures what within-shard byte-range splitting buys on the hot-shard
@@ -25,9 +24,7 @@ object SplitScanProbe {
     val nSmall = args.lift(2).map(_.toInt).getOrElse(7)
     val splitMB = args.lift(3).map(_.toInt).getOrElse(8)
 
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
 
     val dir = Files.createTempDirectory("graft-splitprobe").toFile

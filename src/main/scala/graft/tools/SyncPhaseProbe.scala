@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
@@ -12,17 +11,8 @@ import org.apache.spark.sql.types.LongType
 object SyncPhaseProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val iters = args.lift(0).map(_.toInt).getOrElse(2)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.hadoop.fs.file.impl", classOf[graft.sources.NioLocalFileSystem].getName)
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.sources.NioLocalFs].getName)
-      .getOrCreate()
+    val spark = graft.GraftSession.local(graft.GraftSession.envCores)
     spark.sparkContext.setLogLevel("WARN")
     spark.read.parquet(s"$sfDir/region.parquet").count()
     val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean

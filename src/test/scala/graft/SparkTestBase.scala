@@ -26,17 +26,7 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSessionHolder {
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    // the bench/verify sessions run on the fork-free local FS (r18); the
-    // whole spec suite runs through it too so any behavior drift from the
-    // stock LocalFileSystem fails loudly here
-    .config("spark.hadoop.fs.file.impl", classOf[graft.sources.NioLocalFileSystem].getName)
-    .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.sources.NioLocalFs].getName)
-    .getOrCreate()
+  /** The suite's fixed core count (and shuffle partitions). */
+  val Cores = 4
+  lazy val spark: SparkSession = GraftSession.local(Cores)
 }
