@@ -78,25 +78,15 @@ object SyncJob {
     }
     val defs = SignalDefinitions.resolve(opts.signalNames)
 
-    // Token scope: explicit list, else DISTINCT from the sink (sync.go:61,211-234).
-    val explicitTokens = SyncOps.parseTokenList(opts.tokens)
-    val scopedDim =
-      if (explicitTokens.nonEmpty) dim.where(col("tokenId").isin(explicitTokens: _*))
-      else
-        existingSink match {
-          case Some(sink) => dim.join(SyncOps.tokensFromSink(sink), Seq("tokenId"), "left_semi")
-          case None       => dim.limit(0) // no tokens, no sink ⇒ nothing to sync
-        }
+    val scopedDim = scopeDim(dim, existingSink, opts)
 
     val bounded = docs.where(SyncOps.timeBound(col("time"), start, stop))
 
     // Per-token incremental resume: drop rows at/after the sink watermark.
-    val wmNames =
-      if (opts.signalNames.isEmpty) Nil else defs.map(_.vssName)
     val scoped = existingSink match {
       case Some(sink) =>
         SyncOps.applyWatermarks(bounded, scopedDim,
-          precomputedWatermarks.getOrElse(SyncOps.watermarks(sink, wmNames)))
+          precomputedWatermarks.getOrElse(SyncOps.watermarks(sink, watermarkNames(opts))))
       case None =>
         bounded.join(broadcast(scopedDim.select("tokenId", "subject")), Seq("subject"), "inner")
     }
@@ -106,15 +96,6 @@ object SyncJob {
       .select("tokenId", "timestamp", "name", "valueNumber", "valueString", "source")
   }
 
-  /** [[run]] plus an [[org.apache.spark.sql.Observation]] carrying the
-    * batch conversion stats the reference logs per page (`sync.go:97-107`:
-    * rows synced, tokens touched, time bounds): `signal_rows`,
-    * `distinct_tokens` (approx — observe() aggregates must be
-    * merge-friendly), `min_ts`/`max_ts`. The stats ride the SAME job as
-    * the data (one pass, zero extra actions) and become available after
-    * the caller's first action; pipe them into
-    * [[GraftMetricsListener.inc]] for the scrape-able surface.
-    */
   /** [[run]] with the documents read LIVE, so the incremental resume
     * pushes INTO the `_search` request bodies: the token census becomes
     * the pushed subject IN-set (one page loop per subject, grouped into
@@ -171,13 +152,7 @@ object SyncJob {
       hotSubjectPages: Int = 8
   ): DataFrame = {
     val explicitTokens = SyncOps.parseTokenList(opts.tokens)
-    val scopedDim =
-      if (explicitTokens.nonEmpty) dim.where(col("tokenId").isin(explicitTokens: _*))
-      else
-        existingSink match {
-          case Some(sink) => dim.join(SyncOps.tokensFromSink(sink), Seq("tokenId"), "left_semi")
-          case None       => dim.limit(0)
-        }
+    val scopedDim = scopeDim(dim, existingSink, opts)
     val subjectsDf = scopedDim.select("subject").distinct()
     // mode probe WITHOUT a fleet-sized collect: fetch at most threshold+1
     // subjects — enough to decide, and already the full census when small.
@@ -190,23 +165,13 @@ object SyncJob {
       else subjectsDf.limit(pathModeThreshold + 1).collect().map(_.getString(0)).toSeq
     val pathMode =
       explicitTokens.length > pathModeThreshold || probe.length > pathModeThreshold
-    val wmNames =
-      if (opts.signalNames.isEmpty) Nil
-      else SignalDefinitions.resolve(opts.signalNames).map(_.vssName)
     // ONE watermark aggregate per round, shared by the wire-window staging
     // AND run()'s exact `< watermark` join (r18, guide §2.4): the lazy
     // localCheckpoint materializes at the staging write's action and the
     // append's plan reuses the tiny per-token table instead of re-scanning
     // the whole sink a second time.
     val wmShared: Option[DataFrame] =
-      existingSink.map(sk => SyncOps.watermarks(sk, wmNames).localCheckpoint(false))
-    // LEFT from the scoped dim so a never-synced token SURVIVES the join
-    // with a null watermark — the per-subject stop aggregation must SEE
-    // it to withhold the subject's stop line (a stop derived from a
-    // synced sibling alone would silently drop the sinkless token's
-    // rows at/after it)
-    def watermarksDf = scopedDim.select("tokenId", "subject")
-      .join(wmShared.get, Seq("tokenId"), "left_outer")
+      existingSink.map(sk => SyncOps.watermarks(sk, watermarkNames(opts)).localCheckpoint(false))
     var reader = spark.read.format("graft-status-live")
       .option("url", url).option("index", index).option("batchSize", batchSize.toString)
       .option("slices", slices.toString)
@@ -255,22 +220,8 @@ object SyncJob {
           censusInFlight = Some(censusStaged)
           if (existingSink.isDefined) {
             // watermark map as subject<TAB>ceil-millis lines, computed and
-            // written by the CLUSTER (the exclusive per-token stop,
-            // sync.go:96-100 [ext]; ceil absorbs the micro→milli gap, the
-            // plan's exact `< watermark` filter stays micro-precise).
-            // MAX per subject, and ONLY for subjects whose EVERY token
-            // has a watermark: a dim mapping several tokenIds to one
-            // subject must stage ONE stop line, the backfill's
-            // `time < watermark` fetch needs the union of every token's
-            // window (overshipped overlap is clipped by run()'s
-            // per-token watermark join; undershipping must not happen),
-            // and a never-synced alias needs the FULL window — a stop
-            // derived from its sibling would silently drop its rows
-            val f = stageText(watermarksDf
-              .groupBy(col("subject"))
-              .agg(max(expr("(unix_micros(watermark) + 999) DIV 1000")).as("ms"),
-                sum(when(col("watermark").isNull, 1).otherwise(0)).as("missing"))
-              .where(col("missing") === 0)
+            // written by the CLUSTER
+            val f = stageText(subjectStops(scopedDim, wmShared.get)
               .select(concat_ws("\t", col("subject"), col("ms")).as("value")),
               "graft-stops")
             reader = reader.option("stopBySubjectPath", f)
@@ -280,17 +231,7 @@ object SyncJob {
           reader.option("subjectsPath", censusStaged.join()).load()
         } else {
           if (existingSink.isDefined) {
-            // max per subject for the same reason the staged form
-            // aggregates — and only when every token has a watermark: a
-            // multi-token subject's backfill window is the union of its
-            // tokens' `< watermark` needs (a plain toMap would keep an
-            // arbitrary token's and undership), and a sinkless alias
-            // needs the full window (no stop at all)
-            val stops: Map[String, Long] = watermarksDf
-              .groupBy(col("subject"))
-              .agg(max(expr("(unix_micros(watermark) + 999) DIV 1000")).as("ms"),
-                sum(when(col("watermark").isNull, 1).otherwise(0)).as("missing"))
-              .where(col("missing") === 0)
+            val stops: Map[String, Long] = subjectStops(scopedDim, wmShared.get)
               .select("subject", "ms").collect()
               .map(r => r.getString(0) -> r.getLong(1)).toMap
             if (stops.nonEmpty)
@@ -306,6 +247,50 @@ object SyncJob {
     val docs = base.select(col("subject"), col("source"), col("time"), col("data"))
     run(docs, dim, existingSink, opts, wmShared)
   }
+
+  /** Token scope: the explicit token list, else the sink's DISTINCT
+    * tokens (sync.go:61,211-234); no tokens and no sink ⇒ nothing to sync.
+    */
+  private def scopeDim(dim: DataFrame, existingSink: Option[DataFrame],
+      opts: SyncOptions): DataFrame = {
+    val explicitTokens = SyncOps.parseTokenList(opts.tokens)
+    if (explicitTokens.nonEmpty) dim.where(col("tokenId").isin(explicitTokens: _*))
+    else
+      existingSink match {
+        case Some(sink) => dim.join(SyncOps.tokensFromSink(sink), Seq("tokenId"), "left_semi")
+        case None       => dim.limit(0)
+      }
+  }
+
+  /** The signals a token's watermark is taken over: all of them when the
+    * sync is unfiltered, else the filter's VSS names.
+    */
+  private def watermarkNames(opts: SyncOptions): Seq[String] =
+    if (opts.signalNames.isEmpty) Nil
+    else SignalDefinitions.resolve(opts.signalNames).map(_.vssName)
+
+  /** Each subject's wire stop as `(subject, ms)`: the ceil-millis of its
+    * tokens' watermarks (`wm`: tokenId, watermark), the exclusive
+    * per-token stop of sync.go:96-100 [ext]. Ceil absorbs the micro→milli
+    * gap; [[run]]'s exact `< watermark` filter stays micro-precise.
+    *
+    * MAX per subject, and ONLY for subjects whose EVERY token has a
+    * watermark: a dim mapping several tokenIds to one subject must get
+    * ONE stop, the backfill's `time < watermark` fetch needs the union of
+    * every token's window (overshipped overlap is clipped by [[run]]'s
+    * per-token watermark join; undershipping must not happen), and a
+    * never-synced alias needs the FULL window — a stop derived from its
+    * sibling would silently drop its rows. So the join is LEFT from the
+    * scoped dim: a never-synced token survives with a null watermark and
+    * withholds its subject's stop.
+    */
+  private def subjectStops(scopedDim: DataFrame, wm: DataFrame): DataFrame =
+    scopedDim.select("tokenId", "subject")
+      .join(wm, Seq("tokenId"), "left_outer")
+      .groupBy(col("subject"))
+      .agg(max(expr("(unix_micros(watermark) + 999) DIV 1000")).as("ms"),
+        sum(when(col("watermark").isNull, 1).otherwise(0)).as("missing"))
+      .where(col("missing") === 0)
 
   /** Token count above which [[runLive]] stages the census and watermark
     * map to planner-read files instead of inline options/expressions.
@@ -416,17 +401,8 @@ object SyncJob {
       hotMinRows: Long = -1L,
       weightBySinkDepth: Boolean = false
   ): DataFrame = {
-    val explicitTokens = SyncOps.parseTokenList(opts.tokens)
-    val scopedDim =
-      if (explicitTokens.nonEmpty) dim.where(col("tokenId").isin(explicitTokens: _*))
-      else
-        existingSink match {
-          case Some(sink) => dim.join(SyncOps.tokensFromSink(sink), Seq("tokenId"), "left_semi")
-          case None       => dim.limit(0)
-        }
-    val wmNames =
-      if (opts.signalNames.isEmpty) Nil
-      else SignalDefinitions.resolve(opts.signalNames).map(_.vssName)
+    val scopedDim = scopeDim(dim, existingSink, opts)
+    val wmNames = watermarkNames(opts)
     // cluster-staged, caller-owned: a single-partition sorted text write
     // per file (the strictly-sorted form the ranged planner verifies),
     // left in place for the tasks to slice
@@ -442,19 +418,9 @@ object SyncJob {
     // census stages distinct subjects, so a dim mapping several tokenIds
     // to one subject (aliases, re-registrations) must stage ONE line per
     // subject here too — per-token lines would duplicate the subject and
-    // the planner's strict-sorted require would fail the sync. The
-    // backfill fetches `time < watermark` (the token's OLDEST synced
-    // signal), so the subject's wire stop is the MAX over its tokens —
-    // the union of every token's need: the token with the newer
-    // watermark must not be undershipped, and the overlap the other
-    // token re-receives is clipped exactly by [[run]]'s per-token
-    // watermark join. A subject gets a stop line ONLY when EVERY one of
-    // its tokens has a watermark (LEFT join from the scoped dim + null
-    // guard): a never-synced alias must fetch the FULL window — a stop
-    // derived from its sibling's watermark would silently drop every
-    // doc at/after it for the sinkless token, rows nothing downstream
-    // can recover. Weights SUM (the subject's total sink depth is what
-    // its tile drains; a sinkless sibling just contributes 0 —
+    // the planner's strict-sorted require would fail the sync. Stops
+    // are [[subjectStops]]; weights SUM (the subject's total sink depth
+    // is what its tile drains; a sinkless sibling just contributes 0 —
     // balance-only).
     // ONE aggregate pass over the sink feeds every consumer this method
     // has (r18, guide §2.4/§1.2): per-token watermark (the stops file +
@@ -488,12 +454,7 @@ object SyncJob {
         .localCheckpoint(fanOutConsumers)
     }
     val wmShared = perToken.map(_.select("tokenId", "watermark"))
-    def stageStops(): String = stageTo(scopedDim.select("tokenId", "subject")
-      .join(wmShared.get, Seq("tokenId"), "left_outer")
-      .groupBy(col("subject"))
-      .agg(max(expr("(unix_micros(watermark) + 999) DIV 1000")).as("ms"),
-        sum(when(col("watermark").isNull, 1).otherwise(0)).as("missing"))
-      .where(col("missing") === 0)
+    def stageStops(): String = stageTo(subjectStops(scopedDim, wmShared.get)
       .select(concat_ws("\t", col("subject"), col("ms")).as("value")), "stops")
     // per-token sink depth as subject<TAB>rows, computed and sorted BY
     // THE CLUSTER like the stops file — the driver never holds a
@@ -560,6 +521,15 @@ object SyncJob {
     run(docs, dim, existingSink, opts, wmShared)
   }
 
+  /** [[run]] plus an [[org.apache.spark.sql.Observation]] carrying the
+    * batch conversion stats the reference logs per page (`sync.go:97-107`:
+    * rows synced, tokens touched, time bounds): `signal_rows`,
+    * `distinct_tokens` (approx — observe() aggregates must be
+    * merge-friendly), `min_ts`/`max_ts`. The stats ride the SAME job as
+    * the data (one pass, zero extra actions) and become available after
+    * the caller's first action; pipe them into
+    * [[GraftMetricsListener.inc]] for the scrape-able surface.
+    */
   def runObserved(
       docs: DataFrame,
       dim: DataFrame,

@@ -2,8 +2,10 @@ package graft.queries
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.{ConcurrentLinkedQueue, Executor, Executors}
+import java.util.concurrent.atomic.AtomicLong
 
-import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
+import com.sun.net.httpserver.{HttpContext, HttpExchange, HttpHandler, HttpServer}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -43,10 +45,12 @@ object LiveQueries {
     * (`_source.includes`), or None when the doc carries NONE of the
     * requested signals (the `exists` + `minimum_should_match: 1` clauses
     * drop it server-side). Both precomputed at seed time so the stub
-    * stays a lookup, not a per-request JSON walk.
+    * stays a lookup, not a per-request JSON walk. A `sourceless` doc's
+    * hit carries no `_source` at all (stored-fields/_source-disabled
+    * responses): it occupies a page slot but can never be decoded.
     */
   private[graft] final case class StubDoc(id: String, subject: String, timeUs: Long,
-      json: String, signalJson: Option[String] = None)
+      json: String, signalJson: Option[String] = None, sourceless: Boolean = false)
 
   /** Parallel, order-preserving stub seeding (r19, guide §2.6 on the
     * driver): builds each doc ONCE at its position in the full corpus.
@@ -66,52 +70,134 @@ object LiveQueries {
     rows.zipWithIndex.par.map { case (r, i) => f(r, offset + i) }.seq.toIndexedSeq
   }
 
-  /** Minimal `_search` stub over a fixed corpus. Honors the pushed
-    * filters + size + desc sort, and — when the request carries the
-    * reference's signal-filter clauses — the `exists`/`minimum_should_
-    * match` row filter and the `_source.includes` projection.
-    * `requireSignalClauses` makes the stub REJECT (400) any search
-    * missing them: the gate row then fails loudly if the projection
-    * pushdown ever regresses to full `_source`. Daemon-pooled executor;
-    * the caller stops it.
+  /** One seeded CloudEvents status document, the `_source` of every stub
+    * corpus: `version` is the `dimo.zone.status` dataschema version and
+    * `data` the payload object's JSON. `timeUs` renders as RFC 3339.
     */
-  private[graft] def startStub(docs: IndexedSeq[StubDoc],
+  private[graft] def statusJson(id: String, subject: String, timeUs: Long,
+      version: String, data: String): String = {
+    val iso = java.time.Instant.ofEpochSecond(timeUs / 1000000L, (timeUs % 1000000L) * 1000L)
+    s"""{"id":"$id","subject":"$subject","source":"dimo/integration/live",""" +
+      s""""specversion":"1.0","time":"$iso","dataschema":"dimo.zone.status/$version",""" +
+      s""""type":"com.dimo.device.status","data":$data}"""
+  }
+
+  /** How a [[startStub]] server behaves. The defaults are a plain ES 7
+    * cluster: no page cap, no point-in-time API, and the `time_cuts`
+    * percentiles aggregation served on `_search` and `_msearch`.
+    *
+    * @param requireSignalClauses REJECT (400) any search missing the
+    *   reference's signal-filter clauses: a gate row then fails loudly if
+    *   the projection pushdown ever regresses to full `_source`
+    * @param sizeCap largest servable page. A larger one trips the circuit
+    *   breaker (500 "Data too large", the reference's halving trigger,
+    *   sync.go:163-178)
+    * @param windowError refuse an over-cap page the way a real ES's
+    *   `index.max_result_window` does instead (400 "Result window is too
+    *   large"): the loop must treat both as "this size is unservable"
+    * @param pitMode the ES 8 posture: `POST {index}/_pit` issues
+    *   point-in-time ids and an `_id`-sort request is REJECTED (no
+    *   fielddata on `_id`). Without it `_pit` is 404 and the `_id`-asc
+    *   drain is served (the pre-PIT fallback)
+    * @param pitTransientFailures the first N `_pit` opens answer 503
+    * @param timeCutsMode serve the `time_cuts` percentiles probe. Without
+    *   it the agg-less response makes the client keep the single loop
+    * @param msearchMode serve `_msearch` (with `timeCutsMode` only).
+    *   Without it a 404 sends the client to per-request probes, like an
+    *   older ES or a strict proxy
+    */
+  private[graft] final case class StubModes(
       requireSignalClauses: Boolean = false,
-      served: java.util.concurrent.atomic.AtomicLong =
-        new java.util.concurrent.atomic.AtomicLong,
       sizeCap: Int = Int.MaxValue,
+      windowError: Boolean = false,
       pitMode: Boolean = false,
-      sliceSeen: java.util.concurrent.ConcurrentLinkedQueue[Int] =
-        new java.util.concurrent.ConcurrentLinkedQueue[Int](),
-      pitOpened: java.util.concurrent.atomic.AtomicLong =
-        new java.util.concurrent.atomic.AtomicLong,
       pitTransientFailures: Int = 0,
-      slicedSubjects: java.util.concurrent.ConcurrentLinkedQueue[String] =
-        new java.util.concurrent.ConcurrentLinkedQueue[String](),
-      servedSliced: java.util.concurrent.atomic.AtomicLong =
-        new java.util.concurrent.atomic.AtomicLong,
-      pitClosedIds: java.util.concurrent.ConcurrentLinkedQueue[String] =
-        new java.util.concurrent.ConcurrentLinkedQueue[String](),
-      servedSlicedAtFirstClose: java.util.concurrent.atomic.AtomicLong =
-        new java.util.concurrent.atomic.AtomicLong(-1),
       timeCutsMode: Boolean = true,
-      msearchMode: Boolean = true,
-      msearchRequests: java.util.concurrent.atomic.AtomicLong =
-        new java.util.concurrent.atomic.AtomicLong): HttpServer = {
+      msearchMode: Boolean = true)
+
+  /** What a [[startStub]] server records for its caller to assert on.
+    *
+    * @param served hits served by page requests
+    * @param sliceSeen the slice id of every sliced-PIT request
+    * @param pitOpened point-in-time ids issued
+    * @param slicedSubjects the subject of every sliced request carrying one
+    * @param servedSliced hits served by sliced requests alone: a hot
+    *   subject's exactly-once-across-slices pin needs this tally (cold
+    *   loops legitimately re-serve page-boundary docs)
+    * @param pitClosedIds the ids the client released
+    * @param servedSlicedAtFirstClose `servedSliced` when the first id was
+    *   released (-1 until then): a release firing before the last slice
+    *   request shows as a short tally
+    * @param msearchRequests `_msearch` requests served
+    * @param requests when set, the body of every `_search` request
+    */
+  private[graft] final case class StubCounters(
+      served: AtomicLong = new AtomicLong,
+      sliceSeen: ConcurrentLinkedQueue[Int] = new ConcurrentLinkedQueue[Int](),
+      pitOpened: AtomicLong = new AtomicLong,
+      slicedSubjects: ConcurrentLinkedQueue[String] = new ConcurrentLinkedQueue[String](),
+      servedSliced: AtomicLong = new AtomicLong,
+      pitClosedIds: ConcurrentLinkedQueue[String] = new ConcurrentLinkedQueue[String](),
+      servedSlicedAtFirstClose: AtomicLong = new AtomicLong(-1),
+      msearchRequests: AtomicLong = new AtomicLong,
+      requests: Option[ConcurrentLinkedQueue[String]] = None)
+
+  /** Sends `body` with status `code` (no body when empty) and closes. */
+  private def respond(ex: HttpExchange, code: Int, body: String): Unit = {
+    val bytes = body.getBytes(StandardCharsets.UTF_8)
+    ex.sendResponseHeaders(code, if (bytes.isEmpty) -1 else bytes.length)
+    if (bytes.nonEmpty) ex.getResponseBody.write(bytes)
+    ex.close()
+  }
+
+  /** A started [[loopbackServer]] whose `/` handler runs on a pool of 32
+    * daemon threads named `name`. The JDK server never shuts down an
+    * executor it was given, so the returned server's `stop` releases the
+    * pool too: a stopped stub leaves no thread behind.
+    */
+  private def pooledServer(name: String, handler: HttpHandler): HttpServer = {
+    val pool = Executors.newFixedThreadPool(32, (r: Runnable) => {
+      val t = new Thread(r, name); t.setDaemon(true); t
+    })
+    val inner = loopbackServer(1024)
+    inner.setExecutor(pool)
+    inner.createContext("/", handler)
+    inner.start()
+    new HttpServer {
+      override def bind(addr: InetSocketAddress, backlog: Int): Unit = inner.bind(addr, backlog)
+      override def start(): Unit = inner.start()
+      override def setExecutor(e: Executor): Unit = inner.setExecutor(e)
+      override def getExecutor: Executor = inner.getExecutor
+      override def stop(delay: Int): Unit = try inner.stop(delay) finally pool.shutdown()
+      override def createContext(path: String, h: HttpHandler): HttpContext =
+        inner.createContext(path, h)
+      override def createContext(path: String): HttpContext = inner.createContext(path)
+      override def removeContext(path: String): Unit = inner.removeContext(path)
+      override def removeContext(ctx: HttpContext): Unit = inner.removeContext(ctx)
+      override def getAddress: InetSocketAddress = inner.getAddress
+    }
+  }
+
+  /** The fixed-corpus `_search` double every gate row, spec and probe
+    * reads through. Honors the pushed filters + size + desc sort, both
+    * drain grammars (`_id`-asc `search_after`, and `_shard_doc` under a
+    * PIT with the parallel `slice` form), the planner's probes (`_stats`,
+    * `time_cuts`, `max_time`, `group_counts`, size-0 totals) and — when
+    * the request carries the reference's signal-filter clauses — the
+    * `exists`/`minimum_should_match` row filter and the
+    * `_source.includes` projection. `modes` shapes the cluster and
+    * `counters` records what it served. The caller stops it.
+    */
+  private[graft] def startStub(docs: IndexedSeq[StubDoc], modes: StubModes = StubModes(),
+      counters: StubCounters = StubCounters()): HttpServer = {
+    import counters._
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val pitSeq = new java.util.concurrent.atomic.AtomicLong()
+    val pitSeq = new AtomicLong()
     // ids actually ISSUED: a search under an unknown PIT id is a 400,
     // like a real ES ("No search context found") — pins that every slice
     // rides the DRIVER's shared snapshot, not a homemade id
     val issuedPits = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    val pitFails = new java.util.concurrent.atomic.AtomicInteger(pitTransientFailures)
-    val server = loopbackServer(1024)
-    val tf = new java.util.concurrent.ThreadFactory {
-      override def newThread(r: Runnable): Thread = {
-        val t = new Thread(r, "live-es-stub"); t.setDaemon(true); t
-      }
-    }
-    server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(32, tf))
+    val pitFails = new java.util.concurrent.atomic.AtomicInteger(modes.pitTransientFailures)
     // the stub's own inverted index: docs pre-bucketed by subject and
     // pre-sorted newest-first, so a per-subject page request costs its
     // bucket, not a corpus scan (a real ES does at least this well)
@@ -123,69 +209,51 @@ object LiveQueries {
     lazy val bySubjectId: Map[String, IndexedSeq[StubDoc]] =
       docs.groupBy(_.subject).view.mapValues(_.sortBy(_.id)).toMap
     lazy val allById = docs.sortBy(_.id)
-    server.createContext("/", new HttpHandler {
+    pooledServer("live-es-stub", new HttpHandler {
       override def handle(ex: HttpExchange): Unit = {
-        if (ex.getRequestURI.getPath.contains("/_stats")) {
+        ex.getResponseHeaders.add("Content-Type", "application/json")
+        val path = ex.getRequestURI.getPath
+        if (path.contains("/_stats")) {
           // the sizing probe (GET {index}/_stats/docs,store): primaries
           // doc count + stored bytes — deterministic from the corpus, and
           // carrying ZERO hits (the served counter must not move)
           val bytes0 = docs.iterator.map(_.json.length.toLong).sum
-          val res = s"""{"_all":{"primaries":{"docs":{"count":${docs.length}},""" +
-            s""""store":{"size_in_bytes":$bytes0}}}}"""
-          val bytes = res.getBytes(StandardCharsets.UTF_8)
-          ex.sendResponseHeaders(200, bytes.length)
-          ex.getResponseBody.write(bytes)
-          ex.close()
+          respond(ex, 200, s"""{"_all":{"primaries":{"docs":{"count":${docs.length}},""" +
+            s""""store":{"size_in_bytes":$bytes0}}}}""")
           return
         }
-        if (ex.getRequestURI.getPath.endsWith("/_pit") ||
-          ex.getRequestURI.getPath == "/_pit") {
+        if (path.endsWith("/_pit")) {
           // point-in-time lifecycle: offered only in pitMode (the ES 8
           // posture); a 404 makes the client fall back to the `_id` drain
           val pitBody = ex.getRequestBody.readAllBytes()
-          if ("POST" == ex.getRequestMethod && pitMode) {
+          if ("POST" == ex.getRequestMethod && modes.pitMode) {
             if (pitFails.getAndDecrement() > 0) {
               // an injected transient blip: the client must RETRY (and
               // surface a task/planning failure if retries exhaust) —
               // never silently conclude "no PIT support"
-              val b = """{"error":"stub transient overload"}"""
-                .getBytes(StandardCharsets.UTF_8)
-              ex.sendResponseHeaders(503, b.length)
-              ex.getResponseBody.write(b)
-              ex.close()
+              respond(ex, 503, """{"error":"stub transient overload"}""")
               return
             }
             pitOpened.incrementAndGet()
             val id = s"pit-${pitSeq.incrementAndGet()}"
             issuedPits.add(id)
-            val b = s"""{"id":"$id"}""".getBytes(StandardCharsets.UTF_8)
-            ex.sendResponseHeaders(200, b.length)
-            ex.getResponseBody.write(b)
+            respond(ex, 200, s"""{"id":"$id"}""")
           } else if ("DELETE" == ex.getRequestMethod) {
             // the query-end release hook lands here: record WHICH id was
-            // closed and how many sliced docs had been served by then —
-            // a release firing before the last slice request would show
-            // as a short tally (and the 400-on-unknown-pit search guard
-            // above would fail any still-draining sibling loudly)
+            // closed and how many sliced docs had been served by then
             val closedId = mapper.readTree(pitBody).path("id").asText("")
             pitClosedIds.add(closedId)
             // a real ES frees the search context: any later search under
             // this id is a search_context_missing 400
             issuedPits.remove(closedId)
             servedSlicedAtFirstClose.compareAndSet(-1L, servedSliced.get())
-            val b = """{"succeeded":true}""".getBytes(StandardCharsets.UTF_8)
-            ex.sendResponseHeaders(200, b.length)
-            ex.getResponseBody.write(b)
-          } else ex.sendResponseHeaders(404, -1)
-          ex.close()
+            respond(ex, 200, """{"succeeded":true}""")
+          } else respond(ex, 404, "")
           return
         }
         // the PIT-less drain's cut probe: time percentiles of the
         // matching docs (nearest-rank — any estimate is valid, cuts
         // only place window boundaries); size-0, zero hits served.
-        // `timeCutsMode=false` drops to the generic handler, whose
-        // agg-less response makes the client keep the single loop —
-        // the graceful posture of a server without the aggregation.
         // Shared by the single `_search` form and each `_msearch` slot.
         def cutsAggResponse(req: com.fasterxml.jackson.databind.JsonNode): String = {
           var subj: Option[String] = None
@@ -217,58 +285,40 @@ object LiveQueries {
           s"""{"aggregations":{"time_cuts":{"values":[${vals.result().mkString(",")}]}},""" +
             s""""hits":{"hits":[]}}"""
         }
-        if (ex.getRequestURI.getPath.endsWith("/_msearch")) {
+        if (path.endsWith("/_msearch")) {
           // the batched cut probe: NDJSON header/body pairs in, a
-          // positionally-aligned `responses` array out — offered only
-          // when the server has the percentiles agg at all; without
-          // `_msearch` (msearchMode=false) a 404 sends the client to
-          // per-request probes, like an older ES or a strict proxy
-          if (!msearchMode || !timeCutsMode) {
-            ex.sendResponseHeaders(404, -1)
-            ex.close()
-            return
-          }
+          // positionally-aligned `responses` array out
+          if (!modes.msearchMode || !modes.timeCutsMode) { respond(ex, 404, ""); return }
           msearchRequests.incrementAndGet()
           val lines = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
             .split("\n").filter(_.nonEmpty)
-          val resp = lines.grouped(2).map { pair =>
+          respond(ex, 200, lines.grouped(2).map { pair =>
             val body = mapper.readTree(pair(1))
             if (body.path("aggs").has("time_cuts")) cutsAggResponse(body)
             else """{"error":{"type":"unsupported msearch body"}}"""
-          }.mkString("""{"responses":[""", ",", "]}")
-          val bytes = resp.getBytes(StandardCharsets.UTF_8)
-          ex.sendResponseHeaders(200, bytes.length)
-          ex.getResponseBody.write(bytes)
-          ex.close()
+          }.mkString("""{"responses":[""", ",", "]}"))
           return
         }
-        val req = mapper.readTree(ex.getRequestBody.readAllBytes())
-        if (req.path("aggs").has("time_cuts") && timeCutsMode) {
-          val bytes = cutsAggResponse(req).getBytes(StandardCharsets.UTF_8)
-          ex.sendResponseHeaders(200, bytes.length)
-          ex.getResponseBody.write(bytes)
-          ex.close()
+        val body = ex.getRequestBody.readAllBytes()
+        requests.foreach(_.add(new String(body, StandardCharsets.UTF_8)))
+        val req = mapper.readTree(body)
+        if (req.path("aggs").has("time_cuts") && modes.timeCutsMode) {
+          respond(ex, 200, cutsAggResponse(req))
           return
         }
         if (req.path("aggs").has("max_time")) {
           // the streaming tail's offset probe: size-0 max aggregation
           val v = if (docs.isEmpty) "null" else (docs.map(_.timeUs).max / 1000).toString
-          val res = s"""{"aggregations":{"max_time":{"value":$v}},"hits":{"hits":[]}}"""
-          val bytes = res.getBytes(StandardCharsets.UTF_8)
-          ex.sendResponseHeaders(200, bytes.length)
-          ex.getResponseBody.write(bytes)
-          ex.close()
+          respond(ex, 200, s"""{"aggregations":{"max_time":{"value":$v}},"hits":{"hits":[]}}""")
           return
         }
         val size = req.path("size").asInt(10)
-        if (size > sizeCap) {
-          // a capped cluster: an over-sized page trips the circuit breaker
-          // (the reference's halving trigger, sync.go:163-178)
-          val err = """{"error":"circuit_breaking_exception: Data too large"}"""
-          val bytes = err.getBytes(StandardCharsets.UTF_8)
-          ex.sendResponseHeaders(500, bytes.length)
-          ex.getResponseBody.write(bytes)
-          ex.close()
+        if (size > modes.sizeCap) {
+          if (modes.windowError)
+            respond(ex, 400, """{"error":{"type":"illegal_argument_exception","reason":""" +
+              s""""Result window is too large, from + size must be less than or equal to: """ +
+              s"""[${modes.sizeCap}]"}}""")
+          else respond(ex, 500, """{"error":"circuit_breaking_exception: Data too large"}""")
           return
         }
         var subject: Option[String] = None
@@ -292,35 +342,32 @@ object LiveQueries {
         val hasExists = req.path("query").path("bool").path("should").size() > 0 &&
           req.path("query").path("bool").path("minimum_should_match").asInt(0) >= 1
         val hasIncludes = req.path("_source").path("includes").size() > 0
-        if (requireSignalClauses && !(hasExists && hasIncludes)) {
+        if (modes.requireSignalClauses && !(hasExists && hasIncludes)) {
           // the assertion the gate row rides on: a request without the
           // reference's projection contract is refused outright
-          val err = """{"error":"stub requires _source.includes + exists + minimum_should_match"}"""
-          val bytes = err.getBytes(StandardCharsets.UTF_8)
-          ex.sendResponseHeaders(400, bytes.length)
-          ex.getResponseBody.write(bytes)
-          ex.close()
+          respond(ex, 400,
+            """{"error":"stub requires _source.includes + exists + minimum_should_match"}""")
           return
         }
         val signalMode = hasExists && hasIncludes
+        // a `sourceless` doc's hit carries no `_source` at all
+        // (stored-fields/_source-disabled responses)
+        def hitJson(d: StubDoc, sort: String): String =
+          if (d.sourceless) s"""{"_index":"device-status","_id":"${d.id}"$sort}"""
+          else {
+            val src = if (signalMode) d.signalJson.get else d.json
+            s"""{"_index":"device-status","_id":"${d.id}","_source":$src$sort}"""
+          }
         val pitReq = req.path("pit").path("id").isTextual
-        if (pitReq && !pitMode) {
-          val err = """{"error":"stub has no point-in-time support"}"""
-          val bytes = err.getBytes(StandardCharsets.UTF_8)
-          ex.sendResponseHeaders(400, bytes.length)
-          ex.getResponseBody.write(bytes)
-          ex.close()
+        if (pitReq && !modes.pitMode) {
+          respond(ex, 400, """{"error":"stub has no point-in-time support"}""")
           return
         }
-        if (idSort && pitMode) {
+        if (idSort && modes.pitMode) {
           // the real-ES 8 posture: sorting on _id needs fielddata — once
           // the server offers PITs, the client must drain on _shard_doc
-          val err = """{"error":{"type":"illegal_argument_exception","reason":""" +
-            """"Fielddata is disabled on [_id] in [device-status]"}}"""
-          val bytes = err.getBytes(StandardCharsets.UTF_8)
-          ex.sendResponseHeaders(400, bytes.length)
-          ex.getResponseBody.write(bytes)
-          ex.close()
+          respond(ex, 400, """{"error":{"type":"illegal_argument_exception","reason":""" +
+            """"Fielddata is disabled on [_id] in [device-status]"}}""")
           return
         }
         if (pitReq) {
@@ -330,12 +377,8 @@ object LiveQueries {
           // into disjoint subsets the way a real ES does server-side —
           // opaque to the client, modeled here as a hash of the doc id
           if (!issuedPits.contains(req.path("pit").path("id").asText(""))) {
-            val err = """{"error":{"type":"search_context_missing_exception",""" +
-              """"reason":"No search context found for id"}}"""
-            val bytes = err.getBytes(StandardCharsets.UTF_8)
-            ex.sendResponseHeaders(400, bytes.length)
-            ex.getResponseBody.write(bytes)
-            ex.close()
+            respond(ex, 400, """{"error":{"type":"search_context_missing_exception",""" +
+              """"reason":"No search context found for id"}}""")
             return
           }
           val after = Option(req.get("search_after")).filter(_.isArray)
@@ -365,20 +408,9 @@ object LiveQueries {
                 after.forall(i > _)
             }.take(size).toSeq
           served.addAndGet(picked.size.toLong)
-          // sliced-drain docs tracked separately: a hot subject's
-          // exactly-once-across-slices pin needs the sliced tally alone
-          // (cold loops legitimately re-serve page-boundary docs)
           if (sliceNode.isObject) servedSliced.addAndGet(picked.size.toLong)
-          val hits = picked.map { case (d, i) =>
-            val src = if (signalMode) d.signalJson.get else d.json
-            s"""{"_index":"device-status","_id":"${d.id}","_source":$src,"sort":[$i]}"""
-          }
-          val res = s"""{"hits":{"hits":[${hits.mkString(",")}]}}"""
-          val bytes = res.getBytes(StandardCharsets.UTF_8)
-          ex.getResponseHeaders.add("Content-Type", "application/json")
-          ex.sendResponseHeaders(200, bytes.length)
-          ex.getResponseBody.write(bytes)
-          ex.close()
+          val hits = picked.map { case (d, i) => hitJson(d, s""","sort":[$i]""") }
+          respond(ex, 200, s"""{"hits":{"hits":[${hits.mkString(",")}]}}""")
           return
         }
         val base =
@@ -432,11 +464,7 @@ object LiveQueries {
           // sum_other_doc_count (single shard ⇒ error bound 0)
           val terms = req.path("aggs").path("group_counts").path("terms")
           if (terms.path("field").asText("") != "subject") {
-            val err = """{"error":"stub terms aggregation supports field subject only"}"""
-            val bytes = err.getBytes(StandardCharsets.UTF_8)
-            ex.sendResponseHeaders(400, bytes.length)
-            ex.getResponseBody.write(bytes)
-            ex.close()
+            respond(ex, 400, """{"error":"stub terms aggregation supports field subject only"}""")
             return
           }
           val tsize = terms.path("size").asInt(10)
@@ -445,41 +473,31 @@ object LiveQueries {
           val other = grouped.map(_._2).sum - taken.map(_._2).sum
           val buckets = taken.map { case (k, n) => s"""{"key":"$k","doc_count":$n}""" }
             .mkString(",")
-          val res = s"""{"aggregations":{"group_counts":{"doc_count_error_upper_bound":0,""" +
-            s""""sum_other_doc_count":$other,"buckets":[$buckets]}},"hits":{"hits":[]}}"""
-          val bytes = res.getBytes(StandardCharsets.UTF_8)
-          ex.sendResponseHeaders(200, bytes.length)
-          ex.getResponseBody.write(bytes)
-          ex.close()
+          respond(ex, 200, """{"aggregations":{"group_counts":""" +
+            s"""{"doc_count_error_upper_bound":0,"sum_other_doc_count":$other,""" +
+            s""""buckets":[$buckets]}},"hits":{"hits":[]}}""")
           return
         }
         if (size == 0) {
           // the stats probe: hits.total for the pushed-filter state
-          val res = s"""{"hits":{"total":{"value":${matched.size},"relation":"eq"},"hits":[]}}"""
-          val bytes = res.getBytes(StandardCharsets.UTF_8)
-          ex.sendResponseHeaders(200, bytes.length)
-          ex.getResponseBody.write(bytes)
-          ex.close()
+          respond(ex, 200,
+            s"""{"hits":{"total":{"value":${matched.size},"relation":"eq"},"hits":[]}}""")
           return
         }
-        val hits = matched
-          .take(size).toSeq
-          .map { d =>
-            val src = if (signalMode) d.signalJson.get else d.json
-            s"""{"_index":"device-status","_id":"${d.id}","_source":$src}"""
-          }
+        val hits = matched.take(size).toSeq.map(hitJson(_, ""))
         served.addAndGet(hits.size.toLong)
-        val res = s"""{"hits":{"hits":[${hits.mkString(",")}]}}"""
-        val bytes = res.getBytes(StandardCharsets.UTF_8)
-        ex.getResponseHeaders.add("Content-Type", "application/json")
-        ex.sendResponseHeaders(200, bytes.length)
-        ex.getResponseBody.write(bytes)
-        ex.close()
+        respond(ex, 200, s"""{"hits":{"hits":[${hits.mkString(",")}]}}""")
       }
     })
-    server.start()
-    server
   }
+
+  /** [[startStub]] with only the signal-clause mode and the served-hits
+    * counter: the form the benchmark's ES double (`perfbench`) calls.
+    */
+  private[graft] def startStub(docs: IndexedSeq[StubDoc], requireSignalClauses: Boolean,
+      served: AtomicLong): HttpServer =
+    startStub(docs, StubModes(requireSignalClauses = requireSignalClauses),
+      StubCounters(served = served))
 
   /** Minimal stateful ClickHouse-HTTP stub: enforces DDL-before-INSERT,
     * stores every CSV insert batch, and answers exactly three statement
@@ -504,23 +522,10 @@ object LiveQueries {
       }
       byToken
     }
-    val server = loopbackServer(1024)
-    val tf = new java.util.concurrent.ThreadFactory {
-      override def newThread(r: Runnable): Thread = {
-        val t = new Thread(r, "live-ch-stub"); t.setDaemon(true); t
-      }
-    }
-    server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(32, tf))
     val oldestRe = java.util.regex.Pattern.compile(
       "SELECT `timestamp` FROM `signal` WHERE `token_id` = (\\d+) " +
         "ORDER BY `timestamp` ASC LIMIT 1 FORMAT TabSeparated\\s*")
-    def respond(ex: HttpExchange, code: Int, body: String): Unit = {
-      val bytes = body.getBytes(StandardCharsets.UTF_8)
-      ex.sendResponseHeaders(code, if (bytes.isEmpty) -1 else bytes.length)
-      if (bytes.nonEmpty) ex.getResponseBody.write(bytes)
-      ex.close()
-    }
-    server.createContext("/", new HttpHandler {
+    val server = pooledServer("live-ch-stub", new HttpHandler {
       override def handle(ex: HttpExchange): Unit = {
         val q = Option(ex.getRequestURI.getRawQuery).flatMap(_.split("&").collectFirst {
           case kv if kv.startsWith("query=") =>
@@ -559,7 +564,6 @@ object LiveQueries {
         } else respond(ex, 400, s"unsupported statement: $q$body")
       }
     })
-    server.start()
     (server, rows)
   }
 
@@ -590,11 +594,7 @@ object LiveQueries {
         val docs: IndexedSeq[StubDoc] =
           parDocs(evs.toIndexedSeq, 0) { (r, i) =>
             val (subj, tsu, cents) = (r.getString(0), r.getLong(1), r.getLong(2))
-            val iso = java.time.Instant.ofEpochSecond(tsu / 1000000L, (tsu % 1000000L) * 1000L)
-            val json =
-              s"""{"id":"e$i","subject":"$subj","source":"dimo/integration/live",""" +
-                s""""specversion":"1.0","time":"$iso","dataschema":"dimo.zone.status/v2.0",""" +
-                s""""type":"com.dimo.device.status","data":{"vehicle":{"cents":$cents}}}"""
+            val json = statusJson(s"e$i", subj, tsu, "v2.0", s"""{"vehicle":{"cents":$cents}}""")
             StubDoc(s"e$i", subj, tsu, json)
           }
         val subjects = docs.map(_.subject).distinct.sorted
@@ -652,18 +652,13 @@ object LiveQueries {
           parDocs(evs.toIndexedSeq, 0) { (r, i) =>
             val (subj, tsu, cents, hasSpeed) =
               (r.getString(0), r.getLong(1), r.getLong(2), r.getBoolean(3))
-            val iso = java.time.Instant.ofEpochSecond(tsu / 1000000L, (tsu % 1000000L) * 1000L)
-            val envelope =
-              s""""id":"e$i","subject":"$subj","source":"dimo/integration/live",""" +
-                s""""specversion":"1.0","time":"$iso","dataschema":"dimo.zone.status/v1.0",""" +
-                s""""type":"com.dimo.device.status""""
             val data = if (hasSpeed) s"""{"speed":$cents,"make":"Ford"}""" else """{"make":"Audi"}"""
-            StubDoc(s"e$i", subj, tsu, s"""{$envelope,"data":$data}""",
-              signalJson =
-                if (hasSpeed) Some(s"""{$envelope,"data":{"speed":$cents}}""") else None)
+            StubDoc(s"e$i", subj, tsu, statusJson(s"e$i", subj, tsu, "v1.0", data),
+              signalJson = if (hasSpeed)
+                Some(statusJson(s"e$i", subj, tsu, "v1.0", s"""{"speed":$cents}""")) else None)
           }
         val subjects = docs.map(_.subject).distinct.sorted
-        val server = startStub(docs, requireSignalClauses = true)
+        val server = startStub(docs, StubModes(requireSignalClauses = true))
         try {
           val live = s.read.format("graft-status-live")
             .option("url", s"http://127.0.0.1:${server.getAddress.getPort}")
@@ -800,11 +795,8 @@ object LiveQueries {
         }
         def mkDoc(r: org.apache.spark.sql.Row, i: Int): StubDoc = {
           val (subj, tsu, cents) = (r.getString(0), r.getLong(1), r.getLong(2))
-          val iso = java.time.Instant.ofEpochSecond(tsu / 1000000L, (tsu % 1000000L) * 1000L)
           StubDoc(s"e$subj-$tsu-$i", subj, tsu,
-            s"""{"id":"e$i","subject":"$subj","source":"dimo/integration/live",""" +
-              s""""specversion":"1.0","time":"$iso","dataschema":"dimo.zone.status/v1.0",""" +
-              s""""type":"com.dimo.device.status","data":{"speed":$cents,"make":"m"}}""")
+            statusJson(s"e$i", subj, tsu, "v1.0", s"""{"speed":$cents,"make":"m"}"""))
         }
         val (newer, older) = evs.toIndexedSeq.partition(_.getLong(1) >= mid)
         // seeded once each (parDocs), round 2 = round 1's docs + the backfill
@@ -939,11 +931,8 @@ object LiveQueries {
         val mid = { val ts = evs.map(_.getLong(1)); (ts.min + ts.max) / 2 }
         def mkDoc(r: org.apache.spark.sql.Row, i: Int): StubDoc = {
           val (subj, tsu, cents) = (r.getString(0), r.getLong(1), r.getLong(2))
-          val iso = java.time.Instant.ofEpochSecond(tsu / 1000000L, (tsu % 1000000L) * 1000L)
           StubDoc(s"t$subj-$tsu-$i", subj, tsu,
-            s"""{"id":"t$i","subject":"$subj","source":"dimo/integration/live",""" +
-              s""""specversion":"1.0","time":"$iso","dataschema":"dimo.zone.status/v2.0",""" +
-              s""""type":"com.dimo.device.status","data":{"cents":$cents}}""")
+            statusJson(s"t$i", subj, tsu, "v2.0", s"""{"cents":$cents}"""))
         }
         // split on a MILLISECOND boundary: offsets are ms-granular, so the
         // two halves must not share a millisecond (the phase-2 floor is
@@ -1017,14 +1006,9 @@ object LiveQueries {
         val mid = { val ts = evs.map(_.getLong(1)); (ts.min + ts.max) / 2 }
         def mkDoc(r: org.apache.spark.sql.Row, i: Int): StubDoc = {
           val (subj, tsu, cents) = (r.getString(0), r.getLong(1), r.getLong(2))
-          val iso = java.time.Instant.ofEpochSecond(tsu / 1000000L, (tsu % 1000000L) * 1000L)
-          val envelope =
-            s""""id":"g$i","subject":"$subj","source":"dimo/integration/live",""" +
-              s""""specversion":"1.0","time":"$iso","dataschema":"dimo.zone.status/v1.0",""" +
-              s""""type":"com.dimo.device.status""""
           StubDoc(s"g$subj-$tsu-$i", subj, tsu,
-            s"""{$envelope,"data":{"speed":$cents,"make":"m"}}""",
-            signalJson = Some(s"""{$envelope,"data":{"speed":$cents}}"""))
+            statusJson(s"g$i", subj, tsu, "v1.0", s"""{"speed":$cents,"make":"m"}"""),
+            signalJson = Some(statusJson(s"g$i", subj, tsu, "v1.0", s"""{"speed":$cents}""")))
         }
         val (newer, older) = evs.toIndexedSeq.partition(_.getLong(1) / 1000 >= mid / 1000)
         // seeded once each (parDocs), round 2 = round 1's docs + the backfill
@@ -1041,7 +1025,7 @@ object LiveQueries {
         def syncRound(docs: IndexedSeq[StubDoc],
             sink: Option[org.apache.spark.sql.DataFrame]): Unit = {
           // requireSignalClauses: a request WITHOUT the projection is 400
-          val server = startStub(docs, requireSignalClauses = true)
+          val server = startStub(docs, StubModes(requireSignalClauses = true))
           try {
             val out = SyncJob.runLive(s,
               s"http://127.0.0.1:${server.getAddress.getPort}", dim, sink, opts,
@@ -1143,14 +1127,10 @@ object LiveQueries {
             val cents = r.getLong(0)
             val bucket = ((cents % 3) + 3) % 3 // deterministic tie bucket
             val ms = Base + bucket * 60000L
-            val iso = java.time.Instant.ofEpochMilli(ms)
-            val json =
-              s"""{"id":"t$i","subject":"s0","source":"dimo/integration/live",""" +
-                s""""specversion":"1.0","time":"$iso","dataschema":"dimo.zone.status/v2.0",""" +
-                s""""type":"com.dimo.device.status","data":{"cents":$cents}}"""
+            val json = statusJson(s"t$i", "s0", ms * 1000L, "v2.0", s"""{"cents":$cents}""")
             StubDoc(f"t$i%07d", "s0", ms * 1000L, json)
           }
-        val server = startStub(docs, sizeCap = 600)
+        val server = startStub(docs, StubModes(sizeCap = 600))
         try {
           val live = s.read.format("graft-status-live")
             .option("url", s"http://127.0.0.1:${server.getAddress.getPort}")
@@ -1258,14 +1238,10 @@ object LiveQueries {
         val docs: IndexedSeq[StubDoc] =
           parDocs(evs.toIndexedSeq, 0) { (r, i) =>
             val (subj, tsu) = (r.getString(0), r.getLong(1))
-            val iso = java.time.Instant.ofEpochSecond(tsu / 1000000L, (tsu % 1000000L) * 1000L)
-            StubDoc(s"n$i", subj, tsu,
-              s"""{"id":"n$i","subject":"$subj","source":"dimo/integration/live",""" +
-                s""""specversion":"1.0","time":"$iso","dataschema":"dimo.zone.status/v2.0",""" +
-                s""""type":"com.dimo.device.status","data":{}}""")
+            StubDoc(s"n$i", subj, tsu, statusJson(s"n$i", subj, tsu, "v2.0", "{}"))
           }
         val served = new java.util.concurrent.atomic.AtomicLong
-        val server = startStub(docs, served = served)
+        val server = startStub(docs, counters = StubCounters(served = served))
         try {
           val live = s.read.format("graft-status-live")
             .option("url", s"http://127.0.0.1:${server.getAddress.getPort}")
@@ -1323,11 +1299,7 @@ object LiveQueries {
         val docs: IndexedSeq[StubDoc] =
           parDocs(evs.toIndexedSeq, 0) { (r, i) =>
             val (subj, tsu, c) = (r.getString(0), r.getLong(1), r.getLong(2))
-            val iso = java.time.Instant.ofEpochSecond(tsu / 1000000L, (tsu % 1000000L) * 1000L)
-            StubDoc(s"v$i", subj, tsu,
-              s"""{"id":"v$i","subject":"$subj","source":"dimo/integration/live",""" +
-                s""""specversion":"1.0","time":"$iso","dataschema":"dimo.zone.status/v2.0",""" +
-                s""""type":"com.dimo.device.status","data":{"cents":$c}}""")
+            StubDoc(s"v$i", subj, tsu, statusJson(s"v$i", subj, tsu, "v2.0", s"""{"cents":$c}"""))
           }
         val vips = Tables.load(s, d, "events")
           .where(col("ts").isNotNull && col("user_id").isNotNull &&
@@ -1340,7 +1312,7 @@ object LiveQueries {
         val vipSet = vips.collect().map(_.getString(0)).toSet
         val expectedServed = evs.count(r => vipSet(r.getString(0))).toLong
         val served = new java.util.concurrent.atomic.AtomicLong
-        val server = startStub(docs, served = served)
+        val server = startStub(docs, counters = StubCounters(served = served))
         val confs = Seq(
           "spark.sql.optimizer.dynamicPartitionPruning.useStats" -> "false",
           "spark.sql.optimizer.dynamicPartitionPruning.fallbackFilterRatio" -> "10.0")
@@ -1393,14 +1365,10 @@ object LiveQueries {
         val docs: IndexedSeq[StubDoc] =
           parDocs(evs.toIndexedSeq, 0) { (r, i) =>
             val (subj, tsu) = (r.getString(0), r.getLong(1))
-            val iso = java.time.Instant.ofEpochSecond(tsu / 1000000L, (tsu % 1000000L) * 1000L)
-            StubDoc(s"gc$i", subj, tsu,
-              s"""{"id":"gc$i","subject":"$subj","source":"dimo/integration/live",""" +
-                s""""specversion":"1.0","time":"$iso","dataschema":"dimo.zone.status/v2.0",""" +
-                s""""type":"com.dimo.device.status","data":{}}""")
+            StubDoc(s"gc$i", subj, tsu, statusJson(s"gc$i", subj, tsu, "v2.0", "{}"))
           }
         val served = new java.util.concurrent.atomic.AtomicLong
-        val server = startStub(docs, served = served)
+        val server = startStub(docs, counters = StubCounters(served = served))
         try {
           val live = s.read.format("graft-status-live")
             .option("url", s"http://127.0.0.1:${server.getAddress.getPort}")
@@ -1449,16 +1417,12 @@ object LiveQueries {
         val docs: IndexedSeq[StubDoc] =
           parDocs(evs.toIndexedSeq, 0) { (r, i) =>
             val (subj, tsu) = (r.getString(0), r.getLong(1))
-            val iso = java.time.Instant.ofEpochSecond(tsu / 1000000L, (tsu % 1000000L) * 1000L)
-            StubDoc(s"fs$i", subj, tsu,
-              s"""{"id":"fs$i","subject":"$subj","source":"dimo/integration/live",""" +
-                s""""specversion":"1.0","time":"$iso","dataschema":"dimo.zone.status/v2.0",""" +
-                s""""type":"com.dimo.device.status","data":{}}""")
+            StubDoc(s"fs$i", subj, tsu, statusJson(s"fs$i", subj, tsu, "v2.0", "{}"))
           }
         // the monitored subset: even token ids (expressible in the oracle)
         val evens = evs.map(_.getString(0)).distinct.filter(_.toLong % 2 == 0).sorted
         val served = new java.util.concurrent.atomic.AtomicLong
-        val server = startStub(docs, served = served)
+        val server = startStub(docs, counters = StubCounters(served = served))
         try {
           val live = s.read.format("graft-status-live")
             .option("url", s"http://127.0.0.1:${server.getAddress.getPort}")
@@ -1502,14 +1466,10 @@ object LiveQueries {
             val cents = r.getLong(0)
             val bucket = ((cents % 3) + 3) % 3 // deterministic tie bucket
             val ms = Base + bucket * 60000L
-            val iso = java.time.Instant.ofEpochMilli(ms)
-            val json =
-              s"""{"id":"p$i","subject":"s0","source":"dimo/integration/live",""" +
-                s""""specversion":"1.0","time":"$iso","dataschema":"dimo.zone.status/v2.0",""" +
-                s""""type":"com.dimo.device.status","data":{"cents":$cents}}"""
+            val json = statusJson(s"p$i", "s0", ms * 1000L, "v2.0", s"""{"cents":$cents}""")
             StubDoc(f"p$i%07d", "s0", ms * 1000L, json)
           }
-        val server = startStub(docs, sizeCap = 600, pitMode = true)
+        val server = startStub(docs, StubModes(sizeCap = 600, pitMode = true))
         try {
           val live = s.read.format("graft-status-live")
             .option("url", s"http://127.0.0.1:${server.getAddress.getPort}")
@@ -1742,16 +1702,13 @@ object LiveQueries {
         val docs: IndexedSeq[StubDoc] =
           parDocs(evs.toIndexedSeq, 0) { (r, i) =>
             val (subj, tsu, cents) = (r.getString(0), r.getLong(1), r.getLong(2))
-            val iso = java.time.Instant.ofEpochSecond(tsu / 1000000L, (tsu % 1000000L) * 1000L)
             StubDoc(s"sl$i", subj, tsu,
-              s"""{"id":"sl$i","subject":"$subj","source":"dimo/integration/live",""" +
-                s""""specversion":"1.0","time":"$iso","dataschema":"dimo.zone.status/v2.0",""" +
-                s""""type":"com.dimo.device.status","data":{"cents":$cents}}""")
+              statusJson(s"sl$i", subj, tsu, "v2.0", s"""{"cents":$cents}"""))
           }
         val served = new java.util.concurrent.atomic.AtomicLong
         val sliceSeen = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
-        val server = startStub(docs, pitMode = true, served = served,
-          sliceSeen = sliceSeen)
+        val server = startStub(docs, StubModes(pitMode = true),
+          StubCounters(served = served, sliceSeen = sliceSeen))
         try {
           val live = s.read.format("graft-status-live")
             .option("url", s"http://127.0.0.1:${server.getAddress.getPort}")
@@ -1808,19 +1765,17 @@ object LiveQueries {
         val docs: IndexedSeq[StubDoc] =
           parDocs(evs.toIndexedSeq, 0) { (r, i) =>
             val (subj, tsu, cents) = (r.getString(0), r.getLong(1), r.getLong(2))
-            val iso = java.time.Instant.ofEpochSecond(tsu / 1000000L, (tsu % 1000000L) * 1000L)
             StubDoc(s"hs$i", subj, tsu,
-              s"""{"id":"hs$i","subject":"$subj","source":"dimo/integration/live",""" +
-                s""""specversion":"1.0","time":"$iso","dataschema":"dimo.zone.status/v2.0",""" +
-                s""""type":"com.dimo.device.status","data":{"cents":$cents}}""")
+              statusJson(s"hs$i", subj, tsu, "v2.0", s"""{"cents":$cents}"""))
           }
         val hotTotal = docs.count(_.subject == "hot").toLong
         val subjects = docs.map(_.subject).distinct
         val sliceSeen = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
         val slicedSubjects = new java.util.concurrent.ConcurrentLinkedQueue[String]()
         val servedSliced = new java.util.concurrent.atomic.AtomicLong
-        val server = startStub(docs, pitMode = true, sliceSeen = sliceSeen,
-          slicedSubjects = slicedSubjects, servedSliced = servedSliced)
+        val server = startStub(docs, StubModes(pitMode = true),
+          StubCounters(sliceSeen = sliceSeen, slicedSubjects = slicedSubjects,
+            servedSliced = servedSliced))
         try {
           val live = s.read.format("graft-status-live")
             .option("url", s"http://127.0.0.1:${server.getAddress.getPort}")
@@ -1881,11 +1836,8 @@ object LiveQueries {
         val docs: IndexedSeq[StubDoc] =
           parDocs(evs.toIndexedSeq, 0) { (r, i) =>
             val (subj, tsu, cents) = (r.getString(0), r.getLong(1), r.getLong(2))
-            val iso = java.time.Instant.ofEpochSecond(tsu / 1000000L, (tsu % 1000000L) * 1000L)
             StubDoc(s"rc$i", subj, tsu,
-              s"""{"id":"rc$i","subject":"$subj","source":"dimo/integration/live",""" +
-                s""""specversion":"1.0","time":"$iso","dataschema":"dimo.zone.status/v2.0",""" +
-                s""""type":"com.dimo.device.status","data":{"cents":$cents}}""")
+              statusJson(s"rc$i", subj, tsu, "v2.0", s"""{"cents":$cents}"""))
           }
         val census = evs.map(_.getString(0)).distinct.sorted
         val stops = census.filter(_.toLong % 2 == 0).map(sub => s"$sub\t$cut")
@@ -1899,7 +1851,7 @@ object LiveQueries {
         val sPath = stage(stops)
         val expected = evs.count(r => r.getLong(3) % 2 == 1 || r.getLong(1) / 1000 < cut)
         val served = new java.util.concurrent.atomic.AtomicLong
-        val server = startStub(docs, served = served)
+        val server = startStub(docs, counters = StubCounters(served = served))
         try {
           val live = s.read.format("graft-status-live")
             .option("url", s"http://127.0.0.1:${server.getAddress.getPort}")
@@ -1962,18 +1914,15 @@ object LiveQueries {
         val docs: IndexedSeq[StubDoc] =
           parDocs(evs.toIndexedSeq, 0) { (r, i) =>
             val (subj, tsu, cents) = (r.getString(0), r.getLong(1), r.getLong(2))
-            val iso = java.time.Instant.ofEpochSecond(tsu / 1000000L, (tsu % 1000000L) * 1000L)
             StubDoc(s"wc$i", subj, tsu,
-              s"""{"id":"wc$i","subject":"$subj","source":"dimo/integration/live",""" +
-                s""""specversion":"1.0","time":"$iso","dataschema":"dimo.zone.status/v2.0",""" +
-                s""""type":"com.dimo.device.status","data":{"cents":$cents}}""")
+              statusJson(s"wc$i", subj, tsu, "v2.0", s"""{"cents":$cents}"""))
           }
         val subjects = docs.map(_.subject).distinct
         val coldGroups = math.min(64, subjects.length - 1)
         val sliceSeen = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
         val pitOpened = new java.util.concurrent.atomic.AtomicLong
-        val server = startStub(docs, pitMode = false, sliceSeen = sliceSeen,
-          pitOpened = pitOpened)
+        val server = startStub(docs, StubModes(pitMode = false),
+          StubCounters(sliceSeen = sliceSeen, pitOpened = pitOpened))
         try {
           val live = s.read.format("graft-status-live")
             .option("url", s"http://127.0.0.1:${server.getAddress.getPort}")
@@ -2037,11 +1986,8 @@ object LiveQueries {
         val docs: IndexedSeq[StubDoc] =
           parDocs(evs.toIndexedSeq, 0) { (r, i) =>
             val (subj, tsu, cents) = (r.getString(0), r.getLong(1), r.getLong(2))
-            val iso = java.time.Instant.ofEpochSecond(tsu / 1000000L, (tsu % 1000000L) * 1000L)
             StubDoc(s"rh$i", subj, tsu,
-              s"""{"id":"rh$i","subject":"$subj","source":"dimo/integration/live",""" +
-                s""""specversion":"1.0","time":"$iso","dataschema":"dimo.zone.status/v2.0",""" +
-                s""""type":"com.dimo.device.status","data":{"cents":$cents}}""")
+              statusJson(s"rh$i", subj, tsu, "v2.0", s"""{"cents":$cents}"""))
           }
         val hotMs = evs.filter(_.getString(0) == "hot").map(_.getLong(1) / 1000)
         val cut = (hotMs.min + hotMs.max) / 2 // the whale's midpoint watermark
@@ -2062,9 +2008,9 @@ object LiveQueries {
         val servedSliced = new java.util.concurrent.atomic.AtomicLong
         val sliceSeen = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
         val slicedSubjects = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-        val server = startStub(docs, pitMode = true, served = served,
-          servedSliced = servedSliced, sliceSeen = sliceSeen,
-          slicedSubjects = slicedSubjects)
+        val server = startStub(docs, StubModes(pitMode = true),
+          StubCounters(served = served, servedSliced = servedSliced, sliceSeen = sliceSeen,
+            slicedSubjects = slicedSubjects))
         try {
           val live = s.read.format("graft-status-live")
             .option("url", s"http://127.0.0.1:${server.getAddress.getPort}")
@@ -2142,11 +2088,8 @@ object LiveQueries {
         val mid = { val ts = evs.map(_.getLong(1)); (ts.min + ts.max) / 2 }
         def mkDoc(r: org.apache.spark.sql.Row, i: Int): StubDoc = {
           val (subj, tsu, cents) = (r.getString(0), r.getLong(1), r.getLong(2))
-          val iso = java.time.Instant.ofEpochSecond(tsu / 1000000L, (tsu % 1000000L) * 1000L)
           StubDoc(s"g$subj-$tsu-$i", subj, tsu,
-            s"""{"id":"g$i","subject":"$subj","source":"dimo/integration/live",""" +
-              s""""specversion":"1.0","time":"$iso","dataschema":"dimo.zone.status/v1.0",""" +
-              s""""type":"com.dimo.device.status","data":{"speed":$cents,"make":"m"}}""")
+            statusJson(s"g$i", subj, tsu, "v1.0", s"""{"speed":$cents,"make":"m"}"""))
         }
         val (newer, older) = evs.toIndexedSeq.partition(_.getLong(1) >= mid)
         // seeded once each (parDocs), round 2 = round 1's docs + the backfill
@@ -2164,8 +2107,8 @@ object LiveQueries {
         try {
           val sliceSeen = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
           val slicedSubjects = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-          val server1 = startStub(docs1, pitMode = true,
-            sliceSeen = sliceSeen, slicedSubjects = slicedSubjects)
+          val server1 = startStub(docs1, StubModes(pitMode = true),
+            StubCounters(sliceSeen = sliceSeen, slicedSubjects = slicedSubjects))
           try {
             val round1 = SyncJob.runLiveRanged(s, url(server1), dim, existingSink = None,
               opts, stagingDir = staging.toString, batchSize = 2000,
@@ -2179,7 +2122,7 @@ object LiveQueries {
             s"expected the whale across all 8 slices, saw ${sliceSeen.asScala.toSet}")
           require(java.nio.file.Files.list(staging).iterator().asScala.nonEmpty,
             "caller-owned staging must survive the action (tasks read it mid-flight)")
-          val server2 = startStub(docs2, pitMode = true)
+          val server2 = startStub(docs2, StubModes(pitMode = true))
           try {
             val sink1 = SignalSink.readParquet(s, sinkDir)
             val round2 = SyncJob.runLiveRanged(s, url(server2), dim,
@@ -2243,11 +2186,8 @@ object LiveQueries {
         val mid = { val ts = evs.map(_.getLong(1)); (ts.min + ts.max) / 2 }
         def mkDoc(r: org.apache.spark.sql.Row, i: Int): StubDoc = {
           val (subj, tsu, cents) = (r.getString(0), r.getLong(1), r.getLong(2))
-          val iso = java.time.Instant.ofEpochSecond(tsu / 1000000L, (tsu % 1000000L) * 1000L)
           StubDoc(s"h$subj-$tsu-$i", subj, tsu,
-            s"""{"id":"h$i","subject":"$subj","source":"dimo/integration/live",""" +
-              s""""specversion":"1.0","time":"$iso","dataschema":"dimo.zone.status/v1.0",""" +
-              s""""type":"com.dimo.device.status","data":{"speed":$cents,"make":"m"}}""")
+            statusJson(s"h$i", subj, tsu, "v1.0", s"""{"speed":$cents,"make":"m"}"""))
         }
         val (newer, older) = evs.toIndexedSeq.partition(_.getLong(1) >= mid)
         // seeded once each (parDocs), round 2 = round 1's docs + the backfill
@@ -2275,7 +2215,8 @@ object LiveQueries {
         try {
           import scala.jdk.CollectionConverters._
           val sliced1 = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-          val server1 = startStub(docs1, pitMode = true, slicedSubjects = sliced1)
+          val server1 = startStub(docs1, StubModes(pitMode = true),
+            StubCounters(slicedSubjects = sliced1))
           try {
             val round1 = SyncJob.runLiveRanged(s, url(server1), dim, existingSink = None,
               opts, stagingDir = staging.toString, batchSize = 2000,
@@ -2286,8 +2227,8 @@ object LiveQueries {
             s"round 1 has no sink to probe — plain tiles, saw sliced ${sliced1.asScala.toSet}")
           val sliceSeen = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
           val sliced2 = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-          val server2 = startStub(docs2, pitMode = true,
-            sliceSeen = sliceSeen, slicedSubjects = sliced2)
+          val server2 = startStub(docs2, StubModes(pitMode = true),
+            StubCounters(sliceSeen = sliceSeen, slicedSubjects = sliced2))
           try {
             val sink1 = SignalSink.readParquet(s, sinkDir)
             val round2 = SyncJob.runLiveRanged(s, url(server2), dim,
@@ -2354,11 +2295,8 @@ object LiveQueries {
         val docs: IndexedSeq[StubDoc] =
           parDocs(evs.toIndexedSeq, 0) { (r, i) =>
             val (subj, tsu, cents) = (r.getString(0), r.getLong(1), r.getLong(2))
-            val iso = java.time.Instant.ofEpochSecond(tsu / 1000000L, (tsu % 1000000L) * 1000L)
             StubDoc(s"wb$i", subj, tsu,
-              s"""{"id":"wb$i","subject":"$subj","source":"dimo/integration/live",""" +
-                s""""specversion":"1.0","time":"$iso","dataschema":"dimo.zone.status/v2.0",""" +
-                s""""type":"com.dimo.device.status","data":{"cents":$cents}}""")
+              statusJson(s"wb$i", subj, tsu, "v2.0", s"""{"cents":$cents}"""))
           }
         val wOf: Map[String, Long] =
           evs.groupBy(_.getString(0)).view.mapValues(_.length.toLong).toMap
@@ -2393,7 +2331,7 @@ object LiveQueries {
         require(coldLoads.forall(_ <= share + maxCold),
           s"cold group past the provable bound ${share + maxCold}: $coldLoads")
         val served = new java.util.concurrent.atomic.AtomicLong
-        val server = startStub(docs, served = served)
+        val server = startStub(docs, counters = StubCounters(served = served))
         try {
           val live = s.read.format("graft-status-live")
             .option("url", s"http://127.0.0.1:${server.getAddress.getPort}")
@@ -2463,11 +2401,8 @@ object LiveQueries {
         val docs: IndexedSeq[StubDoc] =
           parDocs(evs.toIndexedSeq, 0) { (r, i) =>
             val (subj, tsu, cents) = (r.getString(0), r.getLong(1), r.getLong(2))
-            val iso = java.time.Instant.ofEpochSecond(tsu / 1000000L, (tsu % 1000000L) * 1000L)
             StubDoc(s"wt$i", subj, tsu,
-              s"""{"id":"wt$i","subject":"$subj","source":"dimo/integration/live",""" +
-                s""""specversion":"1.0","time":"$iso","dataschema":"dimo.zone.status/v2.0",""" +
-                s""""type":"com.dimo.device.status","data":{"cents":$cents}}""")
+              statusJson(s"wt$i", subj, tsu, "v2.0", s"""{"cents":$cents}"""))
           }
         val wOf: Map[String, Long] =
           evs.groupBy(_.getString(0)).view.mapValues(_.length.toLong).toMap
@@ -2497,7 +2432,7 @@ object LiveQueries {
         require(coldLoads.forall(_ <= share + maxCold),
           s"cold group past the provable bound ${share + maxCold}: $coldLoads")
         val served = new java.util.concurrent.atomic.AtomicLong
-        val server = startStub(docs, served = served)
+        val server = startStub(docs, counters = StubCounters(served = served))
         try {
           val live = s.read.format("graft-status-live")
             .option("url", s"http://127.0.0.1:${server.getAddress.getPort}")
@@ -2568,11 +2503,8 @@ object LiveQueries {
         val docs: IndexedSeq[StubDoc] =
           parDocs(evs.toIndexedSeq, 0) { (r, i) =>
             val (subj, tsu, cents) = (r.getString(1), r.getLong(2), r.getLong(3))
-            val iso = java.time.Instant.ofEpochSecond(tsu / 1000000L, (tsu % 1000000L) * 1000L)
             StubDoc(s"al$i", subj, tsu,
-              s"""{"id":"al$i","subject":"$subj","source":"dimo/integration/live",""" +
-                s""""specversion":"1.0","time":"$iso","dataschema":"dimo.zone.status/v1.0",""" +
-                s""""type":"com.dimo.device.status","data":{"speed":$cents,"make":"m"}}""")
+              statusJson(s"al$i", subj, tsu, "v1.0", s"""{"speed":$cents,"make":"m"}"""))
           }
         val tokens = evs.map(_.getLong(0)).distinct.sorted.toSeq
         val subjOf: Map[Long, String] = tokens.map(t => t -> s"v${t / 2}").toMap
@@ -2597,7 +2529,7 @@ object LiveQueries {
           start = Some(new java.sql.Timestamp(0L)),
           stop = Some(new java.sql.Timestamp(9999999999999L)))
         val staging = java.nio.file.Files.createTempDirectory("graft-q243-staging")
-        val server = startStub(docs, pitMode = true)
+        val server = startStub(docs, StubModes(pitMode = true))
         try {
           val out = SyncJob.runLiveRanged(s,
             s"http://127.0.0.1:${server.getAddress.getPort}", dim,
@@ -2683,11 +2615,8 @@ object LiveQueries {
         val mid = { val ts = evs.map(_.getLong(1)); (ts.min + ts.max) / 2 }
         def mkDoc(r: org.apache.spark.sql.Row, i: Int): StubDoc = {
           val (subj, tsu, cents) = (r.getString(0), r.getLong(1), r.getLong(2))
-          val iso = java.time.Instant.ofEpochSecond(tsu / 1000000L, (tsu % 1000000L) * 1000L)
           StubDoc(s"sc$subj-$tsu-$i", subj, tsu,
-            s"""{"id":"sc$i","subject":"$subj","source":"dimo/integration/live",""" +
-              s""""specversion":"1.0","time":"$iso","dataschema":"dimo.zone.status/v2.0",""" +
-              s""""type":"com.dimo.device.status","data":{"cents":$cents}}""")
+            statusJson(s"sc$i", subj, tsu, "v2.0", s"""{"cents":$cents}"""))
         }
         // ms-boundary split: the ES tail's offsets are ms-granular
         val (newer, older) = evs.toIndexedSeq.partition(_.getLong(1) / 1000 >= mid / 1000)

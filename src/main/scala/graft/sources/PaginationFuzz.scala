@@ -1,9 +1,8 @@
 package graft.sources
 
-import java.nio.charset.StandardCharsets
+import com.sun.net.httpserver.HttpServer
 
-import com.fasterxml.jackson.databind.ObjectMapper
-import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
+import graft.queries.LiveQueries.{startStub, StubDoc, StubModes}
 
 /** Seeded fuzz harness for the wire pagination state machine
   * ([[EsHttpClient.pagedLines]]) against an in-memory model — the
@@ -14,17 +13,18 @@ import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
   * driver's bench run, not just CI); `EsPaginationFuzzSpec` drives the
   * same harness plus deterministic pins.
   *
-  * The stub implements the protocol surface the client speaks: windowed
-  * `_search` sorted time-desc with a servable-size cap (over-cap ⇒ the
-  * circuit-breaker "Data too large" error, sync.go:163-178 [ext]) and the
-  * `search_after` drain grammar ([[EsQueryDsl.searchAfterRequest]]: `_id`
-  * ascending within a window, cursor-exclusive).
+  * The server is the fixed-corpus ES double
+  * ([[graft.queries.LiveQueries.startStub]]): windowed `_search` sorted
+  * time-desc with a servable-size cap (over-cap ⇒ the circuit-breaker
+  * "Data too large" error, sync.go:163-178 [ext], or the
+  * `max_result_window` rejection), the `search_after` drain grammar
+  * ([[EsQueryDsl.searchAfterRequest]]: `_id` ascending within a window,
+  * cursor-exclusive) and, in `pitMode`, the `_shard_doc` drain with
+  * `slice`s.
   *
   * No SparkSession needed — plain JVM + loopback HTTP.
   */
 private[graft] object PaginationFuzz {
-
-  private val mapper = new ObjectMapper()
 
   /** (id, Some(timeMs)) = normal doc; (id, None) = doc whose `_source.time`
     * is MALFORMED but which the server still serves inside any window (the
@@ -35,142 +35,15 @@ private[graft] object PaginationFuzz {
     */
   final case class FDoc(id: String, timeMs: Option[Long], indexMs: Long,
       sourceless: Boolean = false, subject: String = "s0") {
-    def json: String = {
+    /** The doc as the stub serves it: `indexMs` orders and windows it. */
+    def stub: StubDoc = {
       val t = timeMs.map(ms => s""""time":"${java.time.Instant.ofEpochMilli(ms)}",""")
         .getOrElse(""""time":"not-a-timestamp",""")
-      s"""{"id":"$id","subject":"$subject","source":"x","specversion":"1.0",$t""" +
-        s""""dataschema":"v2.0","type":"c","data":{}}"""
+      StubDoc(id, subject, indexMs * 1000L,
+        s"""{"id":"$id","subject":"$subject","source":"x","specversion":"1.0",$t""" +
+          s""""dataschema":"v2.0","type":"c","data":{}}""",
+        sourceless = sourceless)
     }
-  }
-
-  /** Stub: sorts (-indexMs, id), filters the pushed window on indexMs,
-    * rejects any request with size > cap — as the circuit breaker
-    * ("Data too large", 500) or, with `windowError`, as a real ES's
-    * `index.max_result_window` rejection ("Result window is too large",
-    * 400): the loop must treat both as "this size is unservable" — and
-    * serves the drain grammars the way a real ES would. `pitMode` is the
-    * ES 8 posture: `POST {index}/_pit` issues point-in-time ids, drains
-    * arrive at the bare `_search` with `pit` + `sort: _shard_doc` +
-    * `search_after` of the hit's own sort values (shard_doc = the doc's
-    * stable corpus position), and an `_id`-sort request is REJECTED
-    * outright (no fielddata on `_id`); without `pitMode`, `_pit` is 404
-    * and the `_id`-ascending drain is served (the pre-PIT fallback).
-    */
-  def serve(docs: Seq[FDoc], cap: Int,
-      requests: java.util.concurrent.ConcurrentLinkedQueue[String] = null,
-      windowError: Boolean = false, pitMode: Boolean = false): HttpServer = {
-    val sorted = docs.sortBy(d => (-d.indexMs, d.id))
-    val byId = docs.sortBy(_.id)
-    val pitSeq = new java.util.concurrent.atomic.AtomicLong()
-    val server = graft.queries.LiveQueries.loopbackServer()
-    server.createContext("/", new HttpHandler {
-      override def handle(ex: HttpExchange): Unit = {
-        val path = ex.getRequestURI.getPath
-        if (path.endsWith("/_pit")) {
-          ex.getRequestBody.readAllBytes() // drain
-          if ("POST" == ex.getRequestMethod && pitMode) {
-            val res = s"""{"id":"pit-${pitSeq.incrementAndGet()}"}"""
-            val b = res.getBytes(StandardCharsets.UTF_8)
-            ex.sendResponseHeaders(200, b.length)
-            ex.getResponseBody.write(b)
-          } else if ("DELETE" == ex.getRequestMethod) {
-            val b = """{"succeeded":true}""".getBytes(StandardCharsets.UTF_8)
-            ex.sendResponseHeaders(200, b.length)
-            ex.getResponseBody.write(b)
-          } else ex.sendResponseHeaders(404, -1)
-          ex.close(); return
-        }
-        val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-        if (requests != null) requests.add(body)
-        val req = mapper.readTree(body)
-        val size = req.path("size").asInt(10)
-        if (size > cap) {
-          val (code, err) =
-            if (windowError)
-              (400, """{"error":{"type":"illegal_argument_exception","reason":""" +
-                s""""Result window is too large, from + size must be less than or equal to: [$cap]"}}""")
-            else (500, """{"error":"circuit_breaking_exception: Data too large"}""")
-          val bytes = err.getBytes(StandardCharsets.UTF_8)
-          ex.sendResponseHeaders(code, bytes.length)
-          ex.getResponseBody.write(bytes)
-          ex.close(); return
-        }
-        var gte: Option[Long] = None
-        var lt: Option[Long] = None
-        var subj: Option[String] = None
-        req.path("query").path("bool").path("filter").forEach { f =>
-          val r = f.path("range").path("time")
-          if (r.has("gte")) gte = Some(r.get("gte").asText().toLong)
-          if (r.has("lt")) lt = Some(r.get("lt").asText().toLong)
-          val m = f.path("match").path("subject").path("query")
-          if (m.isTextual) subj = Some(m.asText()) // the per-subject match clause
-        }
-        def inWindow(d: FDoc) = gte.forall(d.indexMs >= _) && lt.forall(d.indexMs < _) &&
-          subj.forall(_ == d.subject)
-        def hitJson(d: FDoc, sortVal: Option[Long]): String = {
-          val sort = sortVal.map(v => s""","sort":[$v]""").getOrElse("")
-          if (d.sourceless) s"""{"_id":"${d.id}"$sort}"""
-          else s"""{"_id":"${d.id}","_source":${d.json}$sort}"""
-        }
-        val idSort = req.path("sort").size() > 0 && req.path("sort").get(0).has("_id")
-        val pitReq = req.path("pit").path("id").isTextual
-        if (pitReq && !pitMode) {
-          val err = """{"error":"stub has no point-in-time support"}"""
-          val bytes = err.getBytes(StandardCharsets.UTF_8)
-          ex.sendResponseHeaders(400, bytes.length)
-          ex.getResponseBody.write(bytes)
-          ex.close(); return
-        }
-        if (idSort && pitMode) {
-          // the real-ES 8 posture: no fielddata on _id — the client must
-          // be on the PIT grammar once the server offers it
-          val err = """{"error":{"type":"illegal_argument_exception","reason":""" +
-            """"Fielddata is disabled on [_id] in [idx]"}}"""
-          val bytes = err.getBytes(StandardCharsets.UTF_8)
-          ex.sendResponseHeaders(400, bytes.length)
-          ex.getResponseBody.write(bytes)
-          ex.close(); return
-        }
-        val hits =
-          if (pitReq) {
-            // _shard_doc drain: stable corpus position, cursor-exclusive.
-            // `slice: {id, max}` (the parallel-scan form) partitions docs
-            // into disjoint subsets — opaque to the client, modeled as a
-            // hash of the doc id like the gate stub
-            val after = Option(req.get("search_after")).filter(_.isArray)
-              .map(_.get(0).asLong())
-            val sliceNode = req.path("slice")
-            val inSlice: FDoc => Boolean =
-              if (sliceNode.isObject) {
-                val sid = sliceNode.path("id").asInt(0)
-                val smax = math.max(1, sliceNode.path("max").asInt(1))
-                d => math.floorMod(d.id.hashCode, smax) == sid
-              } else _ => true
-            docs.iterator.zipWithIndex
-              .filter { case (d, i) => inWindow(d) && inSlice(d) && after.forall(i > _) }
-              .take(size)
-              .map { case (d, i) => hitJson(d, Some(i.toLong)) }
-              .mkString(",")
-          } else if (idSort) {
-            // the pre-PIT drain grammar: `_id` ascending, cursor-exclusive
-            val after = Option(req.get("search_after")).filter(_.isArray)
-              .map(_.get(0).asText())
-            byId.iterator.filter(inWindow)
-              .filter(d => after.forall(d.id > _))
-              .take(size)
-              .map(hitJson(_, None))
-              .mkString(",")
-          } else sorted.iterator.filter(inWindow).take(size)
-            .map(hitJson(_, None)).mkString(",")
-        val res = s"""{"hits":{"hits":[$hits]}}"""
-        val bytes = res.getBytes(StandardCharsets.UTF_8)
-        ex.sendResponseHeaders(200, bytes.length)
-        ex.getResponseBody.write(bytes)
-        ex.close()
-      }
-    })
-    server.start()
-    server
   }
 
   /** Drain one pagedDocs loop fully; returns the emitted payload ids. */
@@ -219,19 +92,6 @@ private[graft] object PaginationFuzz {
 
   val Base = 1704000000000L
 
-  /** Standalone soak entry point: `runMain graft.sources.PaginationFuzz
-    * [seed] [trials]` — the end-of-round fresh-seed campaign without a
-    * test harness (defaults: random seed, 300 trials).
-    */
-  def main(args: Array[String]): Unit = {
-    val seed = args.lift(0).map(_.toLong).getOrElse(new java.util.Random().nextLong())
-    val trials = args.lift(1).map(_.toInt).getOrElse(300)
-    val t0 = System.nanoTime()
-    run(seed, trials)
-    println(f"[paginationfuzz] $trials trials clean (seed $seed) in " +
-      f"${(System.nanoTime() - t0) / 1e9}%.1f s")
-  }
-
   /** One seeded fuzz campaign: randomized corpora (tie runs wider than
     * pages AND wider than the server's cap, random windows, random size
     * caps, BOTH over-size rejection styles — circuit breaker and
@@ -273,8 +133,8 @@ private[graft] object PaginationFuzz {
         .filter(d => !d.sourceless && d.indexMs >= start && d.indexMs < stop).map(_.id)
       // half the trials are the ES 8 posture (PIT offered, `_id` sort
       // REJECTED — drains must ride _shard_doc), half the pre-PIT one
-      val server = serve(docs, cap, windowError = rnd.nextBoolean(),
-        pitMode = rnd.nextBoolean())
+      val server = startStub(docs.map(_.stub), StubModes(sizeCap = cap,
+        windowError = rnd.nextBoolean(), pitMode = rnd.nextBoolean()))
       val sliceMax = 2 + rnd.nextInt(5) // drawn every trial: seed-stable shape
       try {
         val got = drain(server, batch, start, stop)

@@ -12,6 +12,11 @@ package graft.tools
   * plan, not guessed.
   *
   * Usage: [SPARK_GRAFT_SF_DIR=<sfDir>] runMain graft.tools.BenchOne [name[,name...]] [iters]
+  *
+  * Every name must be a declared entry (`SparkEntry.allDefs`); an unknown
+  * name fails the run. The entries only `graft.Bench` runs
+  * (`sync_e2e_8000docs`, `fuzz_*_seeded`, `calibration_*`) are not
+  * declared entries, so BenchOne cannot time them.
   */
 object BenchOne {
   def main(args: Array[String]): Unit = {
@@ -24,7 +29,10 @@ object BenchOne {
     val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
       .asInstanceOf[com.sun.management.OperatingSystemMXBean]
     val defs = graft.SparkEntry.allDefs.filter(d => names(d.name))
-    require(defs.nonEmpty, s"no bench entries match $names")
+    val unknown = names -- defs.map(_.name)
+    require(unknown.isEmpty, s"not declared entries (SparkEntry.allDefs): " +
+      s"${unknown.toSeq.sorted.mkString(", ")}; Bench-only entries (sync_e2e_8000docs, " +
+      "fuzz_*_seeded, calibration_*) cannot be timed by BenchOne")
     val walls = scala.collection.mutable.Map[String, Vector[Double]]()
     for (i <- 1 to iters; q <- defs) {
       spark.catalog.clearCache()

@@ -3,7 +3,8 @@ package graft.tools
 /** Fresh-seed pagination fuzz campaign — the per-round soak (NOTES.md
   * tradition: every round closes with a multi-thousand-trial run on a
   * seed the tree has never seen, beyond the pinned-seed bench/spec
-  * entries).
+  * entries). Each trial starts and stops one ES double; the closing
+  * line reports the JVM's live thread count.
   *
   * Usage: runMain graft.tools.FuzzSoak [seed] [trials]
   */
@@ -13,6 +14,9 @@ object FuzzSoak {
     val trials = args.lift(1).map(_.toInt).getOrElse(3000)
     val t0 = System.nanoTime()
     graft.sources.PaginationFuzz.run(seed, trials)
-    println(f"[fuzzsoak] $trials trials seed $seed clean in ${(System.nanoTime() - t0) / 1e9}%.1f s")
+    val threads = java.lang.management.ManagementFactory.getThreadMXBean.getThreadCount
+    val secs = (System.nanoTime() - t0) / 1e9
+    println(f"[fuzzsoak] $trials trials seed $seed clean in $secs%.1f s, " +
+      s"$threads live JVM threads at the end")
   }
 }

@@ -2,6 +2,8 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 
+import graft.queries.LiveQueries.{startStub, statusJson, StubCounters, StubModes}
+
 /** Measures the LIVE wire tier's throughput against a loopback stub: N
   * synthetic status docs across K subjects served by the in-process
   * `_search` stub, read through the full client stack (`graft-status-live`
@@ -26,14 +28,10 @@ object LiveProbe {
       (0 until nDocs).map { i =>
         val subj = (i % nSubjects).toString
         val tsu = 1704000000000000L + i.toLong * 1000
-        val iso = java.time.Instant.ofEpochSecond(tsu / 1000000L, (tsu % 1000000L) * 1000L)
-        val json =
-          s"""{"id":"e$i","subject":"$subj","source":"dimo/integration/live",""" +
-            s""""specversion":"1.0","time":"$iso","dataschema":"dimo.zone.status/v2.0",""" +
-            s""""type":"com.dimo.device.status","data":{"vehicle":{"cents":$i}}}"""
+        val json = statusJson(s"e$i", subj, tsu, "v2.0", s"""{"vehicle":{"cents":$i}}""")
         graft.queries.LiveQueries.StubDoc(s"e$i", subj, tsu, json)
       }
-    val server = graft.queries.LiveQueries.startStub(docs)
+    val server = startStub(docs)
     try {
       val subjects = (0 until nSubjects).map(_.toString)
       def read() = spark.read.format("graft-status-live")
@@ -65,11 +63,7 @@ object LiveProbe {
         (0 until nDocs).map { i =>
           val subj = (i % nSubjects).toString
           val tsu = 1704000000000000L + i.toLong * 1000
-          val iso = java.time.Instant.ofEpochSecond(tsu / 1000000L, (tsu % 1000000L) * 1000L)
-          val json =
-            s"""{"id":"e$i","subject":"$subj","source":"dimo/integration/live",""" +
-              s""""specversion":"1.0","time":"$iso","dataschema":"dimo.zone.status/v1.0",""" +
-              s""""type":"com.dimo.device.status","data":{"speed":$i}}"""
+          val json = statusJson(s"e$i", subj, tsu, "v1.0", s"""{"speed":$i}""")
           graft.queries.LiveQueries.StubDoc(s"e$i", subj, tsu, json)
         }
       // the NEWER half is already synced: the sink's per-token watermark is
@@ -93,7 +87,7 @@ object LiveProbe {
         start = Some(new java.sql.Timestamp(0L)),
         stop = Some(new java.sql.Timestamp(9999999999999L)))
       val served = new java.util.concurrent.atomic.AtomicLong
-      val server2 = graft.queries.LiveQueries.startStub(syncedDocs, served = served)
+      val server2 = startStub(syncedDocs, counters = StubCounters(served = served))
       try {
         val url = s"http://127.0.0.1:${server2.getAddress.getPort}"
         def naive() = {
@@ -238,7 +232,8 @@ object LiveProbe {
         graft.sources.PaginationFuzz.FDoc(f"t$i%06d", Some(1704000000000L), 1704000000000L)
       }
       val requests = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-      val server5 = graft.sources.PaginationFuzz.serve(tieDocs, cap, requests)
+      val server5 = startStub(tieDocs.map(_.stub), StubModes(sizeCap = cap),
+        StubCounters(requests = Some(requests)))
       try {
         val t0 = System.nanoTime()
         val got = graft.sources.PaginationFuzz.drain(server5, 500, 0L, 1704000001000L)
@@ -368,14 +363,10 @@ object LiveProbe {
         (0 until n).map { i =>
           val subj = (i % 64).toString
           val tsu = 1704000000000000L + i.toLong * 1000
-          val iso = java.time.Instant.ofEpochSecond(tsu / 1000000L, (tsu % 1000000L) * 1000L)
-          val json =
-            s"""{"id":"s$i","subject":"$subj","source":"dimo/integration/live",""" +
-              s""""specversion":"1.0","time":"$iso","dataschema":"dimo.zone.status/v2.0",""" +
-              s""""type":"com.dimo.device.status","data":{"i":$i}}"""
+          val json = statusJson(s"s$i", subj, tsu, "v2.0", s"""{"i":$i}""")
           graft.queries.LiveQueries.StubDoc(f"s$i%07d", subj, tsu, json)
         }
-      val server = graft.queries.LiveQueries.startStub(probeDocs, pitMode = true)
+      val server = startStub(probeDocs, StubModes(pitMode = true))
       try {
         // an expression aggregate over `data` forces the ROW path (a bare
         // count() would be answered by the pushed-COUNT probe in one
@@ -418,11 +409,8 @@ object LiveProbe {
       val probeDocs: IndexedSeq[graft.queries.LiveQueries.StubDoc] = {
         def doc(subj: String, i: Int, ord: Int): graft.queries.LiveQueries.StubDoc = {
           val tsu = 1704000000000000L + ord.toLong * 1000
-          val iso = java.time.Instant.ofEpochSecond(tsu / 1000000L, (tsu % 1000000L) * 1000L)
           graft.queries.LiveQueries.StubDoc(f"h$ord%07d", subj, tsu,
-            s"""{"id":"h$ord","subject":"$subj","source":"dimo/integration/live",""" +
-              s""""specversion":"1.0","time":"$iso","dataschema":"dimo.zone.status/v2.0",""" +
-              s""""type":"com.dimo.device.status","data":{"i":$i}}""")
+            statusJson(s"h$ord", subj, tsu, "v2.0", s"""{"i":$i}"""))
         }
         ((0 until hotN).map(i => doc("hot", i, i)) ++
           (0 until coldSubjects).flatMap(s =>
@@ -430,7 +418,7 @@ object LiveProbe {
       }
       val subjects = "hot" +: (0 until coldSubjects).map(s => s"c$s")
       val expected = (0L until hotN).sum + coldSubjects.toLong * (0L until coldN).sum
-      val server = graft.queries.LiveQueries.startStub(probeDocs, pitMode = true)
+      val server = startStub(probeDocs, StubModes(pitMode = true))
       try {
         def read(slices: Int): Long = spark.read.format("graft-status-live")
           .option("url", s"http://127.0.0.1:${server.getAddress.getPort}")
@@ -470,11 +458,8 @@ object LiveProbe {
       val probeDocs: IndexedSeq[graft.queries.LiveQueries.StubDoc] = {
         def doc(subj: String, i: Int, ord: Int): graft.queries.LiveQueries.StubDoc = {
           val tsu = 1704000000000000L + ord.toLong * 1000
-          val iso = java.time.Instant.ofEpochSecond(tsu / 1000000L, (tsu % 1000000L) * 1000L)
           graft.queries.LiveQueries.StubDoc(f"r$ord%07d", subj, tsu,
-            s"""{"id":"r$ord","subject":"$subj","source":"dimo/integration/live",""" +
-              s""""specversion":"1.0","time":"$iso","dataschema":"dimo.zone.status/v2.0",""" +
-              s""""type":"com.dimo.device.status","data":{"i":$i}}""")
+            statusJson(s"r$ord", subj, tsu, "v2.0", s"""{"i":$i}"""))
         }
         ((0 until whaleN).map(i => doc("whale", i, i)) ++
           (0 until coldSubjects).flatMap(s =>
@@ -486,7 +471,7 @@ object LiveProbe {
       graft.sources.StatusLiveSource.writeSubjects(census, cFile.toString)
       graft.sources.StatusLiveSource.writeSubjects(Seq("whale"), hFile.toString)
       val expected = (0L until whaleN).sum + coldSubjects.toLong * (0L until coldN).sum
-      val server = graft.queries.LiveQueries.startStub(probeDocs, pitMode = true)
+      val server = startStub(probeDocs, StubModes(pitMode = true))
       try {
         def read(hotList: Boolean): Long = {
           var r = spark.read.format("graft-status-live")
@@ -533,14 +518,10 @@ object LiveProbe {
         (0 until n).map { i =>
           val subj = (i % 64).toString
           val tsu = 1704000000000000L + i.toLong * 1000
-          val iso = java.time.Instant.ofEpochSecond(tsu / 1000000L, (tsu % 1000000L) * 1000L)
-          val json =
-            s"""{"id":"w$i","subject":"$subj","source":"dimo/integration/live",""" +
-              s""""specversion":"1.0","time":"$iso","dataschema":"dimo.zone.status/v2.0",""" +
-              s""""type":"com.dimo.device.status","data":{"i":$i}}"""
+          val json = statusJson(s"w$i", subj, tsu, "v2.0", s"""{"i":$i}""")
           graft.queries.LiveQueries.StubDoc(f"w$i%07d", subj, tsu, json)
         }
-      val server = graft.queries.LiveQueries.startStub(probeDocs, pitMode = false)
+      val server = startStub(probeDocs, StubModes(pitMode = false))
       try {
         val expected = (0L until n).sum
         def read(slices: Int): Long = spark.read.format("graft-status-live")
@@ -585,11 +566,8 @@ object LiveProbe {
         def doc(subj: String, i: Int): graft.queries.LiveQueries.StubDoc = {
           ord += 1
           val tsu = 1704000000000000L + ord.toLong * 1000
-          val iso = java.time.Instant.ofEpochSecond(tsu / 1000000L, (tsu % 1000000L) * 1000L)
           graft.queries.LiveQueries.StubDoc(f"b$ord%07d", subj, tsu,
-            s"""{"id":"b$ord","subject":"$subj","source":"dimo/integration/live",""" +
-              s""""specversion":"1.0","time":"$iso","dataschema":"dimo.zone.status/v2.0",""" +
-              s""""type":"com.dimo.device.status","data":{"i":$ord}}""")
+            statusJson(s"b$ord", subj, tsu, "v2.0", s"""{"i":$ord}"""))
         }
         (heavies.flatMap(s => (0 until heavyN).map(doc(s, _))) ++
           lights.flatMap(s => (0 until lightN).map(doc(s, _)))).toIndexedSeq
@@ -603,7 +581,7 @@ object LiveProbe {
         .mkString("", "\n", "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
       val total = heavies.size.toLong * heavyN + lights.size.toLong * lightN
       val expected = (0L until total).sum
-      val server = graft.queries.LiveQueries.startStub(probeDocs, pitMode = true)
+      val server = startStub(probeDocs, StubModes(pitMode = true))
       try {
         def read(weighted: Boolean): Long = {
           var r = spark.read.format("graft-status-live")

@@ -23,7 +23,7 @@ object StreamPhaseProbe {
     val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
       .asInstanceOf[com.sun.management.OperatingSystemMXBean]
 
-    import graft.queries.LiveQueries.{startStub, StubDoc}
+    import graft.queries.LiveQueries.{startStub, statusJson, StubDoc}
 
     for (iter <- 1 to iters) {
       spark.catalog.clearCache()
@@ -47,11 +47,8 @@ object StreamPhaseProbe {
       val mid = { val ts = evs.map(_.getLong(1)); (ts.min + ts.max) / 2 }
       def mkDoc(r: org.apache.spark.sql.Row, i: Int): StubDoc = {
         val (subj, tsu, cents) = (r.getString(0), r.getLong(1), r.getLong(2))
-        val iso = java.time.Instant.ofEpochSecond(tsu / 1000000L, (tsu % 1000000L) * 1000L)
         StubDoc(s"t$subj-$tsu-$i", subj, tsu,
-          s"""{"id":"t$i","subject":"$subj","source":"dimo/integration/live",""" +
-            s""""specversion":"1.0","time":"$iso","dataschema":"dimo.zone.status/v2.0",""" +
-            s""""type":"com.dimo.device.status","data":{"cents":$cents}}""")
+          statusJson(s"t$i", subj, tsu, "v2.0", s"""{"cents":$cents}"""))
       }
       val (newer, older) = evs.toIndexedSeq.partition(_.getLong(1) / 1000 >= mid / 1000)
       val outDir = java.nio.file.Files

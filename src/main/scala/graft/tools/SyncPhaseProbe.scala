@@ -18,7 +18,7 @@ object SyncPhaseProbe {
     val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
       .asInstanceOf[com.sun.management.OperatingSystemMXBean]
 
-    import graft.queries.LiveQueries.{startStub, StubDoc}
+    import graft.queries.LiveQueries.{startStub, statusJson, StubDoc, StubModes}
     import graft.jobs.{SyncJob, SyncOptions}
     import graft.sources.{DeviceDim, SignalSink}
 
@@ -44,14 +44,9 @@ object SyncPhaseProbe {
       val mid = { val ts = evs.map(_.getLong(1)); (ts.min + ts.max) / 2 }
       def mkDoc(r: org.apache.spark.sql.Row, i: Int): StubDoc = {
           val (subj, tsu, cents) = (r.getString(0), r.getLong(1), r.getLong(2))
-          val iso = java.time.Instant.ofEpochSecond(tsu / 1000000L, (tsu % 1000000L) * 1000L)
-          val envelope =
-            s""""id":"g$i","subject":"$subj","source":"dimo/integration/live",""" +
-              s""""specversion":"1.0","time":"$iso","dataschema":"dimo.zone.status/v1.0",""" +
-              s""""type":"com.dimo.device.status""""
           StubDoc(s"g$subj-$tsu-$i", subj, tsu,
-            s"""{$envelope,"data":{"speed":$cents,"make":"m"}}""",
-            signalJson = Some(s"""{$envelope,"data":{"speed":$cents}}"""))
+            statusJson(s"g$i", subj, tsu, "v1.0", s"""{"speed":$cents,"make":"m"}"""),
+            signalJson = Some(statusJson(s"g$i", subj, tsu, "v1.0", s"""{"speed":$cents}""")))
       }
       val (newer, older) = evs.toIndexedSeq.partition(_.getLong(1) / 1000 >= mid / 1000)
       val tokens = evs.map(_.getString(0)).distinct.sorted
@@ -67,7 +62,7 @@ object SyncPhaseProbe {
       val docs2 = phase("mkDocs-round2")(
         docs1 ++ graft.queries.LiveQueries.parDocs(older, newer.length)(mkDoc))
 
-      val server1 = phase("stub-start-1")(startStub(docs1, requireSignalClauses = true))
+      val server1 = phase("stub-start-1")(startStub(docs1, StubModes(requireSignalClauses = true)))
       try {
         val out1 = phase("runLive-plan-1") {
           SyncJob.runLive(spark,
@@ -76,7 +71,7 @@ object SyncPhaseProbe {
         }
         phase("append-1")(SignalSink.appendParquet(out1, sinkDir, buckets = 8))
       } finally server1.stop(0)
-      val server2 = phase("stub-start-2")(startStub(docs2, requireSignalClauses = true))
+      val server2 = phase("stub-start-2")(startStub(docs2, StubModes(requireSignalClauses = true)))
       try {
         // engine-vs-test-double attribution (VERDICT r18 Next #5): the
         // SERIAL wire floor — page the whole corpus straight through

@@ -3,8 +3,12 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 import java.time.Instant
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
 
 import graft.jobs.{SyncJob, SyncOptions}
+import graft.queries.LiveQueries.{startStub, StubCounters, StubDoc}
 import graft.sources.{DeviceDim, SignalSink}
 import org.apache.spark.sql.functions._
 
@@ -82,86 +86,71 @@ class EndToEndSyncSpec extends SparkTestBase {
       spark.read.parquet(sinkDir).select(input_file_name()).distinct().count())
   }
 
+  /** [[doc]] as the ES double serves it. */
+  private def stubDoc(subject: String, ms: Long, speed: Double) =
+    StubDoc(s"e$ms-$subject", subject, (t0.toEpochMilli + ms) * 1000L, doc(subject, ms, speed))
+
+  /** Round 1's corpus: subjects 1,2 × 100..500ms; round 2's adds the
+    * older backfill docs at 0 and 50ms. Each round reads its own server,
+    * as a cluster that gained documents between two syncs.
+    */
+  private val corpus1 = for (s <- Seq("1", "2"); ms <- 100L to 500L by 100L)
+    yield stubDoc(s, ms, ms.toDouble)
+  private val corpus2 = corpus1 ++
+    (for (s <- Seq("1", "2"); ms <- 0L until 100L by 50L) yield stubDoc(s, ms, ms.toDouble))
+
+  /** Runs `body` with the URL of the ES double over `docs`, which logs
+    * every `_search` body to `requests`; stops the double after.
+    */
+  private def withStub[T](docs: Seq[StubDoc],
+      requests: ConcurrentLinkedQueue[String] = new ConcurrentLinkedQueue[String]())(
+      body: String => T): T = {
+    val server = startStub(docs.toIndexedSeq, counters = StubCounters(requests = Some(requests)))
+    try body(s"http://127.0.0.1:${server.getAddress.getPort}") finally server.stop(0)
+  }
+
   test("runLive pushes per-token watermark stops INTO the request bodies (sync.go:96-100)") {
     // the r12 wire-bandwidth fix: round 2 must not re-download the full
     // window and filter in the plan — each subject's request window stops
     // at its oldest-synced watermark (the reference's per-token EndTime)
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val corpus = new java.util.concurrent.CopyOnWriteArrayList[(String, String, Long, String)]()
-    val requests = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    def add(subject: String, ms: Long, speed: Double): Unit =
-      corpus.add((s"e$ms-$subject", subject, t0.toEpochMilli + ms, doc(subject, ms, speed)))
-    val server = graft.queries.LiveQueries.loopbackServer(64)
-    server.createContext("/", new com.sun.net.httpserver.HttpHandler {
-      override def handle(ex: com.sun.net.httpserver.HttpExchange): Unit = {
-        val body = new String(ex.getRequestBody.readAllBytes(), "UTF-8")
-        requests.add(body)
-        val req = mapper.readTree(body)
-        val size = req.path("size").asInt(10)
-        var subject: Option[String] = None
-        var gte: Option[Long] = None
-        var lt: Option[Long] = None
-        req.path("query").path("bool").path("filter").forEach { f =>
-          val m = f.path("match").path("subject").path("query")
-          if (m.isTextual) subject = Some(m.asText())
-          val r = f.path("range").path("time")
-          if (r.has("gte")) gte = Some(r.get("gte").asText().toLong)
-          if (r.has("lt")) lt = Some(r.get("lt").asText().toLong)
-        }
-        import scala.jdk.CollectionConverters._
-        val hits = corpus.asScala
-          .filter { case (_, s, tMs, _) => subject.forall(_ == s) &&
-            gte.forall(tMs >= _) && lt.forall(tMs < _) }
-          .sortBy { case (id, _, tMs, _) => (-tMs, id) }
-          .take(size)
-          .map { case (id, _, _, j) => s"""{"_id":"$id","_source":$j}""" }
-        val res = s"""{"hits":{"hits":[${hits.mkString(",")}]}}"""
-        val bytes = res.getBytes("UTF-8")
-        ex.sendResponseHeaders(200, bytes.length)
-        ex.getResponseBody.write(bytes)
-        ex.close()
-      }
-    })
-    server.start()
-    try {
-      val url = s"http://127.0.0.1:${server.getAddress.getPort}"
-      val sinkDir = Files.createTempDirectory("graft-e2e-runlive").resolve("signals").toString
-      for (s <- Seq("1", "2"); ms <- 100L to 500L by 100L) add(s, ms, ms.toDouble)
-      val dim = DeviceDim.identityDim(spark, 1L to 2L)
-      val opts = SyncOptions(tokens = Seq("1", "2"),
-        start = Some(tAt(0)), stop = Some(tAt(1000)))
+    // the data pages, without the size-0 stats probes
+    def dataBodies(requests: ConcurrentLinkedQueue[String]) =
+      requests.asScala.toSeq.map(mapper.readTree).filter(_.path("size").asInt(-1) != 0)
+    val sinkDir = Files.createTempDirectory("graft-e2e-runlive").resolve("signals").toString
+    val dim = DeviceDim.identityDim(spark, 1L to 2L)
+    val opts = SyncOptions(tokens = Seq("1", "2"),
+      start = Some(tAt(0)), stop = Some(tAt(1000)))
 
+    val requests1 = new ConcurrentLinkedQueue[String]()
+    withStub(corpus1, requests1) { url =>
       val round1 = SyncJob.runLive(spark, url, dim, existingSink = None, opts, batchSize = 3)
       SignalSink.appendParquet(round1, sinkDir, buckets = 4)
-      val sink1 = SignalSink.readParquet(spark, sinkDir)
-      assert(sink1.count() === 2L * 5 * 2)
-      // the pushed subject census fans out per-subject requests
-      import scala.jdk.CollectionConverters._
-      def dataBodies(): Seq[com.fasterxml.jackson.databind.JsonNode] =
-        requests.asScala.toSeq.map(mapper.readTree)
-          .filter(_.path("size").asInt(-1) != 0) // drop the stats probes
-      assert(dataBodies().forall(b =>
-        b.path("query").path("bool").path("filter").get(0)
-          .path("match").path("subject").isObject),
-        "every round-1 request is a per-subject loop (the pushed IN-set)")
+    }
+    val sink1 = SignalSink.readParquet(spark, sinkDir)
+    assert(sink1.count() === 2L * 5 * 2)
+    // the pushed subject census fans out per-subject requests
+    assert(dataBodies(requests1).forall(b =>
+      b.path("query").path("bool").path("filter").get(0)
+        .path("match").path("subject").isObject),
+      "every round-1 request is a per-subject loop (the pushed IN-set)")
 
-      requests.clear()
-      for (s <- Seq("1", "2"); ms <- 0L until 100L by 50L) add(s, ms, ms.toDouble)
+    val requests2 = new ConcurrentLinkedQueue[String]()
+    withStub(corpus2, requests2) { url =>
       val round2 = SyncJob.runLive(spark, url, dim, existingSink = Some(sink1), opts, batchSize = 3)
-      val n2 = round2.count()
-      assert(n2 === 2L * 2 * 2, "resume = only the backfill window")
-      // THE point: every round-2 request's exclusive stop is the token's
-      // watermark (t0+100ms for both), never the global stop (t0+1000ms)
-      val round2Bodies = dataBodies()
-      assert(round2Bodies.nonEmpty)
-      round2Bodies.foreach { b =>
-        val lt = b.path("query").path("bool").path("filter").get(1)
-          .path("range").path("time").path("lt").asText().toLong
-        assert(lt === t0.toEpochMilli + 100,
-          s"request window must stop at the watermark, got lt=$lt " +
-            s"(global stop would be ${t0.toEpochMilli + 1000})")
-      }
-    } finally server.stop(0)
+      assert(round2.count() === 2L * 2 * 2, "resume = only the backfill window")
+    }
+    // THE point: every round-2 request's exclusive stop is the token's
+    // watermark (t0+100ms for both), never the global stop (t0+1000ms)
+    val round2Bodies = dataBodies(requests2)
+    assert(round2Bodies.nonEmpty)
+    round2Bodies.foreach { b =>
+      val lt = b.path("query").path("bool").path("filter").get(1)
+        .path("range").path("time").path("lt").asText().toLong
+      assert(lt === t0.toEpochMilli + 100,
+        s"request window must stop at the watermark, got lt=$lt " +
+          s"(global stop would be ${t0.toEpochMilli + 1000})")
+    }
   }
 
   test("the same two-round sync OVER THE WIRE: live ES reads resume below the watermark (r11)") {
@@ -170,63 +159,28 @@ class EndToEndSyncSpec extends SparkTestBase {
     // the REQUEST BODIES (EsHttpClient's paged loop), and round 2's
     // backfill must fetch only below each token's watermark — the
     // reference's actual ES→CH loop, end to end, over HTTP
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val corpus = new java.util.concurrent.CopyOnWriteArrayList[(String, String, Long, String)]()
-    def add(subject: String, ms: Long, speed: Double): Unit =
-      corpus.add((s"e$ms-$subject", subject, t0.toEpochMilli + ms, doc(subject, ms, speed)))
-    val server = graft.queries.LiveQueries.loopbackServer(64)
-    server.createContext("/", new com.sun.net.httpserver.HttpHandler {
-      override def handle(ex: com.sun.net.httpserver.HttpExchange): Unit = {
-        val req = mapper.readTree(ex.getRequestBody.readAllBytes())
-        val size = req.path("size").asInt(10)
-        var subject: Option[String] = None
-        var gte: Option[Long] = None
-        var lt: Option[Long] = None
-        req.path("query").path("bool").path("filter").forEach { f =>
-          val m = f.path("match").path("subject").path("query")
-          if (m.isTextual) subject = Some(m.asText())
-          val r = f.path("range").path("time")
-          if (r.has("gte")) gte = Some(r.get("gte").asText().toLong)
-          if (r.has("lt")) lt = Some(r.get("lt").asText().toLong)
-        }
-        import scala.jdk.CollectionConverters._
-        val hits = corpus.asScala
-          .filter { case (_, s, tMs, _) => subject.forall(_ == s) &&
-            gte.forall(tMs >= _) && lt.forall(tMs < _) }
-          .sortBy { case (id, _, tMs, _) => (-tMs, id) }
-          .take(size)
-          .map { case (id, _, _, j) => s"""{"_id":"$id","_source":$j}""" }
-        val res = s"""{"hits":{"hits":[${hits.mkString(",")}]}}"""
-        val bytes = res.getBytes("UTF-8")
-        ex.sendResponseHeaders(200, bytes.length)
-        ex.getResponseBody.write(bytes)
-        ex.close()
-      }
-    })
-    server.start()
-    try {
-      val sinkDir = Files.createTempDirectory("graft-e2e-live").resolve("signals").toString
-      def liveDocs() = spark.read.format("graft-status-live")
-        .option("url", s"http://127.0.0.1:${server.getAddress.getPort}")
-        .option("batchSize", "3") // tiny pages: the paged loop is real
-        .load()
-        .select(col("subject"), col("source"), col("time"), col("data"))
-      for (s <- Seq("1", "2"); ms <- 100L to 500L by 100L) add(s, ms, ms.toDouble)
-      val dim = DeviceDim.identityDim(spark, 1L to 2L)
+    val sinkDir = Files.createTempDirectory("graft-e2e-live").resolve("signals").toString
+    def liveDocs(url: String) = spark.read.format("graft-status-live")
+      .option("url", url)
+      .option("batchSize", "3") // tiny pages: the paged loop is real
+      .load()
+      .select(col("subject"), col("source"), col("time"), col("data"))
+    val dim = DeviceDim.identityDim(spark, 1L to 2L)
+    val opts = SyncOptions(tokens = Seq("1", "2"), start = Some(tAt(0)), stop = Some(tAt(1000)))
 
-      val round1 = SyncJob.run(liveDocs(), dim, existingSink = None,
-        SyncOptions(tokens = Seq("1", "2"), start = Some(tAt(0)), stop = Some(tAt(1000))))
+    withStub(corpus1) { url =>
+      val round1 = SyncJob.run(liveDocs(url), dim, existingSink = None, opts)
       SignalSink.appendParquet(round1, sinkDir, buckets = 4)
-      val sink1 = SignalSink.readParquet(spark, sinkDir)
-      assert(sink1.count() === 2L * 5 * 2, "live round 1 = the full corpus")
+    }
+    val sink1 = SignalSink.readParquet(spark, sinkDir)
+    assert(sink1.count() === 2L * 5 * 2, "live round 1 = the full corpus")
 
-      // backfill docs appear in the LIVE cluster; resume fetches only
-      // below each token's oldest-synced timestamp
-      for (s <- Seq("1", "2"); ms <- 0L until 100L by 50L) add(s, ms, ms.toDouble)
-      val round2 = SyncJob.run(liveDocs(), dim, existingSink = Some(sink1),
-        SyncOptions(tokens = Seq("1", "2"), start = Some(tAt(0)), stop = Some(tAt(1000))))
+    // backfill docs appear in the LIVE cluster; resume fetches only
+    // below each token's oldest-synced timestamp
+    withStub(corpus2) { url =>
+      val round2 = SyncJob.run(liveDocs(url), dim, existingSink = Some(sink1), opts)
       assert(round2.count() === 2L * 2 * 2, "live resume = only the backfill window")
       assert(round2.agg(max(col("timestamp"))).head().getTimestamp(0) === tAt(50))
-    } finally server.stop(0)
+    }
   }
 }

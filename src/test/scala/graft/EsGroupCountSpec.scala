@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.queries.LiveQueries
-import graft.queries.LiveQueries.StubDoc
+import graft.queries.LiveQueries.{StubCounters, StubDoc}
 
 /** Grouped COUNT pushdown on the live ES source (`groupBy(subject)
   * .count()` → one size-0 `terms` aggregation probe): answered without
@@ -37,7 +37,7 @@ class EsGroupCountSpec extends SparkTestBase {
   test("groupBy(subject).count() is answered by the terms probe — zero documents page") {
     val docs = mkDocs(40, 4)
     val served = new java.util.concurrent.atomic.AtomicLong
-    val server = LiveQueries.startStub(docs, served = served)
+    val server = LiveQueries.startStub(docs, counters = StubCounters(served = served))
     try {
       val got = liveDf(server)
         .where(col("subject").isNotNull)
@@ -56,7 +56,7 @@ class EsGroupCountSpec extends SparkTestBase {
   test("pushed filters ride into the probe: a time window narrows the buckets") {
     val docs = mkDocs(40, 4)
     val served = new java.util.concurrent.atomic.AtomicLong
-    val server = LiveQueries.startStub(docs, served = served)
+    val server = LiveQueries.startStub(docs, counters = StubCounters(served = served))
     try {
       val cut = new java.sql.Timestamp(1704000000000L + 20000L) // docs 20..39
       val got = liveDf(server)
@@ -71,7 +71,7 @@ class EsGroupCountSpec extends SparkTestBase {
   test("without a pushed subject IS NOT NULL the grouped count row-scans (null group safety)") {
     val docs = mkDocs(12, 3)
     val served = new java.util.concurrent.atomic.AtomicLong
-    val server = LiveQueries.startStub(docs, served = served)
+    val server = LiveQueries.startStub(docs, counters = StubCounters(served = served))
     try {
       val got = liveDf(server)
         .groupBy(col("subject")).count()
@@ -85,7 +85,7 @@ class EsGroupCountSpec extends SparkTestBase {
   test("bucket spill (terms size < cardinality) rejects the pushdown — row scan, still exact") {
     val docs = mkDocs(40, 8)
     val served = new java.util.concurrent.atomic.AtomicLong
-    val server = LiveQueries.startStub(docs, served = served)
+    val server = LiveQueries.startStub(docs, counters = StubCounters(served = served))
     try {
       // termsSize 3 < 8 subjects: sum_other_doc_count > 0 ⇒ the probe
       // rejects itself and the row scan answers
@@ -102,7 +102,7 @@ class EsGroupCountSpec extends SparkTestBase {
   test("a signal filter or per-subject stops reject the grouped pushdown (row set differs)") {
     val docs = mkDocs(12, 3).map(d => d.copy(signalJson = Some(d.json)))
     val served = new java.util.concurrent.atomic.AtomicLong
-    val server = LiveQueries.startStub(docs, served = served)
+    val server = LiveQueries.startStub(docs, counters = StubCounters(served = served))
     try {
       val withSignals = spark.read.format("graft-status-live")
         .option("url", s"http://127.0.0.1:${server.getAddress.getPort}")
@@ -117,7 +117,7 @@ class EsGroupCountSpec extends SparkTestBase {
   test("a fleet-subset IN composes: terms clause in the probe, subset buckets only, probe-only") {
     val docs = mkDocs(40, 4)
     val served = new java.util.concurrent.atomic.AtomicLong
-    val server = LiveQueries.startStub(docs, served = served)
+    val server = LiveQueries.startStub(docs, counters = StubCounters(served = served))
     try {
       val got = liveDf(server)
         .where(col("subject").isin("s1", "s3"))
@@ -135,7 +135,7 @@ class EsGroupCountSpec extends SparkTestBase {
   test("a subject equality composes: one bucket, probe-only") {
     val docs = mkDocs(30, 3)
     val served = new java.util.concurrent.atomic.AtomicLong
-    val server = LiveQueries.startStub(docs, served = served)
+    val server = LiveQueries.startStub(docs, counters = StubCounters(served = served))
     try {
       val got = liveDf(server)
         .where(col("subject") === "s1")

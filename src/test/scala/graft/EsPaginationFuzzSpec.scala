@@ -6,6 +6,7 @@ import com.fasterxml.jackson.databind.ObjectMapper
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.queries.LiveQueries.{startStub, StubCounters, StubModes}
 import graft.sources.PaginationFuzz
 import graft.sources.PaginationFuzz.{Base, FDoc}
 
@@ -30,6 +31,11 @@ import graft.sources.PaginationFuzz.{Base, FDoc}
 class EsPaginationFuzzSpec extends AnyFunSuite {
 
   private val mapper = new ObjectMapper()
+
+  /** The ES double over `docs`, logging every `_search` body to `requests`. */
+  private def serve(docs: Seq[FDoc], modes: StubModes,
+      requests: ConcurrentLinkedQueue[String] = new ConcurrentLinkedQueue[String]()) =
+    startStub(docs.map(_.stub).toIndexedSeq, modes, StubCounters(requests = Some(requests)))
 
   test("fuzz: exactly-once delivery under ties, windows, halving and tie drains (seeded)") {
     PaginationFuzz.run(seed = 20260815L, trials = 40)
@@ -58,7 +64,7 @@ class EsPaginationFuzzSpec extends AnyFunSuite {
       }
       val batch = 1 + rnd.nextInt(8)
       val cap = 1 + rnd.nextInt(12) // often far below the tie width
-      val server = PaginationFuzz.serve(docs, cap)
+      val server = serve(docs, StubModes(sizeCap = cap))
       try {
         val got = PaginationFuzz.drain(server, batch, 0L, Base + 10000000L)
         assert(got.sorted === got.distinct.sorted, s"trial $trial: duplicates")
@@ -75,7 +81,7 @@ class EsPaginationFuzzSpec extends AnyFunSuite {
     // search_after needed, reference-shaped requests only
     val docs = (0 until 10).map(i => FDoc(f"t$i%02d", Some(Base), Base))
     val requests = new ConcurrentLinkedQueue[String]()
-    val server = PaginationFuzz.serve(docs, cap = 20, requests)
+    val server = serve(docs, StubModes(sizeCap = 20), requests)
     try {
       val got = PaginationFuzz.drain(server, 8, 0L, Base + 1000L)
       assert(got.toSet === docs.map(_.id).toSet)
@@ -92,7 +98,7 @@ class EsPaginationFuzzSpec extends AnyFunSuite {
     // bounded total traffic instead of O(tie²/cap) re-serves
     val docs = (0 until 10).map(i => FDoc(f"t$i%02d", Some(Base), Base))
     val requests = new ConcurrentLinkedQueue[String]()
-    val server = PaginationFuzz.serve(docs, cap = 12, requests)
+    val server = serve(docs, StubModes(sizeCap = 12), requests)
     try {
       val got = PaginationFuzz.drain(server, 8, 0L, Base + 1000L)
       assert(got.toSet === docs.map(_.id).toSet)
@@ -113,7 +119,7 @@ class EsPaginationFuzzSpec extends AnyFunSuite {
     // the drain requests carrying the declared grammar
     val docs = (0 until 10).map(i => FDoc(f"t$i%02d", Some(Base), Base))
     val requests = new ConcurrentLinkedQueue[String]()
-    val server = PaginationFuzz.serve(docs, cap = 5, requests)
+    val server = serve(docs, StubModes(sizeCap = 5), requests)
     try {
       val got = PaginationFuzz.drain(server, 5, 0L, Base + 1000L)
       assert(got.toSet === docs.map(_.id).toSet, s"got ${got.size}/10")
@@ -142,7 +148,7 @@ class EsPaginationFuzzSpec extends AnyFunSuite {
     // and lose the decodable tail
     val docs = (0 until 12).map(i =>
       FDoc(f"t$i%02d", Some(Base), Base, sourceless = i % 4 == 3))
-    val server = PaginationFuzz.serve(docs, cap = 5)
+    val server = serve(docs, StubModes(sizeCap = 5))
     try {
       val got = PaginationFuzz.drain(server, 5, 0L, Base + 1000L)
       assert(got.toSet === docs.filterNot(_.sourceless).map(_.id).toSet,
@@ -162,7 +168,7 @@ class EsPaginationFuzzSpec extends AnyFunSuite {
       FDoc("top", Some(Base + 5000), Base + 5000, sourceless = true)) ++
       (0 until 7).map(i => FDoc(f"d$i%02d", Some(Base + i * 500L), Base + i * 500L))
     val requests = new ConcurrentLinkedQueue[String]()
-    val server = PaginationFuzz.serve(docs, cap = 1, requests)
+    val server = serve(docs, StubModes(sizeCap = 1), requests)
     try {
       val got = PaginationFuzz.drain(server, 1, 0L, Base + 10000L)
       assert(got.toSet === docs.filterNot(_.sourceless).map(_.id).toSet,
@@ -189,7 +195,7 @@ class EsPaginationFuzzSpec extends AnyFunSuite {
     // and cursor-paged on the hit's own sort values
     val docs = (0 until 30).map(i => FDoc(f"p$i%02d", Some(Base), Base))
     val requests = new ConcurrentLinkedQueue[String]()
-    val server = PaginationFuzz.serve(docs, cap = 5, requests, pitMode = true)
+    val server = serve(docs, StubModes(sizeCap = 5, pitMode = true), requests)
     try {
       val got = PaginationFuzz.drain(server, 5, 0L, Base + 1000L)
       assert(got.toSet === docs.map(_.id).toSet, s"got ${got.size}/30")
@@ -214,7 +220,7 @@ class EsPaginationFuzzSpec extends AnyFunSuite {
   test("without PIT support (404) the drain falls back to the _id grammar") {
     val docs = (0 until 20).map(i => FDoc(f"q$i%02d", Some(Base), Base))
     val requests = new ConcurrentLinkedQueue[String]()
-    val server = PaginationFuzz.serve(docs, cap = 4, requests, pitMode = false)
+    val server = serve(docs, StubModes(sizeCap = 4, pitMode = false), requests)
     try {
       val got = PaginationFuzz.drain(server, 4, 0L, Base + 1000L)
       assert(got.toSet === docs.map(_.id).toSet)
@@ -237,7 +243,7 @@ class EsPaginationFuzzSpec extends AnyFunSuite {
       FDoc("bad", None, Base + 2000),
       FDoc("z1", Some(Base + 1000), Base + 1000),
       FDoc("z2", Some(Base), Base))
-    val server = PaginationFuzz.serve(docs, cap = 100)
+    val server = serve(docs, StubModes(sizeCap = 100))
     try {
       val got = PaginationFuzz.drain(server, 4, 0L, Base + 10000L)
       assert(got === Seq("a1", "a2", "a3", "bad"),

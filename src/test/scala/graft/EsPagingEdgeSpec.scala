@@ -1,12 +1,13 @@
 package graft
 
-import java.nio.charset.StandardCharsets
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
+import com.sun.net.httpserver.HttpServer
 
 import org.apache.spark.sql.functions._
+
+import graft.queries.LiveQueries.{startStub, statusJson, StubCounters, StubDoc, StubModes}
 
 /** Edge protocol behaviors of the live ES page loop (ADVICE r13):
   *
@@ -26,92 +27,20 @@ class EsPagingEdgeSpec extends SparkTestBase {
 
   private val mapper = new ObjectMapper()
 
-  private case class Doc(id: String, subject: String, timeMs: Long,
-      sourceless: Boolean = false) {
-    def json: String =
-      s"""{"id":"$id","subject":"$subject","source":"dimo/integration/live",""" +
-        s""""specversion":"1.0","time":"${java.time.Instant.ofEpochMilli(timeMs)}",""" +
-        s""""dataschema":"dimo.zone.status/v2.0","type":"com.dimo.device.status",""" +
-        s""""data":{}}"""
-  }
-
-  /** `_search` stub speaking BOTH page grammars (time-desc window pages
-    * and the `_id`-asc `search_after` drain), with a configurable
-    * over-size rejection: `windowError = true` answers like a real ES's
-    * max_result_window (400, "Result window is too large"), `false` like
-    * the circuit breaker (500, "Data too large"). A `sourceless` doc's
-    * hit carries no `_source` at all (stored-fields/_source-disabled
-    * responses).
+  /** A status doc at `timeMs`; a `sourceless` one's hit carries no
+    * `_source` (stored-fields/_source-disabled responses).
     */
-  private def startStub(docs: Seq[Doc], requests: ConcurrentLinkedQueue[String],
-      sizeCap: Int = Int.MaxValue, windowError: Boolean = false): HttpServer = {
-    val server = graft.queries.LiveQueries.loopbackServer()
-    server.createContext("/", new HttpHandler {
-      override def handle(ex: HttpExchange): Unit = try handle0(ex) catch {
-        case e: Throwable => System.err.println(s"STUB HANDLER THREW: $e"); throw e
-      }
-      private def handle0(ex: HttpExchange): Unit = {
-        if (ex.getRequestURI.getPath.endsWith("/_pit")) {
-          // no point-in-time support here: the drain must fall back to
-          // the `_id` grammar (404 is the clean probe answer)
-          ex.getRequestBody.readAllBytes()
-          ex.sendResponseHeaders(404, -1)
-          ex.close()
-          return
-        }
-        val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-        requests.add(body)
-        val req = mapper.readTree(body)
-        val size = req.path("size").asInt(10)
-        if (size > sizeCap) {
-          val (code, err) =
-            if (windowError)
-              (400, """{"error":{"type":"illegal_argument_exception","reason":""" +
-                s""""Result window is too large, from + size must be less than or equal to: [$sizeCap]"}}""")
-            else (500, """{"error":"circuit_breaking_exception: Data too large"}""")
-          val bytes = err.getBytes(StandardCharsets.UTF_8)
-          ex.sendResponseHeaders(code, bytes.length)
-          ex.getResponseBody.write(bytes)
-          ex.close(); return
-        }
-        var subject: Option[String] = None
-        var gte: Option[Long] = None
-        var lt: Option[Long] = None
-        req.path("query").path("bool").path("filter").forEach { f =>
-          val m = f.path("match").path("subject").path("query")
-          if (m.isTextual) subject = Some(m.asText())
-          val r = f.path("range").path("time")
-          if (r.has("gte")) gte = Some(r.get("gte").asText().toLong)
-          if (r.has("lt")) lt = Some(r.get("lt").asText().toLong)
-        }
-        val idSort = req.path("sort").size() > 0 && req.path("sort").get(0).has("_id")
-        val after = Option(req.get("search_after")).filter(_.isArray).map(_.get(0).asText())
-        val matched = docs.filter(d => subject.forall(_ == d.subject) &&
-          gte.forall(d.timeMs >= _) && lt.forall(d.timeMs < _))
-        val ordered =
-          if (idSort) matched.sortBy(_.id).filter(d => after.forall(d.id > _))
-          else matched.sortBy(d => (-d.timeMs, d.id))
-        if (size == 0) {
-          val res = s"""{"hits":{"total":{"value":${matched.length},"relation":"eq"},"hits":[]}}"""
-          val bytes = res.getBytes(StandardCharsets.UTF_8)
-          ex.sendResponseHeaders(200, bytes.length)
-          ex.getResponseBody.write(bytes)
-          ex.close(); return
-        }
-        val hits = ordered.take(size).map { d =>
-          if (d.sourceless) s"""{"_index":"device-status","_id":"${d.id}"}"""
-          else s"""{"_index":"device-status","_id":"${d.id}","_source":${d.json}}"""
-        }
-        val res = s"""{"hits":{"hits":[${hits.mkString(",")}]}}"""
-        val bytes = res.getBytes(StandardCharsets.UTF_8)
-        ex.sendResponseHeaders(200, bytes.length)
-        ex.getResponseBody.write(bytes)
-        ex.close()
-      }
-    })
-    server.start()
-    server
-  }
+  private def doc(id: String, subject: String, timeMs: Long,
+      sourceless: Boolean = false): StubDoc =
+    StubDoc(id, subject, timeMs * 1000L, statusJson(id, subject, timeMs * 1000L, "v2.0", "{}"),
+      sourceless = sourceless)
+
+  /** The ES double over `docs` (no point-in-time API, so drains ride the
+    * `_id` grammar), logging every `_search` body to `requests`.
+    */
+  private def serve(docs: Seq[StubDoc], requests: ConcurrentLinkedQueue[String],
+      modes: StubModes = StubModes()): HttpServer =
+    startStub(docs.toIndexedSeq, modes, StubCounters(requests = Some(requests)))
 
   private def liveDf(server: HttpServer, batchSize: Int) =
     spark.read.format("graft-status-live")
@@ -120,9 +49,9 @@ class EsPagingEdgeSpec extends SparkTestBase {
       .load()
 
   test("max_result_window rejection halves like the circuit breaker (no tie run)") {
-    val docs = (0 until 30).map(i => Doc(s"w$i", "s0", 1704000000000L + i * 1000L))
+    val docs = (0 until 30).map(i => doc(s"w$i", "s0", 1704000000000L + i * 1000L))
     val requests = new ConcurrentLinkedQueue[String]()
-    val server = startStub(docs, requests, sizeCap = 8, windowError = true)
+    val server = serve(docs, requests, StubModes(sizeCap = 8, windowError = true))
     try {
       val got = liveDf(server, batchSize = 64).where(col("subject") === "s0")
         .select("id").collect().map(_.getString(0)).toSet
@@ -138,9 +67,9 @@ class EsPagingEdgeSpec extends SparkTestBase {
     // 30 docs on one tied millisecond, window capped at 10: the widen
     // cycle (10 → 20) is REJECTED with the window error, not the breaker —
     // the drain must still engage and deliver all 30 exactly once
-    val docs = (0 until 30).map(i => Doc(f"t$i%03d", "s0", 1704000000000L))
+    val docs = (0 until 30).map(i => doc(f"t$i%03d", "s0", 1704000000000L))
     val requests = new ConcurrentLinkedQueue[String]()
-    val server = startStub(docs, requests, sizeCap = 10, windowError = true)
+    val server = serve(docs, requests, StubModes(sizeCap = 10, windowError = true))
     try {
       val got = liveDf(server, batchSize = 10).where(col("subject") === "s0")
         .select("id").collect().map(_.getString(0))
@@ -160,9 +89,9 @@ class EsPagingEdgeSpec extends SparkTestBase {
     // page above 10k, so the loop must stop doubling there and drain —
     // pinned by asserting no request ever exceeded MaxWidenSize
     val n = 12000
-    val docs = (0 until n).map(i => Doc(f"b$i%05d", "s0", 1704000000000L))
+    val docs = (0 until n).map(i => doc(f"b$i%05d", "s0", 1704000000000L))
     val requests = new ConcurrentLinkedQueue[String]()
-    val server = startStub(docs, requests)
+    val server = serve(docs, requests)
     try {
       val got = liveDf(server, batchSize = 500).where(col("subject") === "s0")
         .select("id").collect().map(_.getString(0))
@@ -183,10 +112,10 @@ class EsPagingEdgeSpec extends SparkTestBase {
     // 20 timed docs + one sourceless hit landing inside the first page of
     // 5: post-filter counting would read 4 < 5 ⇒ "window exhausted" and
     // silently lose the 15 older docs. Raw counting keeps paging.
-    val timed = (0 until 20).map(i => Doc(f"s$i%02d", "s0", 1704000000000L + i * 1000L))
-    val odd = Doc("zz-nosource", "s0", 1704000000000L + 17500L, sourceless = true)
+    val timed = (0 until 20).map(i => doc(f"s$i%02d", "s0", 1704000000000L + i * 1000L))
+    val odd = doc("zz-nosource", "s0", 1704000000000L + 17500L, sourceless = true)
     val requests = new ConcurrentLinkedQueue[String]()
-    val server = startStub(timed :+ odd, requests)
+    val server = serve(timed :+ odd, requests)
     try {
       val got = liveDf(server, batchSize = 5).where(col("subject") === "s0")
         .select("id").collect().map(_.getString(0)).toSet

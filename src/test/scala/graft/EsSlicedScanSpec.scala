@@ -4,7 +4,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import org.apache.spark.sql.functions._
 
-import graft.queries.LiveQueries.StubDoc
+import graft.queries.LiveQueries.{startStub, StubCounters, StubDoc, StubModes}
 
 /** The PARALLEL whole-window live ES scan (`slices` option): an
   * unfiltered full-index read used to be ONE sequential page loop (the
@@ -50,8 +50,8 @@ class EsSlicedScanSpec extends SparkTestBase {
     val served = new java.util.concurrent.atomic.AtomicLong
     val sliceSeen = new ConcurrentLinkedQueue[Int]()
     val pitOpened = new java.util.concurrent.atomic.AtomicLong
-    val server = graft.queries.LiveQueries.startStub(docs, pitMode = true,
-      served = served, sliceSeen = sliceSeen, pitOpened = pitOpened)
+    val server = startStub(docs, StubModes(pitMode = true),
+      StubCounters(served = served, sliceSeen = sliceSeen, pitOpened = pitOpened))
     try {
       val live = spark.read.format("graft-status-live")
         .option("url", url(server)).option("batchSize", "64")
@@ -84,8 +84,8 @@ class EsSlicedScanSpec extends SparkTestBase {
     // sliced plan proceeds against the recovered server.
     val docs = corpus(300)
     val served = new java.util.concurrent.atomic.AtomicLong
-    val server = graft.queries.LiveQueries.startStub(docs, pitMode = true,
-      served = served, pitTransientFailures = 1)
+    val server = startStub(docs, StubModes(pitMode = true, pitTransientFailures = 1),
+      StubCounters(served = served))
     try {
       val live = spark.read.format("graft-status-live")
         .option("url", url(server)).option("batchSize", "64")
@@ -100,7 +100,7 @@ class EsSlicedScanSpec extends SparkTestBase {
   test("pushed time window and LIMIT apply inside every slice request") {
     val docs = corpus(400)
     val served = new java.util.concurrent.atomic.AtomicLong
-    val server = graft.queries.LiveQueries.startStub(docs, pitMode = true, served = served)
+    val server = startStub(docs, StubModes(pitMode = true), StubCounters(served = served))
     try {
       val live = spark.read.format("graft-status-live")
         .option("url", url(server)).option("batchSize", "64")
@@ -127,8 +127,8 @@ class EsSlicedScanSpec extends SparkTestBase {
     // decision is still the DRIVER's, baked into the plan
     val docs = corpus(300)
     val sliceSeen = new ConcurrentLinkedQueue[Int]()
-    val server = graft.queries.LiveQueries.startStub(docs, pitMode = false,
-      sliceSeen = sliceSeen)
+    val server = startStub(docs, StubModes(pitMode = false),
+      StubCounters(sliceSeen = sliceSeen))
     try {
       val live = spark.read.format("graft-status-live")
         .option("url", url(server)).option("batchSize", "64")
@@ -155,8 +155,8 @@ class EsSlicedScanSpec extends SparkTestBase {
   test("a PIT-less server WITHOUT percentiles degrades to the sequential loop at planning") {
     val docs = corpus(300)
     val sliceSeen = new ConcurrentLinkedQueue[Int]()
-    val server = graft.queries.LiveQueries.startStub(docs, pitMode = false,
-      sliceSeen = sliceSeen, timeCutsMode = false)
+    val server = startStub(docs, StubModes(pitMode = false, timeCutsMode = false),
+      StubCounters(sliceSeen = sliceSeen))
     try {
       val live = spark.read.format("graft-status-live")
         .option("url", url(server)).option("batchSize", "64")
@@ -195,8 +195,8 @@ class EsSlicedScanSpec extends SparkTestBase {
     val docs: IndexedSeq[StubDoc] = (0 until 400).map(doc("hot", _)) ++
       (0 until 5).flatMap(s => (0 until 20).map(doc(s"c$s", _)))
     val sliceSeen = new ConcurrentLinkedQueue[Int]()
-    val server = graft.queries.LiveQueries.startStub(docs, pitMode = false,
-      sliceSeen = sliceSeen)
+    val server = startStub(docs, StubModes(pitMode = false),
+      StubCounters(sliceSeen = sliceSeen))
     try {
       val subjects = "hot" +: (0 until 5).map(i => s"c$i")
       val live = spark.read.format("graft-status-live")
@@ -242,9 +242,9 @@ class EsSlicedScanSpec extends SparkTestBase {
     for (msearch <- Seq(true, false)) {
       val sliceSeen = new ConcurrentLinkedQueue[Int]()
       val msearchRequests = new java.util.concurrent.atomic.AtomicLong
-      val server = graft.queries.LiveQueries.startStub(docs, pitMode = false,
-        sliceSeen = sliceSeen, msearchMode = msearch,
-        msearchRequests = msearchRequests)
+      val server = startStub(docs, StubModes(pitMode = false, msearchMode = msearch),
+        StubCounters(sliceSeen = sliceSeen,
+        msearchRequests = msearchRequests))
       try {
         val subjects = whales ++ (0 until 3).map(i => s"c$i")
         val live = spark.read.format("graft-status-live")
@@ -278,8 +278,8 @@ class EsSlicedScanSpec extends SparkTestBase {
     val sliceSeen = new ConcurrentLinkedQueue[Int]()
     val pitOpened = new java.util.concurrent.atomic.AtomicLong
     val pitClosedIds = new ConcurrentLinkedQueue[String]()
-    val server = graft.queries.LiveQueries.startStub(docs, pitMode = true,
-      sliceSeen = sliceSeen, pitOpened = pitOpened, pitClosedIds = pitClosedIds)
+    val server = startStub(docs, StubModes(pitMode = true),
+      StubCounters(sliceSeen = sliceSeen, pitOpened = pitOpened, pitClosedIds = pitClosedIds))
     try {
       val q = spark.readStream.format("graft-status-live")
         .option("url", url(server)).option("batchSize", "64")
@@ -326,8 +326,8 @@ class EsSlicedScanSpec extends SparkTestBase {
     val sliceSeen = new ConcurrentLinkedQueue[Int]()
     val pitOpened = new java.util.concurrent.atomic.AtomicLong
     val slicedSubjects = new ConcurrentLinkedQueue[String]()
-    val server = graft.queries.LiveQueries.startStub(docs, pitMode = true,
-      sliceSeen = sliceSeen, pitOpened = pitOpened, slicedSubjects = slicedSubjects)
+    val server = startStub(docs, StubModes(pitMode = true),
+      StubCounters(sliceSeen = sliceSeen, pitOpened = pitOpened, slicedSubjects = slicedSubjects))
     try {
       val subjects = "hot" +: (0 until 5).map(i => s"c$i")
       val live = spark.read.format("graft-status-live")
@@ -366,7 +366,7 @@ class EsSlicedScanSpec extends SparkTestBase {
     }
     val docs: IndexedSeq[StubDoc] =
       depths.flatMap { case (s, n) => (0 until n).map(doc(s, _)) }.toIndexedSeq
-    val server = graft.queries.LiveQueries.startStub(docs, pitMode = true)
+    val server = startStub(docs, StubModes(pitMode = true))
     try {
       val scan = new graft.sources.StatusLiveScan(url(server), "device-status", 64,
         0L, graft.sources.StatusLiveSource.DefaultStopMs, None, Map.empty,
@@ -395,9 +395,9 @@ class EsSlicedScanSpec extends SparkTestBase {
     val servedSliced = new java.util.concurrent.atomic.AtomicLong
     val pitClosedIds = new ConcurrentLinkedQueue[String]()
     val servedAtClose = new java.util.concurrent.atomic.AtomicLong(-1)
-    val server = graft.queries.LiveQueries.startStub(docs, pitMode = true,
-      servedSliced = servedSliced, pitClosedIds = pitClosedIds,
-      servedSlicedAtFirstClose = servedAtClose)
+    val server = startStub(docs, StubModes(pitMode = true),
+      StubCounters(servedSliced = servedSliced, pitClosedIds = pitClosedIds,
+      servedSlicedAtFirstClose = servedAtClose))
     try {
       val ds = spark.read.format("graft-status-live")
         .option("url", url(server)).option("batchSize", "64")
@@ -430,8 +430,8 @@ class EsSlicedScanSpec extends SparkTestBase {
     // so the contract is a loud, actionable failure — never wrong rows.
     val docs = corpus(200)
     val pitClosedIds = new ConcurrentLinkedQueue[String]()
-    val server = graft.queries.LiveQueries.startStub(docs, pitMode = true,
-      pitClosedIds = pitClosedIds)
+    val server = startStub(docs, StubModes(pitMode = true),
+      StubCounters(pitClosedIds = pitClosedIds))
     try {
       val ds = spark.read.format("graft-status-live")
         .option("url", url(server)).option("batchSize", "64")
@@ -457,8 +457,8 @@ class EsSlicedScanSpec extends SparkTestBase {
     // stream stop() still release
     val docs = corpus(200)
     val pitClosedIds = new ConcurrentLinkedQueue[String]()
-    val server = graft.queries.LiveQueries.startStub(docs, pitMode = true,
-      pitClosedIds = pitClosedIds)
+    val server = startStub(docs, StubModes(pitMode = true),
+      StubCounters(pitClosedIds = pitClosedIds))
     try {
       val ds = spark.read.format("graft-status-live")
         .option("url", url(server)).option("batchSize", "64")
@@ -482,8 +482,8 @@ class EsSlicedScanSpec extends SparkTestBase {
     val docs = corpus(240)
     val pitOpened = new java.util.concurrent.atomic.AtomicLong
     val pitClosedIds = new ConcurrentLinkedQueue[String]()
-    val server = graft.queries.LiveQueries.startStub(docs, pitMode = true,
-      pitOpened = pitOpened, pitClosedIds = pitClosedIds)
+    val server = startStub(docs, StubModes(pitMode = true),
+      StubCounters(pitOpened = pitOpened, pitClosedIds = pitClosedIds))
     try {
       val q = spark.readStream.format("graft-status-live")
         .option("url", url(server)).option("batchSize", "64")
@@ -516,8 +516,8 @@ class EsSlicedScanSpec extends SparkTestBase {
     val docs = corpus(200)
     val pitOpened = new java.util.concurrent.atomic.AtomicLong
     val pitClosedIds = new ConcurrentLinkedQueue[String]()
-    val server = graft.queries.LiveQueries.startStub(docs, pitMode = true,
-      pitOpened = pitOpened, pitClosedIds = pitClosedIds)
+    val server = startStub(docs, StubModes(pitMode = true),
+      StubCounters(pitOpened = pitOpened, pitClosedIds = pitClosedIds))
     try {
       val props = new java.util.HashMap[String, String]()
       props.put("url", url(server))
@@ -565,7 +565,7 @@ class EsSlicedScanSpec extends SparkTestBase {
 
   test("subject fan-out and DESC top-K keep their own plans (slices never apply)") {
     val docs = corpus(200)
-    val server = graft.queries.LiveQueries.startStub(docs, pitMode = true)
+    val server = startStub(docs, StubModes(pitMode = true))
     try {
       val live = spark.read.format("graft-status-live")
         .option("url", url(server)).option("batchSize", "64")

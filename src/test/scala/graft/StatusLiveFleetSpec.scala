@@ -5,6 +5,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import org.apache.spark.sql.functions._
 
+import graft.queries.LiveQueries.{startStub, StubCounters, StubModes}
 import graft.sources.{StatusLivePartition, StatusLiveScan, StatusLiveSource, StatusV2Source}
 
 /** Fleet-scale transport for the live sync's per-token state: the subject
@@ -74,7 +75,7 @@ class StatusLiveFleetSpec extends SparkTestBase {
     val corpus = docs.map { case (id, s, ms) =>
       graft.queries.LiveQueries.StubDoc(id, s, ms * 1000L, doc(id, s, ms))
     }.toIndexedSeq
-    val server = graft.queries.LiveQueries.startStub(corpus)
+    val server = startStub(corpus)
     try {
       val subjFile = Files.createTempFile("graft-subjects", ".txt").toString
       val stopsFile = Files.createTempFile("graft-stops", ".json").toString
@@ -181,8 +182,8 @@ class StatusLiveFleetSpec extends SparkTestBase {
     try {
       val sliceSeen = new ConcurrentLinkedQueue[Int]()
       val slicedSubjects = new ConcurrentLinkedQueue[String]()
-      val s1 = graft.queries.LiveQueries.startStub(newer.toIndexedSeq, pitMode = true,
-        sliceSeen = sliceSeen, slicedSubjects = slicedSubjects)
+      val s1 = startStub(newer.toIndexedSeq, StubModes(pitMode = true),
+        StubCounters(sliceSeen = sliceSeen, slicedSubjects = slicedSubjects))
       val sink1 = try {
         graft.jobs.SyncJob.runLiveRanged(spark,
           s"http://127.0.0.1:${s1.getAddress.getPort}", dim, None, opts,
@@ -197,8 +198,7 @@ class StatusLiveFleetSpec extends SparkTestBase {
       assert(Files.list(staging).iterator().asScala.nonEmpty,
         "runLiveRanged must not delete caller-owned staging")
       // round 2 over everything resumes below the per-token watermarks
-      val s2 = graft.queries.LiveQueries.startStub((newer ++ older).toIndexedSeq,
-        pitMode = true)
+      val s2 = startStub((newer ++ older).toIndexedSeq, StubModes(pitMode = true))
       val round2 = try {
         graft.jobs.SyncJob.runLiveRanged(spark,
           s"http://127.0.0.1:${s2.getAddress.getPort}", dim, Some(sink1), opts,
@@ -243,8 +243,8 @@ class StatusLiveFleetSpec extends SparkTestBase {
     val staging = Files.createTempDirectory("graft-hotmin-staging")
     try {
       val sliced1 = new ConcurrentLinkedQueue[String]()
-      val s1 = graft.queries.LiveQueries.startStub(newer.toIndexedSeq, pitMode = true,
-        slicedSubjects = sliced1)
+      val s1 = startStub(newer.toIndexedSeq, StubModes(pitMode = true),
+        StubCounters(slicedSubjects = sliced1))
       val sink1 = try {
         graft.jobs.SyncJob.runLiveRanged(spark,
           s"http://127.0.0.1:${s1.getAddress.getPort}", dim, None, opts,
@@ -255,8 +255,8 @@ class StatusLiveFleetSpec extends SparkTestBase {
       import scala.jdk.CollectionConverters._
       assert(sliced1.isEmpty, "no sink yet: nothing to discover, plain ranged tiles")
       val sliced2 = new ConcurrentLinkedQueue[String]()
-      val s2 = graft.queries.LiveQueries.startStub((newer ++ older).toIndexedSeq,
-        pitMode = true, slicedSubjects = sliced2)
+      val s2 = startStub((newer ++ older).toIndexedSeq,
+        StubModes(pitMode = true), StubCounters(slicedSubjects = sliced2))
       val round2 = try {
         graft.jobs.SyncJob.runLiveRanged(spark,
           s"http://127.0.0.1:${s2.getAddress.getPort}", dim, Some(sink1), opts,
@@ -297,7 +297,7 @@ class StatusLiveFleetSpec extends SparkTestBase {
     val dim = graft.sources.DeviceDim.identityDim(spark, Seq(1L, 2L, 3L))
     val staging = Files.createTempDirectory("graft-weighted-staging")
     try {
-      val s1 = graft.queries.LiveQueries.startStub(newer, pitMode = true)
+      val s1 = startStub(newer, StubModes(pitMode = true))
       val sink1 = try {
         graft.jobs.SyncJob.runLiveRanged(spark,
           s"http://127.0.0.1:${s1.getAddress.getPort}", dim, None, opts,
@@ -307,7 +307,7 @@ class StatusLiveFleetSpec extends SparkTestBase {
       assert(sink1.count() === (12 + 2) * 2)
       assert(!Files.isDirectory(staging.resolve("weights")),
         "round 1 has no sink — nothing to weigh")
-      val s2 = graft.queries.LiveQueries.startStub(newer ++ older, pitMode = true)
+      val s2 = startStub(newer ++ older, StubModes(pitMode = true))
       val round2 = try {
         graft.jobs.SyncJob.runLiveRanged(spark,
           s"http://127.0.0.1:${s2.getAddress.getPort}", dim, Some(sink1), opts,
@@ -373,7 +373,7 @@ class StatusLiveFleetSpec extends SparkTestBase {
       stop = Some(new java.sql.Timestamp(9999999999999L)))
     val staging = Files.createTempDirectory("graft-alias-staging")
     try {
-      val server = graft.queries.LiveQueries.startStub(corpus, pitMode = true)
+      val server = startStub(corpus, StubModes(pitMode = true))
       val out = try {
         graft.jobs.SyncJob.runLiveRanged(spark,
           s"http://127.0.0.1:${server.getAddress.getPort}", dim, Some(sink1), opts,
@@ -452,7 +452,7 @@ class StatusLiveFleetSpec extends SparkTestBase {
     val want = Map(1L -> 2L, 2L -> 4L, 3L -> 2L)
     val staging = Files.createTempDirectory("graft-sinkless-staging")
     try {
-      val s1 = graft.queries.LiveQueries.startStub(corpus, pitMode = true)
+      val s1 = startStub(corpus, StubModes(pitMode = true))
       val ranged = try {
         graft.jobs.SyncJob.runLiveRanged(spark,
           s"http://127.0.0.1:${s1.getAddress.getPort}", dim, Some(sink1), opts,
@@ -467,7 +467,7 @@ class StatusLiveFleetSpec extends SparkTestBase {
       assert(perToken(ranged) === want,
         s"the sinkless alias must receive the full window: ${perToken(ranged)}")
       // the small-fleet entry (runLive, inline-stops branch) must agree
-      val s2 = graft.queries.LiveQueries.startStub(corpus, pitMode = true)
+      val s2 = startStub(corpus, StubModes(pitMode = true))
       val small = try {
         graft.jobs.SyncJob.runLive(spark,
           s"http://127.0.0.1:${s2.getAddress.getPort}", dim, Some(sink1), opts)
@@ -538,7 +538,7 @@ class StatusLiveFleetSpec extends SparkTestBase {
       }.toSet
       val staging = Files.createTempDirectory(s"graft-aliasfuzz-$trial")
       try {
-        val server = graft.queries.LiveQueries.startStub(corpus, pitMode = true)
+        val server = startStub(corpus, StubModes(pitMode = true))
         val out = try {
           graft.jobs.SyncJob.runLiveRanged(spark,
             s"http://127.0.0.1:${server.getAddress.getPort}", dim, Some(sink), opts,
@@ -612,8 +612,8 @@ class StatusLiveFleetSpec extends SparkTestBase {
     val dim = graft.sources.DeviceDim.identityDim(spark, Seq(1L, 2L, 3L))
     val sliceSeen = new ConcurrentLinkedQueue[Int]()
     val slicedSubjects = new ConcurrentLinkedQueue[String]()
-    val server = graft.queries.LiveQueries.startStub(docs, pitMode = true,
-      sliceSeen = sliceSeen, slicedSubjects = slicedSubjects)
+    val server = startStub(docs, StubModes(pitMode = true),
+      StubCounters(sliceSeen = sliceSeen, slicedSubjects = slicedSubjects))
     try {
       val out = graft.jobs.SyncJob.runLive(spark,
         s"http://127.0.0.1:${server.getAddress.getPort}", dim, None, opts,
@@ -666,14 +666,14 @@ class StatusLiveFleetSpec extends SparkTestBase {
     val dim = graft.sources.DeviceDim.identityDim(spark, Seq(1L, 2L, 3L))
     // round 1 (newer only), then round 2 over everything: path mode
     // (threshold 0 forces it) must fetch ONLY the older backfill
-    val s1 = graft.queries.LiveQueries.startStub(newer.toIndexedSeq)
+    val s1 = startStub(newer.toIndexedSeq)
     val sink1 = try {
       graft.jobs.SyncJob.runLive(spark,
         s"http://127.0.0.1:${s1.getAddress.getPort}", dim, None, opts,
         pathModeThreshold = 0).localCheckpoint(true)
     } finally s1.stop(0)
     assert(sink1.count() === 3 * 2, "2 signals per doc, newer docs only")
-    val s2 = graft.queries.LiveQueries.startStub((newer ++ older).toIndexedSeq)
+    val s2 = startStub((newer ++ older).toIndexedSeq)
     val round2 = try {
       graft.jobs.SyncJob.runLive(spark,
         s"http://127.0.0.1:${s2.getAddress.getPort}", dim, Some(sink1), opts,

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.queries.LiveQueries.StubDoc
+import graft.queries.LiveQueries.{startStub, StubCounters, StubDoc, StubModes}
 import graft.sources.{RangedCensus, StatusLiveRangedPartition, StatusLiveSource}
 
 /** The O(groups) RANGED census plan (`censusRanges` option) — the
@@ -56,7 +56,7 @@ class StatusLiveRangedSpec extends SparkTestBase {
     val cPath = stage(census)
     val sPath = stage(stops)
     val served = new java.util.concurrent.atomic.AtomicLong
-    val server = graft.queries.LiveQueries.startStub(docs, served = served)
+    val server = startStub(docs, counters = StubCounters(served = served))
     try {
       val live = spark.read.format("graft-status-live")
         .option("url", url(server)).option("batchSize", "50")
@@ -84,7 +84,7 @@ class StatusLiveRangedSpec extends SparkTestBase {
     val cPath = stage(census)
     val sPath = stage(stops)
     val docs: IndexedSeq[StubDoc] = census.map(doc(_, 0)).toIndexedSeq
-    val server = graft.queries.LiveQueries.startStub(docs)
+    val server = startStub(docs)
     try {
       val scan = new graft.sources.StatusLiveScan(url(server), "device-status", 50,
         0L, StatusLiveSource.DefaultStopMs, None, Map.empty,
@@ -124,7 +124,7 @@ class StatusLiveRangedSpec extends SparkTestBase {
     val stops = Seq(s"c2\t${BaseMs + 4000}")
     val cPath = stage(census)
     val sPath = stage(stops)
-    val server = graft.queries.LiveQueries.startStub(docs)
+    val server = startStub(docs)
     try {
       val live = spark.read.format("graft-status-live")
         .option("url", url(server)).option("batchSize", "50")
@@ -171,7 +171,7 @@ class StatusLiveRangedSpec extends SparkTestBase {
         (0 until 5).map(doc("zz", _))).toIndexedSeq // zz: NOT in the census
     val census = (0 until 6).map(s => s"e$s")
     val cPath = stage(census)
-    val server = graft.queries.LiveQueries.startStub(docs)
+    val server = startStub(docs)
     try {
       val q = spark.readStream.format("graft-status-live")
         .option("url", url(server)).option("batchSize", "50")
@@ -281,7 +281,7 @@ class StatusLiveRangedSpec extends SparkTestBase {
     val cPath = stage(census)
     val sPath = stage(stops)
     val served = new java.util.concurrent.atomic.AtomicLong
-    val server = graft.queries.LiveQueries.startStub(docs, served = served)
+    val server = startStub(docs, counters = StubCounters(served = served))
     try {
       val inline = StatusLiveSource.stopsJson(
         Map("a1" -> (BaseMs + 4000), "a3" -> (BaseMs + 2000)))
@@ -420,9 +420,9 @@ class StatusLiveRangedSpec extends SparkTestBase {
     val servedSliced = new java.util.concurrent.atomic.AtomicLong
     val sliceSeen = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
     val slicedSubjects = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val server = graft.queries.LiveQueries.startStub(docs, pitMode = true,
-      served = served, servedSliced = servedSliced, sliceSeen = sliceSeen,
-      slicedSubjects = slicedSubjects)
+    val server = startStub(docs, StubModes(pitMode = true),
+      StubCounters(served = served, servedSliced = servedSliced, sliceSeen = sliceSeen,
+      slicedSubjects = slicedSubjects))
     try {
       val live = spark.read.format("graft-status-live")
         .option("url", url(server)).option("batchSize", "64")
@@ -459,8 +459,8 @@ class StatusLiveRangedSpec extends SparkTestBase {
     val hPath = stage(Seq("hot"))
     val served = new java.util.concurrent.atomic.AtomicLong
     val sliceSeen = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
-    val server = graft.queries.LiveQueries.startStub(docs, pitMode = false,
-      served = served, sliceSeen = sliceSeen, timeCutsMode = false)
+    val server = startStub(docs, StubModes(pitMode = false, timeCutsMode = false),
+      StubCounters(served = served, sliceSeen = sliceSeen))
     try {
       val live = spark.read.format("graft-status-live")
         .option("url", url(server)).option("batchSize", "64")
@@ -483,7 +483,7 @@ class StatusLiveRangedSpec extends SparkTestBase {
     val census = (0 until 4).map(s => s"d$s")
     val cPath = stage(census)
     val hPath = stage(Seq("zz"))
-    val server = graft.queries.LiveQueries.startStub(docs, pitMode = true)
+    val server = startStub(docs, StubModes(pitMode = true))
     try {
       val live = spark.read.format("graft-status-live")
         .option("url", url(server)).option("batchSize", "64")
@@ -715,8 +715,9 @@ class StatusLiveRangedSpec extends SparkTestBase {
       val hPath = stage(hot.toSeq.sorted)
       val wPath = stage(weightLines)
       val served = new java.util.concurrent.atomic.AtomicLong
-      val server = graft.queries.LiveQueries.startStub(docs, pitMode = pitMode,
-        served = served, timeCutsMode = cutsMode, msearchMode = msearch)
+      val server = startStub(docs, StubModes(pitMode = pitMode, timeCutsMode = cutsMode,
+        msearchMode = msearch),
+        StubCounters(served = served))
       try {
         var r = spark.read.format("graft-status-live")
           .option("url", url(server)).option("batchSize", "64")
