@@ -15,6 +15,12 @@ import org.apache.spark.sql.SparkSession
   *     hot-token skew the salting operators don't.
   *   - shuffle partitions = cores locally; on a real cluster set
   *     2-3× total executor cores (or leave AQE coalescing to shrink).
+  *   - partition-discovery parallelism = cores: a directory with more
+  *     than 32 partition subdirectories (the sync store has 64 token
+  *     buckets) is listed by a Spark job, by default one task per
+  *     subdirectory (up to 10,000). Each task lists a few entries, so
+  *     per-task scheduling dominates; one task per core lists the same
+  *     directories.
   *   - 128 MiB file split size: parquet scan granularity that keeps
   *     per-task memory bounded at 100 TB inputs.
   *   - zstd parquet writes: ~30% smaller than snappy at similar CPU —
@@ -29,6 +35,7 @@ object GraftSession {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.sql.sources.parallelPartitionDiscovery.parallelism", cores.toString)
       .config("spark.sql.files.maxPartitionBytes", (128L * 1024 * 1024).toString)
       .config("spark.sql.parquet.compression.codec", "zstd")
       .config("spark.sql.session.timeZone", "UTC")

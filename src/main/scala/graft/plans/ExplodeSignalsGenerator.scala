@@ -1,6 +1,6 @@
 package graft.plans
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.JsonNode
 import graft.schema.{SignalDefinition, SignalDefinitions, ValueKind}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -43,13 +43,11 @@ case class ExplodeSignals(child: Expression, requiredNames: Option[Seq[String]] 
     case other      => TypeCheckResult.TypeCheckFailure(s"explode_signals expects a JSON string, got $other")
   }
 
-  @transient private lazy val mapper = new ObjectMapper()
-
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
     val raw = child.eval(input)
     if (raw == null) return Nil
     val root: JsonNode =
-      try mapper.readTree(raw.toString)
+      try graft.sources.EsQueryDsl.mapper.readTree(raw.toString)
       catch { case _: Exception => return Nil } // bad doc ⇒ zero rows, batch survives
     if (root == null || !root.isObject) return Nil
     defs.flatMap { d =>

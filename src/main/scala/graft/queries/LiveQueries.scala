@@ -209,6 +209,10 @@ object LiveQueries {
     lazy val bySubjectId: Map[String, IndexedSeq[StubDoc]] =
       docs.groupBy(_.subject).view.mapValues(_.sortBy(_.id)).toMap
     lazy val allById = docs.sortBy(_.id)
+    // the sizing and max-time probes answer from the fixed corpus: taken
+    // once here, not by a corpus walk per request
+    val storeBytes = docs.iterator.map(_.json.length.toLong).sum
+    val maxTimeMs = if (docs.isEmpty) "null" else (docs.iterator.map(_.timeUs).max / 1000).toString
     pooledServer("live-es-stub", new HttpHandler {
       override def handle(ex: HttpExchange): Unit = {
         ex.getResponseHeaders.add("Content-Type", "application/json")
@@ -217,9 +221,8 @@ object LiveQueries {
           // the sizing probe (GET {index}/_stats/docs,store): primaries
           // doc count + stored bytes — deterministic from the corpus, and
           // carrying ZERO hits (the served counter must not move)
-          val bytes0 = docs.iterator.map(_.json.length.toLong).sum
           respond(ex, 200, s"""{"_all":{"primaries":{"docs":{"count":${docs.length}},""" +
-            s""""store":{"size_in_bytes":$bytes0}}}}""")
+            s""""store":{"size_in_bytes":$storeBytes}}}}""")
           return
         }
         if (path.endsWith("/_pit")) {
@@ -308,8 +311,8 @@ object LiveQueries {
         }
         if (req.path("aggs").has("max_time")) {
           // the streaming tail's offset probe: size-0 max aggregation
-          val v = if (docs.isEmpty) "null" else (docs.map(_.timeUs).max / 1000).toString
-          respond(ex, 200, s"""{"aggregations":{"max_time":{"value":$v}},"hits":{"hits":[]}}""")
+          respond(ex, 200,
+            s"""{"aggregations":{"max_time":{"value":$maxTimeMs}},"hits":{"hits":[]}}""")
           return
         }
         val size = req.path("size").asInt(10)
@@ -1918,7 +1921,8 @@ object LiveQueries {
               statusJson(s"wc$i", subj, tsu, "v2.0", s"""{"cents":$cents}"""))
           }
         val subjects = docs.map(_.subject).distinct
-        val coldGroups = math.min(64, subjects.length - 1)
+        // the scan's cold-subject cap: two groups per core
+        val coldGroups = math.min(2 * s.sparkContext.defaultParallelism, subjects.length - 1)
         val sliceSeen = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
         val pitOpened = new java.util.concurrent.atomic.AtomicLong
         val server = startStub(docs, StubModes(pitMode = false),

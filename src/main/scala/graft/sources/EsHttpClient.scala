@@ -5,7 +5,7 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets
 import java.time.{Duration, Instant}
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.JsonNode
 
 /** LIVE Elasticsearch client over the JDK HTTP stack — the wire half of
   * the read seam [[EsQueryDsl]] is the request-body half of. Speaks the
@@ -35,8 +35,9 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 private[graft] final class EsHttpClient(baseUrl: String, timeoutMs: Long = 30000,
     wire: LiveWire = LiveWire.default) {
 
+  import EsQueryDsl.mapper
+
   private val http = LiveHttp.newClient(timeoutMs, wire)
-  private val mapper = new ObjectMapper()
 
   /** IOException messages can be null (socket resets commonly are) — a
     * message probe must never NPE over the original transport error.

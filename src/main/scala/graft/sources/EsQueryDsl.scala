@@ -26,7 +26,13 @@ object EsQueryDsl {
     * (elastic.go:70-71). */
   val RootFields: Seq[String] = Seq("subject", "dataschema", "id", "source", "time", "type")
 
-  private val mapper = new ObjectMapper()
+  /** The JVM's one JSON mapper for the live read path: request bodies
+    * here, response trees in [[EsHttpClient]], NDJSON lines in
+    * [[LineDocSource]], signal decode in `explode_signals`. A configured
+    * `ObjectMapper` is thread-safe, and sharing it warms its serializer
+    * and deserializer caches once per JVM instead of once per scan task.
+    */
+  private[graft] val mapper = new ObjectMapper()
 
   private def toMillis(v: Any): Long = v match {
     case t: java.sql.Timestamp => t.getTime

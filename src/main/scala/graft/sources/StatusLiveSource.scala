@@ -37,9 +37,10 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * projection that cannot change the row set), and a scan needing `data`
   * requests full `_source` (reference behavior when no signal filter is
   * configured). Parallelism: with a pushed subject IN-set the scan plans
-  * one partition per GROUP of subjects (≤ 64 tasks) — the reference's
-  * per-token goroutine fan-out (sync.go:60-84 [ext]) as a BOUNDED task
-  * census: a 1000-executor cluster drains device-parallel without turning
+  * one partition per GROUP of subjects (at most 2 × the session's
+  * default parallelism) — the reference's per-token goroutine fan-out
+  * (sync.go:60-84 [ext]) as a BOUNDED task census sized to the cores:
+  * a 1000-executor cluster drains device-parallel without turning
   * a million-device fleet into a million concurrent page loops against
   * the live cluster. A single-subject or unfiltered scan is one task (the
   * reference is sequential there too).
@@ -927,7 +928,7 @@ class StatusLiveScan(url: String, index: String, batchSize: Int,
     stopBySubject: Map[String, Long],
     filters: Array[Filter], required: StructType,
     limit: Int = -1, topN: Int = -1, topNDesc: Boolean = true,
-    maxTasks: Int = 64,
+    maxTasks: Int = StatusLiveScan.defaultMaxTasks,
     census: Option[Seq[String]] = None,
     pushedCount: Option[Long] = None,
     pushedGroupCounts: Option[Seq[(String, Long)]] = None,
@@ -1652,6 +1653,15 @@ class StatusLiveScan(url: String, index: String, batchSize: Int,
 }
 
 private[sources] object StatusLiveScan {
+  /** The cap on cold-subject groups, one task each: 2 × the active
+    * session's default parallelism (its cores, locally) — the Spark form
+    * of the reference's bounded 25-100 worker pool (sync.go:60-84). A
+    * task carries a fixed scheduling and setup cost, so groups past what
+    * the cores run in a wave or two cost more than they balance.
+    */
+  private[sources] def defaultMaxTasks: Int =
+    2 * org.apache.spark.sql.SparkSession.active.sparkContext.defaultParallelism
+
   /** Concurrency cap for planning-time per-subject cut probes
     * ([[StatusLiveScan]] planHotParallel) — hides the wire round trips
     * without stampeding the server.

@@ -3,7 +3,6 @@ package graft.sources
 import java.time.Instant
 import java.util.{Map => JMap}
 
-import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.{NamedReference, SortDirection, Transform, SortOrder => V2SortOrder}
@@ -319,14 +318,13 @@ private[graft] trait DocSource {
   * does not parse is counted and skipped, never fatal).
   */
 private[graft] final class LineDocSource(lines: LineSource) extends DocSource {
-  private val mapper = new ObjectMapper()
   private var bad = 0L
   override def next(): com.fasterxml.jackson.databind.JsonNode = {
     var line = lines.next()
     while (line != null) {
       if (line.nonEmpty) {
         try {
-          val n = mapper.readTree(line)
+          val n = EsQueryDsl.mapper.readTree(line)
           if (n != null) return n
           bad += 1
         } catch { case scala.util.control.NonFatal(_) => bad += 1 }

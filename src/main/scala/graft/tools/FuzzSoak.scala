@@ -7,10 +7,12 @@ package graft.tools
   * line reports the JVM's live thread count.
   *
   * Usage: runMain graft.tools.FuzzSoak [seed] [trials]
+  * With no seed a fresh random one is drawn; the closing line and every
+  * failure name it, so a failing campaign reruns with that seed.
   */
 object FuzzSoak {
   def main(args: Array[String]): Unit = {
-    val seed = args.lift(0).map(_.toLong).getOrElse(19202608L)
+    val seed = args.lift(0).map(_.toLong).getOrElse(new java.security.SecureRandom().nextLong())
     val trials = args.lift(1).map(_.toInt).getOrElse(3000)
     val t0 = System.nanoTime()
     graft.sources.PaginationFuzz.run(seed, trials)

@@ -8,9 +8,10 @@ import graft.queries.LiveQueries.{startStub, statusJson, StubCounters, StubModes
   * synthetic status docs across K subjects served by the in-process
   * `_search` stub, read through the full client stack (`graft-status-live`
   * → EsHttpClient paged loops → NDJSON decode) with the subject census
-  * pushed (≤64 task groups). Reported: docs/s end-to-end and the HTTP
-  * page-count shape. Loopback-only — no socket leaves the machine; the
-  * number bounds protocol + decode overhead, not network.
+  * pushed (≤ 2 × defaultParallelism task groups). Reported: docs/s
+  * end-to-end and the HTTP page-count shape. Loopback-only — no socket
+  * leaves the machine; the number bounds protocol + decode overhead, not
+  * network.
   *
   * Usage: runMain graft.tools.LiveProbe [docs] [subjects] [batchSize]
   */
@@ -58,7 +59,6 @@ object LiveProbe {
       import graft.jobs.{SyncJob, SyncOptions}
       import graft.sources.DeviceDim
       import org.apache.spark.sql.Row
-      import org.apache.spark.sql.types._
       val syncedDocs: IndexedSeq[graft.queries.LiveQueries.StubDoc] =
         (0 until nDocs).map { i =>
           val subj = (i % nSubjects).toString
@@ -71,10 +71,7 @@ object LiveProbe {
       val half = nDocs / 2
       val wmBySubject: Map[String, Long] = (half until half + nSubjects)
         .map(i => (i % nSubjects).toString -> (1704000000000000L + i.toLong * 1000)).toMap
-      val sinkSchema = StructType(Seq(
-        StructField("tokenId", LongType), StructField("timestamp", TimestampType),
-        StructField("name", StringType), StructField("valueNumber", DoubleType),
-        StructField("valueString", StringType), StructField("source", StringType)))
+      val sinkSchema = graft.sources.SignalSink.Schema
       val sink = spark.createDataFrame(
         spark.sparkContext.parallelize(wmBySubject.toSeq.map { case (s, us) =>
           Row(s.toLong, java.sql.Timestamp.from(
@@ -250,8 +247,8 @@ object LiveProbe {
     // ── section 6 (r13): the fleet-scale side-channel — 1M tokens of
     // per-subject watermarks staged to a planner-read file instead of a
     // catalog-property JSON string. Reported: file size (what the OPTION
-    // string would have been), write/read wall, and planning wall into 64
-    // bounded groups carrying exact slices.
+    // string would have been), write/read wall, and planning wall into
+    // 2 × defaultParallelism bounded groups carrying exact slices.
     {
       val nTokens = 1000000
       val subjects = (0 until nTokens).map(i => f"veh$i%07d")
@@ -279,7 +276,7 @@ object LiveProbe {
       val parts = scan.planInputPartitions()
       val wallP = (System.nanoTime() - t0) / 1e9
       val total = parts.map(_.asInstanceOf[graft.sources.StatusLivePartition].subjects.get.length).sum
-      require(total == nTokens && parts.length == 64)
+      require(total == nTokens && parts.length == 2 * spark.sparkContext.defaultParallelism)
       println(f"[liveprobe] fleet side-channel (1M tokens): ${mb}MB staged " +
         f"(the would-be option string), write $wallW%.2f s, plan into ${parts.length} " +
         f"groups $wallP%.2f s — options carry two paths, tasks carry only their slices")

@@ -572,7 +572,10 @@ class EsSlicedScanSpec extends SparkTestBase {
         .option("slices", "4").load()
       val subjects = (0 until 10).map(i => s"s$i")
       val bySubject = live.where(col("subject").isin(subjects: _*))
-      assert(bySubject.rdd.getNumPartitions === 10, "per-subject groups, not slices")
+      // one group per subject up to the cap of two per core; never 4 slices
+      assert(bySubject.rdd.getNumPartitions ===
+        math.min(subjects.size, 2 * spark.sparkContext.defaultParallelism),
+        "per-subject groups, not slices")
       assert(bySubject.count() === docs.count(d => subjects.contains(d.subject)).toLong)
       // DESC top-K: the sequential loop's newest-first early stop reads K
       // docs; a sliced plan would read the whole index for K rows

@@ -33,7 +33,8 @@ class StatusLiveFleetSpec extends SparkTestBase {
 
     // through the real table-resolution path: getTable consumes the
     // staged files EAGERLY (so the caller may delete them after load);
-    // planning is pure (no HTTP): the census fans into ≤64 bounded groups
+    // planning is pure (no HTTP): the census fans into 2 × defaultParallelism
+    // bounded groups
     val props = new java.util.HashMap[String, String]()
     props.put("url", "http://127.0.0.1:9")
     props.put("subjectsPath", subjFile)
@@ -48,7 +49,8 @@ class StatusLiveFleetSpec extends SparkTestBase {
     java.nio.file.Files.delete(java.nio.file.Paths.get(subjFile))
     java.nio.file.Files.delete(java.nio.file.Paths.get(stopsFile))
     val parts = scan.planInputPartitions().map(_.asInstanceOf[StatusLivePartition])
-    assert(parts.length === 64, "the bounded task census (maxTasks)")
+    assert(parts.length === 2 * spark.sparkContext.defaultParallelism,
+      "the bounded task census: two groups per core")
     assert(parts.map(_.subjects.get.length).sum === n, "every token exactly once")
     parts.foreach { p =>
       val g = p.subjects.get.toSet
