@@ -6,7 +6,10 @@ import java.time.Instant
 import graft.ops.{SignalExplode, SyncOps}
 import graft.schema.SignalDefinitions
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.InSet
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types.LongType
 
 /** Options mirroring the reference `internal/sync/options.go:9-27`.
   *
@@ -250,11 +253,19 @@ object SyncJob {
 
   /** Token scope: the explicit token list, else the sink's DISTINCT
     * tokens (sync.go:61,211-234); no tokens and no sink ⇒ nothing to sync.
+    *
+    * The explicit list filters as ONE hash-set predicate (`InSet`, what
+    * the optimizer makes of a long IN list anyway): an `isin` of the
+    * literals reaches code generation as a branch per literal when the
+    * dim is a local relation (`ConvertToLocalRelation` evaluates it
+    * before `OptimizeIn` runs), once per query over the scoped dim.
     */
   private def scopeDim(dim: DataFrame, existingSink: Option[DataFrame],
       opts: SyncOptions): DataFrame = {
     val explicitTokens = SyncOps.parseTokenList(opts.tokens)
-    if (explicitTokens.nonEmpty) dim.where(col("tokenId").isin(explicitTokens: _*))
+    if (explicitTokens.nonEmpty)
+      dim.where(ColumnBridge.column(InSet(
+        ColumnBridge.expression(col("tokenId").cast(LongType)), explicitTokens.toSet[Any])))
     else
       existingSink match {
         case Some(sink) => dim.join(SyncOps.tokensFromSink(sink), Seq("tokenId"), "left_semi")

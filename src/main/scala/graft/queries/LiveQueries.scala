@@ -2,14 +2,19 @@ package graft.queries
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.{ConcurrentLinkedQueue, Executor, Executors}
 import java.util.concurrent.atomic.AtomicLong
 
-import com.sun.net.httpserver.{HttpContext, HttpExchange, HttpHandler, HttpServer}
+import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import com.sun.net.httpserver.{HttpContext, HttpExchange, HttpHandler, HttpServer, HttpsServer}
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType, TimestampType}
+
+import graft.sources.SignalSink
 
 /** Declared queries through the LIVE wire clients — the network half of
   * the reference's sync loop, gate-checked end to end with no socket
@@ -51,24 +56,6 @@ object LiveQueries {
     */
   private[graft] final case class StubDoc(id: String, subject: String, timeUs: Long,
       json: String, signalJson: Option[String] = None, sourceless: Boolean = false)
-
-  /** Parallel, order-preserving stub seeding (r19, guide §2.6 on the
-    * driver): builds each doc ONCE at its position in the full corpus.
-    * The sync/stream entries seed two server generations — the first
-    * half, then first ++ second — and the serial form rebuilt the first
-    * half's JSON for the second server (1.5× the corpus of single-thread
-    * driver string work per entry, ~0.5 s at sf0.1). Because the first
-    * half LEADS the concatenation, its docs' zipWithIndex positions are
-    * identical in both generations: `parDocs(first, 0)(f)` and that
-    * `++ parDocs(second, first.length)(f)` are byte-for-byte the old
-    * `(first ++ second).zipWithIndex.map(f)`. Test-double seeding only —
-    * the measured engine path is untouched.
-    */
-  private[graft] def parDocs(rows: IndexedSeq[org.apache.spark.sql.Row], offset: Int)(
-      f: (org.apache.spark.sql.Row, Int) => StubDoc): IndexedSeq[StubDoc] = {
-    import scala.collection.parallel.CollectionConverters._
-    rows.zipWithIndex.par.map { case (r, i) => f(r, offset + i) }.seq.toIndexedSeq
-  }
 
   /** One seeded CloudEvents status document, the `_source` of every stub
     * corpus: `version` is the `dimo.zone.status` dataschema version and
@@ -570,6 +557,218 @@ object LiveQueries {
     (server, rows)
   }
 
+  // ── The live-gate fixture: the entries below and `graft.tools.PhaseProbe`
+  //    seed, serve, sync and stage through these helpers.
+
+  /** The `events` rows every live fixture seeds from: those with a time
+    * and a user.
+    */
+  private[graft] def seedEvents(s: SparkSession, d: String): DataFrame =
+    Tables.load(s, d, "events").where(col("ts").isNotNull && col("user_id").isNotNull)
+
+  /** An event's value in whole cents, the payload signal of every fixture. */
+  private def cents: Column = round(col("value") * 100).cast(LongType)
+
+  /** The seeded rows a stub corpus is built from, collected to the driver
+    * (they seed the TEST DOUBLE; the measured path is the entry's read):
+    * `subject` (default the user id), `tsu` (default the event time in
+    * epoch micros) and `cents`, then `extra`.
+    */
+  private[graft] def seedRows(s: SparkSession, d: String,
+      subject: Column = col("user_id").cast("string"),
+      time: Column = expr("unix_micros(ts)"), extra: Seq[Column] = Nil): IndexedSeq[Row] =
+    seedEvents(s, d)
+      .select(Seq(subject.as("subject"), time.as("tsu"), cents.as("cents")) ++ extra: _*)
+      .collect().toIndexedSeq
+
+  /** The seeded events as `signal` rows for a ClickHouse double, in
+    * [[graft.sources.SignalLiveSource.Schema]]: `token` (default the user
+    * id), the event time, its type as the name, the cents as
+    * `value_number` and the event id as `value_string`.
+    */
+  private[graft] def chSignals(s: SparkSession, d: String,
+      token: Column = col("user_id").cast(LongType)): DataFrame =
+    seedEvents(s, d).select(token.as("token_id"),
+      col("ts").cast(TimestampType).as("timestamp"),
+      col("event_type").cast(StringType).as("name"),
+      round(col("value") * 100).cast(DoubleType).as("value_number"),
+      col("event_id").cast(StringType).as("value_string"))
+
+  /** How a corpus names its docs. The envelope id is always `<prefix><i>`
+    * (i the corpus position); the stub's doc id is the same (`Plain`),
+    * `<prefix><subject>-<tsu>-<i>` (`Keyed`), or `<prefix>` and `i`
+    * zero-padded to 7 digits (`Padded`).
+    */
+  private[graft] object IdForm extends Enumeration { val Plain, Keyed, Padded = Value }
+
+  /** How a corpus renders one seeded row: the id `prefix` and [[IdForm]],
+    * the `dimo.zone.status` `version`, the `data` `payload`, and the
+    * `signal` payload a signal-filtered search is served (None: the doc
+    * carries none of the requested signals).
+    */
+  private[graft] final case class DocForm(prefix: String, payload: Row => String,
+      version: String = "v2.0", id: IdForm.Value = IdForm.Plain,
+      signal: Row => Option[String] = _ => None)
+
+  /** The common payloads: the cents alone, and the cents as the speed. */
+  private[graft] val CentsData: Row => String = r => s"""{"cents":${r.getLong(2)}}"""
+  private[graft] val SpeedData: Row => String = r => s"""{"speed":${r.getLong(2)},"make":"m"}"""
+
+  /** The corpora of the streaming tail (q217) and of the signal-filtered
+    * sync (q218), which `graft.tools.PhaseProbe` replays.
+    */
+  private[graft] val StreamTailForm = DocForm("t", CentsData, id = IdForm.Keyed)
+  private[graft] val SyncSignalsForm = DocForm("g", SpeedData, version = "v1.0",
+    id = IdForm.Keyed, signal = r => Some(s"""{"speed":${r.getLong(2)}}"""))
+
+  /** A tie corpus's time: every doc on one of three tied milliseconds,
+    * bucket = cents mod 3.
+    */
+  private[graft] def tieTime: Column =
+    (lit(1704000000000L) + pmod(cents, lit(3L)) * 60000L) * 1000L
+
+  /** A subject mapping that folds every fifth user (~20% of the rows)
+    * onto the one whale subject `whale`.
+    */
+  private[graft] def foldedOnto(whale: String): Column =
+    when(col("user_id") % 5 === 0, lit(whale)).otherwise(col("user_id").cast("string"))
+
+  /** A stub corpus of seeded rows, the first at position `offset`. Built
+    * in parallel, order-preserving (r19, guide §2.6 on the driver): each
+    * doc is built once at its position, so [[generations]] reuses the
+    * first generation's docs in the second. Test-double seeding only —
+    * the measured engine path is untouched.
+    */
+  private[graft] def corpus(rows: IndexedSeq[Row], form: DocForm,
+      offset: Int = 0): IndexedSeq[StubDoc] = {
+    import scala.collection.parallel.CollectionConverters._
+    rows.zipWithIndex.par.map { case (r, j) =>
+      val (i, subj, tsu) = (offset + j, r.getString(0), r.getLong(1))
+      val envId = s"${form.prefix}$i"
+      val id = form.id match {
+        case IdForm.Plain => envId
+        case IdForm.Keyed => s"${form.prefix}$subj-$tsu-$i"
+        case IdForm.Padded => f"${form.prefix}$i%07d"
+      }
+      StubDoc(id, subj, tsu, statusJson(envId, subj, tsu, form.version, form.payload(r)),
+        form.signal(r).map(statusJson(envId, subj, tsu, form.version, _)))
+    }.seq.toIndexedSeq
+  }
+
+  /** A corpus in two generations, each doc built once: `first`, then
+    * `first` followed by `second`.
+    */
+  private[graft] def generations(first: IndexedSeq[Row], second: IndexedSeq[Row],
+      form: DocForm): (IndexedSeq[StubDoc], IndexedSeq[StubDoc]) = {
+    val docs1 = corpus(first, form)
+    (docs1, docs1 ++ corpus(second, form, first.length))
+  }
+
+  /** Seeded rows split at the midpoint of their time span into
+    * `(newer, older)`. With `ms` the split falls on a whole millisecond,
+    * so the halves never share one (a streaming tail's offsets are
+    * ms-granular).
+    */
+  private[graft] def halves(rows: IndexedSeq[Row],
+      ms: Boolean): (IndexedSeq[Row], IndexedSeq[Row]) = {
+    val ts = rows.map(_.getLong(1))
+    val mid = (ts.min + ts.max) / 2
+    if (ms) rows.partition(_.getLong(1) / 1000 >= mid / 1000)
+    else rows.partition(_.getLong(1) >= mid)
+  }
+
+  /** A signal frame split by VALUE at the micro midpoint of its time span
+    * into `(older, newer)`, 4 partitions each: the halves never share a
+    * microsecond.
+    */
+  private[graft] def signalHalves(signals: DataFrame): (DataFrame, DataFrame) = {
+    val bounds = signals.agg(expr("min(unix_micros(timestamp))"),
+      expr("max(unix_micros(timestamp))")).head()
+    val midUs = (bounds.getLong(0) + bounds.getLong(1)) / 2
+    (signals.where(expr(s"unix_micros(timestamp) < $midUs")).repartition(4),
+      signals.where(expr(s"unix_micros(timestamp) >= $midUs")).repartition(4))
+  }
+
+  /** The loopback URL of a started double. */
+  private[graft] def urlOf(server: HttpServer): String = {
+    val scheme = if (server.isInstanceOf[HttpsServer]) "https" else "http"
+    s"$scheme://127.0.0.1:${server.getAddress.getPort}"
+  }
+
+  /** Runs `f` with `server`'s URL, and stops the server afterwards. */
+  private[graft] def withServer[T](server: HttpServer)(f: String => T): T =
+    try f(urlOf(server)) finally server.stop(0)
+
+  /** Serves `docs` through a [[startStub]] double for the length of `f`. */
+  private[graft] def withStub[T](docs: IndexedSeq[StubDoc], modes: StubModes = StubModes(),
+      counters: StubCounters = StubCounters())(f: String => T): T =
+    withServer(startStub(docs, modes, counters))(f)
+
+  /** Runs `f` with dynamic partition pruning forced on, so stats
+    * heuristics cannot decide whether a runtime-filtering entry's declared
+    * feature runs, and restores the session's settings afterwards.
+    */
+  private[graft] def withDppForced[T](s: SparkSession)(f: => T): T = {
+    val confs = Seq(
+      "spark.sql.optimizer.dynamicPartitionPruning.useStats" -> "false",
+      "spark.sql.optimizer.dynamicPartitionPruning.fallbackFilterRatio" -> "10.0")
+    val saved = confs.map { case (k, _) => k -> s.conf.getOption(k) }
+    confs.foreach { case (k, v) => s.conf.set(k, v) }
+    try f finally saved.foreach { case (k, v) => v.fold(s.conf.unset(k))(s.conf.set(k, _)) }
+  }
+
+  /** One round of a live-sync entry: serves `docs` for the round, runs
+    * `round` with the double's URL and the sink so far (None before the
+    * first append), and appends its output to the store at `sinkDir`.
+    */
+  private[graft] def syncRound(s: SparkSession, docs: IndexedSeq[StubDoc], sinkDir: String,
+      modes: StubModes = StubModes(), counters: StubCounters = StubCounters())(
+      round: (String, Option[DataFrame]) => DataFrame): Unit =
+    withStub(docs, modes, counters) { url =>
+      val sink =
+        if (Files.exists(Paths.get(sinkDir))) Some(SignalSink.readParquet(s, sinkDir)) else None
+      SignalSink.appendParquet(round(url, sink), sinkDir, buckets = 8)
+    }
+
+  /** The per-token result a live-sync entry's oracle checks: signal rows,
+    * the summed `Vehicle.Speed` cents, and the oldest and newest times.
+    */
+  private[graft] def signalAggregate(signals: DataFrame): DataFrame =
+    signals.groupBy(col("tokenId").as("token_id"))
+      .agg(count(lit(1)).as("n_signals"),
+        sum(when(col("name") === "Vehicle.Speed", col("valueNumber"))
+          .otherwise(lit(0.0))).cast(LongType).as("speed_sum"),
+        expr("min(unix_micros(timestamp))").as("oldest_us"),
+        expr("max(unix_micros(timestamp))").as("newest_us"))
+
+  /** The per-`key` result a live read entry's oracle checks: docs and
+    * their summed `data.cents`.
+    */
+  private[graft] def centsPer(key: String)(live: DataFrame): DataFrame =
+    live.select(col(key), get_json_object(col("data"), "$.cents").cast("long").as("cents"))
+      .groupBy(col(key))
+      .agg(count(lit(1)).as("n_docs"), sum(col("cents")).as("cents"))
+
+  /** Runs `f` with one fresh `graft-<tag>` temp directory per tag, then
+    * deletes them and everything in them. Nothing `f` returns may read
+    * them lazily: a DataFrame over them is materialized inside `f`.
+    */
+  private[graft] def withTempDirs[T](tags: String*)(f: Seq[Path] => T): T = {
+    val dirs = scala.collection.mutable.ArrayBuffer.empty[Path]
+    try {
+      tags.foreach(t => dirs += Files.createTempDirectory(s"graft-$t"))
+      f(dirs.toSeq)
+    } finally dirs.foreach { dir =>
+      val walk = Files.walk(dir)
+      try walk.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
+      finally walk.close()
+    }
+  }
+
+  /** Stages `lines` as the newline-terminated UTF-8 file `name` in `dir`. */
+  private[graft] def writeLines(dir: Path, name: String, lines: Seq[String]): Path =
+    Files.write(dir.resolve(name), lines.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
+
   def defs: Seq[QueryDef] = Seq(
 
     // ── LIVE per-device sync read, gate-declared (r11): seed the stub
@@ -585,26 +784,12 @@ object LiveQueries {
     QueryDef(
       "q212_live_es_read",
       (s, d) => {
-        // this collect() seeds the TEST DOUBLE (the stub cluster's corpus),
-        // not the query path — the measured read runs through the DSv2
-        // live source and the HTTP client below
-        val evs = Tables.load(s, d, "events")
-          .where(col("ts").isNotNull && col("user_id").isNotNull)
-          .select(col("user_id").cast("string").as("subject"),
-            expr("unix_micros(ts)").as("tsu"),
-            round(col("value") * 100).cast(LongType).as("cents"))
-          .collect()
-        val docs: IndexedSeq[StubDoc] =
-          parDocs(evs.toIndexedSeq, 0) { (r, i) =>
-            val (subj, tsu, cents) = (r.getString(0), r.getLong(1), r.getLong(2))
-            val json = statusJson(s"e$i", subj, tsu, "v2.0", s"""{"vehicle":{"cents":$cents}}""")
-            StubDoc(s"e$i", subj, tsu, json)
-          }
+        val docs = corpus(seedRows(s, d),
+          DocForm("e", r => s"""{"vehicle":{"cents":${r.getLong(2)}}}"""))
         val subjects = docs.map(_.subject).distinct.sorted
-        val server = startStub(docs)
-        try {
+        withStub(docs) { url =>
           val live = s.read.format("graft-status-live")
-            .option("url", s"http://127.0.0.1:${server.getAddress.getPort}")
+            .option("url", url)
             .option("batchSize", "500")
             .load()
             .where(col("subject").isin(subjects: _*))
@@ -616,7 +801,7 @@ object LiveQueries {
               max(col("tsu")).as("newest_us"),
               sum(col("cents")).as("cents"))
           live.localCheckpoint(true) // materialize THROUGH the live stack
-        } finally server.stop(0)
+        }
       },
       Some("""SELECT CAST(user_id AS VARCHAR) AS subject,
                count(*)::BIGINT AS n_docs,
@@ -642,29 +827,15 @@ object LiveQueries {
     QueryDef(
       "q213_live_es_projection",
       (s, d) => {
-        // collect() seeds the TEST DOUBLE; the measured read is the DSv2
-        // live source with signals=Vehicle.Speed below
-        val evs = Tables.load(s, d, "events")
-          .where(col("ts").isNotNull && col("user_id").isNotNull)
-          .select(col("user_id").cast("string").as("subject"),
-            expr("unix_micros(ts)").as("tsu"),
-            round(col("value") * 100).cast(LongType).as("cents"),
-            (col("value") >= 50.0).as("has_speed"))
-          .collect()
-        val docs: IndexedSeq[StubDoc] =
-          parDocs(evs.toIndexedSeq, 0) { (r, i) =>
-            val (subj, tsu, cents, hasSpeed) =
-              (r.getString(0), r.getLong(1), r.getLong(2), r.getBoolean(3))
-            val data = if (hasSpeed) s"""{"speed":$cents,"make":"Ford"}""" else """{"make":"Audi"}"""
-            StubDoc(s"e$i", subj, tsu, statusJson(s"e$i", subj, tsu, "v1.0", data),
-              signalJson = if (hasSpeed)
-                Some(statusJson(s"e$i", subj, tsu, "v1.0", s"""{"speed":$cents}""")) else None)
-          }
+        val evs = seedRows(s, d, extra = Seq((col("value") >= 50.0).as("has_speed")))
+        val docs = corpus(evs, DocForm("e", version = "v1.0",
+          payload = r =>
+            if (r.getBoolean(3)) s"""{"speed":${r.getLong(2)},"make":"Ford"}""" else """{"make":"Audi"}""",
+          signal = r => if (r.getBoolean(3)) Some(s"""{"speed":${r.getLong(2)}}""") else None))
         val subjects = docs.map(_.subject).distinct.sorted
-        val server = startStub(docs, StubModes(requireSignalClauses = true))
-        try {
+        withStub(docs, StubModes(requireSignalClauses = true)) { url =>
           val live = s.read.format("graft-status-live")
-            .option("url", s"http://127.0.0.1:${server.getAddress.getPort}")
+            .option("url", url)
             .option("batchSize", "500")
             .option("signals", "Vehicle.Speed")
             .load()
@@ -678,7 +849,7 @@ object LiveQueries {
               max(col("tsu")).as("newest_us"),
               count(col("make")).as("n_make")) // projection strips make ⇒ 0
           live.localCheckpoint(true) // materialize THROUGH the live stack
-        } finally server.stop(0)
+        }
       },
       Some("""SELECT CAST(user_id AS VARCHAR) AS subject,
                count(*)::BIGINT AS n_docs,
@@ -705,16 +876,13 @@ object LiveQueries {
       (s, d) => {
         import graft.sources.{ClickHouseDdl, ClickHouseHttpClient}
         import org.apache.spark.sql.types._
-        val signals = Tables.load(s, d, "events")
-          .where(col("ts").isNotNull && col("user_id").isNotNull)
+        val signals = seedEvents(s, d)
           .select(col("user_id").cast(LongType).as("token_id"),
             col("ts").cast(TimestampType).as("timestamp"),
             col("event_type").cast(StringType).as("name"),
-            round(col("value") * 100).cast(LongType).as("value_cents"))
+            cents.as("value_cents"))
           .repartition(8) // the distributed insert fan-out under test
-        val (server, _) = startChStub()
-        try {
-          val clientUrl = s"http://127.0.0.1:${server.getAddress.getPort}"
+        withServer(startChStub()._1) { clientUrl =>
           val client = new ClickHouseHttpClient(clientUrl)
           client.execute(ClickHouseDdl.signalTableDdl(StructType(Seq(
             StructField("token_id", LongType, nullable = false),
@@ -761,7 +929,7 @@ object LiveQueries {
               StructField("oldest_us", LongType, nullable = false),
               StructField("n_rows", LongType, nullable = false),
               StructField("cents", LongType, nullable = false))))
-        } finally server.stop(0)
+        }
       },
       Some("""SELECT CAST(user_id AS BIGINT) AS token_id,
                CAST(min(epoch_us(CAST(ts AS TIMESTAMP))) AS BIGINT) AS oldest_us,
@@ -785,60 +953,31 @@ object LiveQueries {
       "q215_live_sync_e2e",
       (s, d) => {
         import graft.jobs.{SyncJob, SyncOptions}
-        import graft.sources.{DeviceDim, SignalSink}
-        val evs = Tables.load(s, d, "events")
-          .where(col("ts").isNotNull && col("user_id").isNotNull)
-          .select(col("user_id").cast("string").as("subject"),
-            expr("unix_micros(ts)").as("tsu"),
-            round(col("value") * 100).cast(LongType).as("cents"))
-          .collect() // seeds the TEST DOUBLE; the measured path is below
-        val mid = {
-          val ts = evs.map(_.getLong(1))
-          (ts.min + ts.max) / 2
-        }
-        def mkDoc(r: org.apache.spark.sql.Row, i: Int): StubDoc = {
-          val (subj, tsu, cents) = (r.getString(0), r.getLong(1), r.getLong(2))
-          StubDoc(s"e$subj-$tsu-$i", subj, tsu,
-            statusJson(s"e$i", subj, tsu, "v1.0", s"""{"speed":$cents,"make":"m"}"""))
-        }
-        val (newer, older) = evs.toIndexedSeq.partition(_.getLong(1) >= mid)
-        // seeded once each (parDocs), round 2 = round 1's docs + the backfill
-        val docs1 = parDocs(newer, 0)(mkDoc)
-        val docs2 = docs1 ++ parDocs(older, newer.length)(mkDoc)
+        import graft.sources.DeviceDim
+        val evs = seedRows(s, d)
+        val (newer, older) = halves(evs, ms = false)
+        // round 2 = round 1's docs + the backfill
+        val (docs1, docs2) = generations(newer, older,
+          DocForm("e", SpeedData, version = "v1.0", id = IdForm.Keyed))
         val tokens = evs.map(_.getString(0)).distinct.sorted
-        val dim = DeviceDim.identityDim(s, tokens.map(_.toLong).toSeq.sorted)
-        val opts = SyncOptions(tokens = tokens.toSeq,
+        val dim = DeviceDim.identityDim(s, tokens.map(_.toLong).sorted)
+        val opts = SyncOptions(tokens = tokens,
           start = Some(new java.sql.Timestamp(0L)),
           stop = Some(new java.sql.Timestamp(9999999999999L)))
-        val sinkDir = java.nio.file.Files
-          .createTempDirectory("graft-q215-sink").resolve("signals").toString
-        def url(server: HttpServer) = s"http://127.0.0.1:${server.getAddress.getPort}"
-        // round 1: the live cluster knows only the newer half
-        val server1 = startStub(docs1)
-        try {
-          val round1 = SyncJob.runLive(s, url(server1), dim, existingSink = None,
-            opts, batchSize = 2000)
-          SignalSink.appendParquet(round1, sinkDir, buckets = 8)
-        } finally server1.stop(0)
-        // round 2: the backfill appeared; resume strictly below watermarks —
-        // runLive pushes each token's watermark as its request window's
-        // exclusive stop (sync.go:96-100), so only the unsynced prefix
-        // crosses the wire
-        val server2 = startStub(docs2)
-        try {
-          val sink1 = SignalSink.readParquet(s, sinkDir)
-          val round2 = SyncJob.runLive(s, url(server2), dim, existingSink = Some(sink1),
-            opts, batchSize = 2000)
-          SignalSink.appendParquet(round2, sinkDir, buckets = 8)
-        } finally server2.stop(0)
-        // the final sink: aggregate reads parquet, no live dependency left
-        SignalSink.readParquet(s, sinkDir)
-          .groupBy(col("tokenId").as("token_id"))
-          .agg(count(lit(1)).as("n_signals"),
-            sum(when(col("name") === "Vehicle.Speed", col("valueNumber"))
-              .otherwise(lit(0.0))).cast(LongType).as("speed_sum"),
-            expr("min(unix_micros(timestamp))").as("oldest_us"),
-            expr("max(unix_micros(timestamp))").as("newest_us"))
+        withTempDirs("q215-sink") { case Seq(dir) =>
+          val sinkDir = dir.resolve("signals").toString
+          // round 1: the live cluster knows only the newer half; round 2:
+          // the backfill appeared; resume strictly below watermarks —
+          // runLive pushes each token's watermark as its request window's
+          // exclusive stop (sync.go:96-100), so only the unsynced prefix
+          // crosses the wire
+          for (docs <- Seq(docs1, docs2))
+            syncRound(s, docs, sinkDir) { (url, sink) =>
+              SyncJob.runLive(s, url, dim, existingSink = sink, opts, batchSize = 2000)
+            }
+          // the final sink: aggregate reads parquet, no live dependency left
+          signalAggregate(SignalSink.readParquet(s, sinkDir)).localCheckpoint(true)
+        }
       },
       Some("""SELECT CAST(user_id AS BIGINT) AS token_id,
                (count(*) * 2)::BIGINT AS n_signals,
@@ -862,26 +1001,11 @@ object LiveQueries {
     QueryDef(
       "q216_live_ch_scan",
       (s, d) => {
-        import graft.sources.{ClickHouseDdl, ClickHouseHttpClient}
-        import org.apache.spark.sql.types._
-        val signals = Tables.load(s, d, "events")
-          .where(col("ts").isNotNull && col("user_id").isNotNull)
-          .select(col("user_id").cast(LongType).as("token_id"),
-            col("ts").cast(TimestampType).as("timestamp"),
-            col("event_type").cast(StringType).as("name"),
-            round(col("value") * 100).cast(DoubleType).as("value_number"),
-            col("event_id").cast(StringType).as("value_string"))
-          .repartition(8)
-        val server = ChSignalStub.start()
-        try {
-          val url = s"http://127.0.0.1:${server.getAddress.getPort}"
-          val client = new ClickHouseHttpClient(url)
-          client.execute(ClickHouseDdl.signalTableDdl(StructType(Seq(
-            StructField("token_id", LongType, nullable = false),
-            StructField("timestamp", TimestampType, nullable = false),
-            StructField("name", StringType, nullable = false),
-            StructField("value_number", DoubleType, nullable = true),
-            StructField("value_string", StringType, nullable = true)))))
+        import graft.sources.{ClickHouseDdl, ClickHouseHttpClient, SignalLiveSource}
+        val signals = chSignals(s, d).repartition(8)
+        withServer(ChSignalStub.start()) { url =>
+          new ClickHouseHttpClient(url)
+            .execute(ClickHouseDdl.signalTableDdl(SignalLiveSource.Schema))
           // the DSv2 writer (q214 gates the function-form insertSignals,
           // this row gates the idiomatic df.write form)
           signals.write.format("graft-signal-live").option("url", url)
@@ -899,7 +1023,7 @@ object LiveQueries {
             .select(col("token_id"), col("n_rows"), col("cents"),
               expr("unix_micros(t0)").as("oldest_us"))
           agg.localCheckpoint(true) // materialize THROUGH the live stack
-        } finally server.stop(0)
+        }
       },
       Some("""SELECT CAST(user_id AS BIGINT) AS token_id,
                count(*)::BIGINT AS n_rows,
@@ -925,31 +1049,16 @@ object LiveQueries {
     QueryDef(
       "q217_live_stream_tail",
       (s, d) => {
-        val evs = Tables.load(s, d, "events")
-          .where(col("ts").isNotNull && col("user_id").isNotNull)
-          .select(col("user_id").cast("string").as("subject"),
-            expr("unix_micros(ts)").as("tsu"),
-            round(col("value") * 100).cast(LongType).as("cents"))
-          .collect() // seeds the TEST DOUBLE; the measured path is the stream
-        val mid = { val ts = evs.map(_.getLong(1)); (ts.min + ts.max) / 2 }
-        def mkDoc(r: org.apache.spark.sql.Row, i: Int): StubDoc = {
-          val (subj, tsu, cents) = (r.getString(0), r.getLong(1), r.getLong(2))
-          StubDoc(s"t$subj-$tsu-$i", subj, tsu,
-            statusJson(s"t$i", subj, tsu, "v2.0", s"""{"cents":$cents}"""))
-        }
         // split on a MILLISECOND boundary: offsets are ms-granular, so the
         // two halves must not share a millisecond (the phase-2 floor is
         // olderMaxMs + 1)
-        val (newer, older) = evs.toIndexedSeq.partition(_.getLong(1) / 1000 >= mid / 1000)
-        // seeded once each (parDocs), phase 2 = phase 1's docs + the newer half
-        val docs1 = parDocs(older, 0)(mkDoc)
-        val docs2 = docs1 ++ parDocs(newer, older.length)(mkDoc)
-        val outDir = java.nio.file.Files
-          .createTempDirectory("graft-q217-out").toString + "/tail"
-        val ckpt = java.nio.file.Files.createTempDirectory("graft-q217-ck").toString
-        def tailOnce(docs: IndexedSeq[StubDoc]): Unit = {
-          val server = startStub(docs)
-          try {
+        val (newer, older) = halves(seedRows(s, d), ms = true)
+        // phase 2 = phase 1's docs + the newer half
+        val (docs1, docs2) = generations(older, newer, StreamTailForm)
+        withTempDirs("q217-out", "q217-ck") { case Seq(out, ck) =>
+          val outDir = out.toString + "/tail"
+          val ckpt = ck.toString
+          def tailOnce(docs: IndexedSeq[StubDoc]): Unit = withStub(docs) { url =>
             // slices=8 (r19): each micro-batch's [committed, latest) window
             // drains as 8 PARALLEL filter-disjoint tiles (PIT-less server ⇒
             // the q239 window-cut planning; a PIT server would slice one
@@ -957,7 +1066,7 @@ object LiveQueries {
             // same rows, same offsets, same restart pin; the tail's wall is
             // the slowest tile, not the page-loop sum (guide §2.6).
             val q = s.readStream.format("graft-status-live")
-              .option("url", s"http://127.0.0.1:${server.getAddress.getPort}")
+              .option("url", url)
               .option("batchSize", "2000").option("slices", "8").load()
               .select(col("subject"), expr("unix_micros(time)").as("tsu"),
                 get_json_object(col("data"), "$.cents").cast(LongType).as("cents"))
@@ -965,16 +1074,17 @@ object LiveQueries {
               .option("path", outDir).option("checkpointLocation", ckpt)
               .start()
             try q.processAllAvailable() finally q.stop()
-          } finally server.stop(0)
+          }
+          tailOnce(docs1) // phase 1: the older half
+          tailOnce(docs2) // phase 2: restart; only the newer half arrives
+          s.read.parquet(outDir)
+            .groupBy(col("subject"))
+            .agg(count(lit(1)).as("n_docs"),
+              sum(col("cents")).as("cents"),
+              min(col("tsu")).as("oldest_us"),
+              max(col("tsu")).as("newest_us"))
+            .localCheckpoint(true)
         }
-        tailOnce(docs1) // phase 1: the older half
-        tailOnce(docs2) // phase 2: restart; only the newer half arrives
-        s.read.parquet(outDir)
-          .groupBy(col("subject"))
-          .agg(count(lit(1)).as("n_docs"),
-            sum(col("cents")).as("cents"),
-            min(col("tsu")).as("oldest_us"),
-            max(col("tsu")).as("newest_us"))
       },
       Some("""SELECT CAST(user_id AS VARCHAR) AS subject,
                count(*)::BIGINT AS n_docs,
@@ -999,50 +1109,28 @@ object LiveQueries {
       "q218_live_sync_signals",
       (s, d) => {
         import graft.jobs.{SyncJob, SyncOptions}
-        import graft.sources.{DeviceDim, SignalSink}
-        val evs = Tables.load(s, d, "events")
-          .where(col("ts").isNotNull && col("user_id").isNotNull)
-          .select(col("user_id").cast("string").as("subject"),
-            expr("unix_micros(ts)").as("tsu"),
-            round(col("value") * 100).cast(LongType).as("cents"))
-          .collect() // seeds the TEST DOUBLE; the measured path is below
-        val mid = { val ts = evs.map(_.getLong(1)); (ts.min + ts.max) / 2 }
-        def mkDoc(r: org.apache.spark.sql.Row, i: Int): StubDoc = {
-          val (subj, tsu, cents) = (r.getString(0), r.getLong(1), r.getLong(2))
-          StubDoc(s"g$subj-$tsu-$i", subj, tsu,
-            statusJson(s"g$i", subj, tsu, "v1.0", s"""{"speed":$cents,"make":"m"}"""),
-            signalJson = Some(statusJson(s"g$i", subj, tsu, "v1.0", s"""{"speed":$cents}""")))
-        }
-        val (newer, older) = evs.toIndexedSeq.partition(_.getLong(1) / 1000 >= mid / 1000)
-        // seeded once each (parDocs), round 2 = round 1's docs + the backfill
-        val docs1 = parDocs(newer, 0)(mkDoc)
-        val docs2 = docs1 ++ parDocs(older, newer.length)(mkDoc)
+        import graft.sources.DeviceDim
+        val evs = seedRows(s, d)
+        val (newer, older) = halves(evs, ms = true)
+        // round 2 = round 1's docs + the backfill
+        val (docs1, docs2) = generations(newer, older, SyncSignalsForm)
         val tokens = evs.map(_.getString(0)).distinct.sorted
-        val dim = DeviceDim.identityDim(s, tokens.map(_.toLong).toSeq.sorted)
-        val opts = SyncOptions(tokens = tokens.toSeq,
+        val dim = DeviceDim.identityDim(s, tokens.map(_.toLong).sorted)
+        val opts = SyncOptions(tokens = tokens,
           signalNames = Seq("Vehicle.Speed"),
           start = Some(new java.sql.Timestamp(0L)),
           stop = Some(new java.sql.Timestamp(9999999999999L)))
-        val sinkDir = java.nio.file.Files
-          .createTempDirectory("graft-q218-sink").resolve("signals").toString
-        def syncRound(docs: IndexedSeq[StubDoc],
-            sink: Option[org.apache.spark.sql.DataFrame]): Unit = {
+        withTempDirs("q218-sink") { case Seq(dir) =>
+          val sinkDir = dir.resolve("signals").toString
           // requireSignalClauses: a request WITHOUT the projection is 400
-          val server = startStub(docs, StubModes(requireSignalClauses = true))
-          try {
-            val out = SyncJob.runLive(s,
-              s"http://127.0.0.1:${server.getAddress.getPort}", dim, sink, opts,
-              batchSize = 2000)
-            SignalSink.appendParquet(out, sinkDir, buckets = 8)
-          } finally server.stop(0)
+          for (docs <- Seq(docs1, docs2))
+            syncRound(s, docs, sinkDir, StubModes(requireSignalClauses = true)) { (url, sink) =>
+              SyncJob.runLive(s, url, dim, sink, opts, batchSize = 2000)
+            }
+          // every sink row is the one configured signal
+          signalAggregate(SignalSink.readParquet(s, sinkDir)).drop("newest_us")
+            .localCheckpoint(true)
         }
-        syncRound(docs1, None)
-        syncRound(docs2, Some(SignalSink.readParquet(s, sinkDir)))
-        SignalSink.readParquet(s, sinkDir)
-          .groupBy(col("tokenId").as("token_id"))
-          .agg(count(lit(1)).as("n_signals"),
-            sum(col("valueNumber")).cast(LongType).as("speed_sum"),
-            expr("min(unix_micros(timestamp))").as("oldest_us"))
       },
       Some("""SELECT CAST(user_id AS BIGINT) AS token_id,
                count(*)::BIGINT AS n_signals,
@@ -1065,26 +1153,11 @@ object LiveQueries {
     QueryDef(
       "q219_live_ch_row_scan",
       (s, d) => {
-        import graft.sources.{ClickHouseDdl, ClickHouseHttpClient}
-        import org.apache.spark.sql.types._
-        val signals = Tables.load(s, d, "events")
-          .where(col("ts").isNotNull && col("user_id").isNotNull)
-          .select(col("user_id").cast(LongType).as("token_id"),
-            col("ts").cast(TimestampType).as("timestamp"),
-            col("event_type").cast(StringType).as("name"),
-            round(col("value") * 100).cast(DoubleType).as("value_number"),
-            col("event_id").cast(StringType).as("value_string"))
-          .repartition(8)
-        val server = ChSignalStub.start()
-        try {
-          val url = s"http://127.0.0.1:${server.getAddress.getPort}"
-          val client = new ClickHouseHttpClient(url)
-          client.execute(ClickHouseDdl.signalTableDdl(StructType(Seq(
-            StructField("token_id", LongType, nullable = false),
-            StructField("timestamp", TimestampType, nullable = false),
-            StructField("name", StringType, nullable = false),
-            StructField("value_number", DoubleType, nullable = true),
-            StructField("value_string", StringType, nullable = true)))))
+        import graft.sources.{ClickHouseDdl, ClickHouseHttpClient, SignalLiveSource}
+        val signals = chSignals(s, d).repartition(8)
+        withServer(ChSignalStub.start()) { url =>
+          new ClickHouseHttpClient(url)
+            .execute(ClickHouseDdl.signalTableDdl(SignalLiveSource.Schema))
           signals.write.format("graft-signal-live").option("url", url)
             .mode("append").save()
           val rows = s.read.format("graft-signal-live")
@@ -1095,7 +1168,7 @@ object LiveQueries {
               col("name"),
               col("value_number").cast(LongType).as("cents"))
           rows.localCheckpoint(true) // materialize THROUGH the streamed live read
-        } finally server.stop(0)
+        }
       },
       Some("""SELECT CAST(user_id AS BIGINT) AS token_id,
                CAST(epoch_us(CAST(ts AS TIMESTAMP)) AS BIGINT) AS ts_us,
@@ -1120,31 +1193,17 @@ object LiveQueries {
     QueryDef(
       "q220_live_es_tie_drain",
       (s, d) => {
-        val Base = 1704000000000L
-        val evs = Tables.load(s, d, "events")
-          .where(col("ts").isNotNull && col("user_id").isNotNull)
-          .select(round(col("value") * 100).cast(LongType).as("cents"))
-          .collect() // seeds the TEST DOUBLE; the measured read is below
-        val docs: IndexedSeq[StubDoc] =
-          parDocs(evs.toIndexedSeq, 0) { (r, i) =>
-            val cents = r.getLong(0)
-            val bucket = ((cents % 3) + 3) % 3 // deterministic tie bucket
-            val ms = Base + bucket * 60000L
-            val json = statusJson(s"t$i", "s0", ms * 1000L, "v2.0", s"""{"cents":$cents}""")
-            StubDoc(f"t$i%07d", "s0", ms * 1000L, json)
-          }
-        val server = startStub(docs, StubModes(sizeCap = 600))
-        try {
+        val docs = corpus(seedRows(s, d, subject = lit("s0"), time = tieTime),
+          DocForm("t", CentsData, id = IdForm.Padded))
+        withStub(docs, StubModes(sizeCap = 600)) { url =>
           val live = s.read.format("graft-status-live")
-            .option("url", s"http://127.0.0.1:${server.getAddress.getPort}")
+            .option("url", url)
             .option("batchSize", "500")
             .load()
-            .select(expr("unix_micros(time)").as("tie_us"),
-              get_json_object(col("data"), "$.cents").cast("long").as("cents"))
-            .groupBy(col("tie_us"))
-            .agg(count(lit(1)).as("n_docs"), sum(col("cents")).as("cents"))
+            .withColumn("tie_us", expr("unix_micros(time)"))
+            .transform(centsPer("tie_us"))
           live.localCheckpoint(true) // materialize THROUGH the live stack
-        } finally server.stop(0)
+        }
       },
       Some("""SELECT (1704000000000000 +
                       ((CAST(round(value*100) AS BIGINT) % 3 + 3) % 3) * 60000000)::BIGINT AS tie_us,
@@ -1167,51 +1226,27 @@ object LiveQueries {
     QueryDef(
       "q221_live_ch_dpp",
       (s, d) => {
-        import graft.sources.{ClickHouseDdl, ClickHouseHttpClient}
-        import org.apache.spark.sql.types._
-        val cents = round(col("value") * 100).cast(LongType)
-        val signals = Tables.load(s, d, "events")
-          .where(col("ts").isNotNull && col("user_id").isNotNull)
-          .select(col("user_id").cast(LongType).as("token_id"),
-            col("ts").cast(TimestampType).as("timestamp"),
-            col("event_type").cast(StringType).as("name"),
-            cents.cast(DoubleType).as("value_number"),
-            col("event_id").cast(StringType).as("value_string"))
-          .repartition(8)
-        val vips = Tables.load(s, d, "events")
-          .where(col("ts").isNotNull && col("user_id").isNotNull &&
-            col("event_type") === "purchase")
+        import graft.sources.{ClickHouseDdl, ClickHouseHttpClient, SignalLiveSource}
+        val signals = chSignals(s, d).repartition(8)
+        val vips = seedEvents(s, d).where(col("event_type") === "purchase")
           .groupBy(col("user_id"))
           .agg(sum(cents).as("spend"))
           .where(col("spend") > 120000L)
           .select(col("user_id").cast(LongType).as("token_id"))
-        val server = ChSignalStub.start()
-        val confs = Seq(
-          "spark.sql.optimizer.dynamicPartitionPruning.useStats" -> "false",
-          "spark.sql.optimizer.dynamicPartitionPruning.fallbackFilterRatio" -> "10.0")
-        val saved = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-        confs.foreach { case (k, v) => s.conf.set(k, v) }
-        try {
-          val url = s"http://127.0.0.1:${server.getAddress.getPort}"
-          val client = new ClickHouseHttpClient(url)
-          client.execute(ClickHouseDdl.signalTableDdl(StructType(Seq(
-            StructField("token_id", LongType, nullable = false),
-            StructField("timestamp", TimestampType, nullable = false),
-            StructField("name", StringType, nullable = false),
-            StructField("value_number", DoubleType, nullable = true),
-            StructField("value_string", StringType, nullable = true)))))
-          signals.write.format("graft-signal-live").option("url", url)
-            .mode("append").save()
-          val joined = s.read.format("graft-signal-live")
-            .option("url", url).option("partitions", "8").load()
-            .join(vips, Seq("token_id"))
-            .groupBy(col("token_id"))
-            .agg(count(lit(1)).as("n_rows"),
-              sum(col("value_number")).cast(LongType).as("cents"))
-          joined.localCheckpoint(true) // materialize THROUGH the runtime-filtered live read
-        } finally {
-          saved.foreach { case (k, v) => v.fold(s.conf.unset(k))(s.conf.set(k, _)) }
-          server.stop(0)
+        withServer(ChSignalStub.start()) { url =>
+          withDppForced(s) {
+            new ClickHouseHttpClient(url)
+              .execute(ClickHouseDdl.signalTableDdl(SignalLiveSource.Schema))
+            signals.write.format("graft-signal-live").option("url", url)
+              .mode("append").save()
+            val joined = s.read.format("graft-signal-live")
+              .option("url", url).option("partitions", "8").load()
+              .join(vips, Seq("token_id"))
+              .groupBy(col("token_id"))
+              .agg(count(lit(1)).as("n_rows"),
+                sum(col("value_number")).cast(LongType).as("cents"))
+            joined.localCheckpoint(true) // materialize THROUGH the runtime-filtered live read
+          }
         }
       },
       Some("""WITH e AS (SELECT CAST(user_id AS BIGINT) AS token_id, event_type,
@@ -1233,21 +1268,12 @@ object LiveQueries {
     QueryDef(
       "q222_live_es_count",
       (s, d) => {
-        val evs = Tables.load(s, d, "events")
-          .where(col("ts").isNotNull && col("user_id").isNotNull)
-          .select(col("user_id").cast("string").as("subject"),
-            expr("unix_micros(ts)").as("tsu"))
-          .collect() // seeds the TEST DOUBLE; the measured path is below
-        val docs: IndexedSeq[StubDoc] =
-          parDocs(evs.toIndexedSeq, 0) { (r, i) =>
-            val (subj, tsu) = (r.getString(0), r.getLong(1))
-            StubDoc(s"n$i", subj, tsu, statusJson(s"n$i", subj, tsu, "v2.0", "{}"))
-          }
-        val served = new java.util.concurrent.atomic.AtomicLong
-        val server = startStub(docs, counters = StubCounters(served = served))
-        try {
+        val evs = seedRows(s, d)
+        val docs = corpus(evs, DocForm("n", _ => "{}"))
+        val served = new AtomicLong
+        withStub(docs, counters = StubCounters(served = served)) { url =>
           val live = s.read.format("graft-status-live")
-            .option("url", s"http://127.0.0.1:${server.getAddress.getPort}")
+            .option("url", url)
             .option("batchSize", "500").load()
           val nTotal = live.count()
           val minSubj = evs.map(_.getString(0)).min
@@ -1264,7 +1290,7 @@ object LiveQueries {
               StructField("n_total", LongType, nullable = false),
               StructField("n_subj", LongType, nullable = false),
               StructField("n_window", LongType, nullable = false))))
-        } finally server.stop(0)
+        }
       },
       Some("""WITH e AS (SELECT CAST(user_id AS VARCHAR) AS subj,
                    CAST(epoch_us(CAST(ts AS TIMESTAMP)) AS BIGINT) AS us
@@ -1291,22 +1317,9 @@ object LiveQueries {
     QueryDef(
       "q224_live_es_dpp",
       (s, d) => {
-        val cents = round(col("value") * 100).cast(LongType)
-        val evs = Tables.load(s, d, "events")
-          .where(col("ts").isNotNull && col("user_id").isNotNull)
-          .select(col("user_id").cast("string").as("subject"),
-            expr("unix_micros(ts)").as("tsu"),
-            cents.as("cents"),
-            col("event_type").as("etype"))
-          .collect() // seeds the TEST DOUBLE; the measured read is below
-        val docs: IndexedSeq[StubDoc] =
-          parDocs(evs.toIndexedSeq, 0) { (r, i) =>
-            val (subj, tsu, c) = (r.getString(0), r.getLong(1), r.getLong(2))
-            StubDoc(s"v$i", subj, tsu, statusJson(s"v$i", subj, tsu, "v2.0", s"""{"cents":$c}"""))
-          }
-        val vips = Tables.load(s, d, "events")
-          .where(col("ts").isNotNull && col("user_id").isNotNull &&
-            col("event_type") === "purchase")
+        val evs = seedRows(s, d)
+        val docs = corpus(evs, DocForm("v", CentsData))
+        val vips = seedEvents(s, d).where(col("event_type") === "purchase")
           .groupBy(col("user_id"))
           .agg(sum(cents).as("spend"))
           .where(col("spend") > 120000L)
@@ -1314,30 +1327,23 @@ object LiveQueries {
         // ground truth for the wire pin: docs belonging to VIP subjects
         val vipSet = vips.collect().map(_.getString(0)).toSet
         val expectedServed = evs.count(r => vipSet(r.getString(0))).toLong
-        val served = new java.util.concurrent.atomic.AtomicLong
-        val server = startStub(docs, counters = StubCounters(served = served))
-        val confs = Seq(
-          "spark.sql.optimizer.dynamicPartitionPruning.useStats" -> "false",
-          "spark.sql.optimizer.dynamicPartitionPruning.fallbackFilterRatio" -> "10.0")
-        val saved = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-        confs.foreach { case (k, v) => s.conf.set(k, v) }
-        try {
-          val live = s.read.format("graft-status-live")
-            .option("url", s"http://127.0.0.1:${server.getAddress.getPort}")
-            .option("batchSize", "2000").load()
-            .select(col("subject"),
-              get_json_object(col("data"), "$.cents").cast(LongType).as("cents"))
-          val joined = live.join(vips, Seq("subject"))
-            .groupBy(col("subject"))
-            .agg(count(lit(1)).as("n_docs"), sum(col("cents")).as("cents"))
-          val out = joined.localCheckpoint(true) // materialize THROUGH the runtime-filtered read
-          require(served.get() == expectedServed,
-            s"runtime filtering regressed: ${served.get()} docs shipped, " +
-              s"expected exactly the $expectedServed VIP docs")
-          out
-        } finally {
-          saved.foreach { case (k, v) => v.fold(s.conf.unset(k))(s.conf.set(k, _)) }
-          server.stop(0)
+        val served = new AtomicLong
+        withStub(docs, counters = StubCounters(served = served)) { url =>
+          withDppForced(s) {
+            val live = s.read.format("graft-status-live")
+              .option("url", url)
+              .option("batchSize", "2000").load()
+              .select(col("subject"),
+                get_json_object(col("data"), "$.cents").cast(LongType).as("cents"))
+            val joined = live.join(vips, Seq("subject"))
+              .groupBy(col("subject"))
+              .agg(count(lit(1)).as("n_docs"), sum(col("cents")).as("cents"))
+            val out = joined.localCheckpoint(true) // materialize THROUGH the runtime-filtered read
+            require(served.get() == expectedServed,
+              s"runtime filtering regressed: ${served.get()} docs shipped, " +
+                s"expected exactly the $expectedServed VIP docs")
+            out
+          }
         }
       },
       Some("""WITH e AS (SELECT CAST(user_id AS VARCHAR) AS subject, event_type,
@@ -1360,21 +1366,12 @@ object LiveQueries {
     QueryDef(
       "q225_live_es_group_count",
       (s, d) => {
-        val evs = Tables.load(s, d, "events")
-          .where(col("ts").isNotNull && col("user_id").isNotNull)
-          .select(col("user_id").cast("string").as("subject"),
-            expr("unix_micros(ts)").as("tsu"))
-          .collect() // seeds the TEST DOUBLE; the measured path is below
-        val docs: IndexedSeq[StubDoc] =
-          parDocs(evs.toIndexedSeq, 0) { (r, i) =>
-            val (subj, tsu) = (r.getString(0), r.getLong(1))
-            StubDoc(s"gc$i", subj, tsu, statusJson(s"gc$i", subj, tsu, "v2.0", "{}"))
-          }
-        val served = new java.util.concurrent.atomic.AtomicLong
-        val server = startStub(docs, counters = StubCounters(served = served))
-        try {
+        val evs = seedRows(s, d)
+        val docs = corpus(evs, DocForm("gc", _ => "{}"))
+        val served = new AtomicLong
+        withStub(docs, counters = StubCounters(served = served)) { url =>
           val live = s.read.format("graft-status-live")
-            .option("url", s"http://127.0.0.1:${server.getAddress.getPort}")
+            .option("url", url)
             .option("batchSize", "500").load()
             .where(col("subject").isNotNull)
           val total = live.groupBy(col("subject"))
@@ -1391,7 +1388,7 @@ object LiveQueries {
           require(served.get() == 0,
             s"grouped COUNT pushdown regressed to paging: ${served.get()} docs shipped")
           out
-        } finally server.stop(0)
+        }
       },
       Some("""WITH e AS (SELECT CAST(user_id AS VARCHAR) AS subject,
                    CAST(epoch_us(CAST(ts AS TIMESTAMP)) AS BIGINT) AS us
@@ -1412,23 +1409,14 @@ object LiveQueries {
     QueryDef(
       "q226_live_es_subset_count",
       (s, d) => {
-        val evs = Tables.load(s, d, "events")
-          .where(col("ts").isNotNull && col("user_id").isNotNull)
-          .select(col("user_id").cast("string").as("subject"),
-            expr("unix_micros(ts)").as("tsu"))
-          .collect() // seeds the TEST DOUBLE; the measured path is below
-        val docs: IndexedSeq[StubDoc] =
-          parDocs(evs.toIndexedSeq, 0) { (r, i) =>
-            val (subj, tsu) = (r.getString(0), r.getLong(1))
-            StubDoc(s"fs$i", subj, tsu, statusJson(s"fs$i", subj, tsu, "v2.0", "{}"))
-          }
+        val evs = seedRows(s, d)
+        val docs = corpus(evs, DocForm("fs", _ => "{}"))
         // the monitored subset: even token ids (expressible in the oracle)
         val evens = evs.map(_.getString(0)).distinct.filter(_.toLong % 2 == 0).sorted
-        val served = new java.util.concurrent.atomic.AtomicLong
-        val server = startStub(docs, counters = StubCounters(served = served))
-        try {
+        val served = new AtomicLong
+        withStub(docs, counters = StubCounters(served = served)) { url =>
           val live = s.read.format("graft-status-live")
-            .option("url", s"http://127.0.0.1:${server.getAddress.getPort}")
+            .option("url", url)
             .option("batchSize", "500").load()
             .where(col("subject").isin(evens: _*))
           val nSubset = live.count() // ONE terms-scoped exact-total probe
@@ -1439,7 +1427,7 @@ object LiveQueries {
           require(served.get() == 0,
             s"subset COUNT pushdown regressed to paging: ${served.get()} docs shipped")
           out
-        } finally server.stop(0)
+        }
       },
       Some("""WITH e AS (SELECT CAST(user_id AS VARCHAR) AS subject
                  FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL
@@ -1459,31 +1447,17 @@ object LiveQueries {
     QueryDef(
       "q227_live_es_pit_drain",
       (s, d) => {
-        val Base = 1704000000000L
-        val evs = Tables.load(s, d, "events")
-          .where(col("ts").isNotNull && col("user_id").isNotNull)
-          .select(round(col("value") * 100).cast(LongType).as("cents"))
-          .collect() // seeds the TEST DOUBLE; the measured read is below
-        val docs: IndexedSeq[StubDoc] =
-          parDocs(evs.toIndexedSeq, 0) { (r, i) =>
-            val cents = r.getLong(0)
-            val bucket = ((cents % 3) + 3) % 3 // deterministic tie bucket
-            val ms = Base + bucket * 60000L
-            val json = statusJson(s"p$i", "s0", ms * 1000L, "v2.0", s"""{"cents":$cents}""")
-            StubDoc(f"p$i%07d", "s0", ms * 1000L, json)
-          }
-        val server = startStub(docs, StubModes(sizeCap = 600, pitMode = true))
-        try {
+        val docs = corpus(seedRows(s, d, subject = lit("s0"), time = tieTime),
+          DocForm("p", CentsData, id = IdForm.Padded))
+        withStub(docs, StubModes(sizeCap = 600, pitMode = true)) { url =>
           val live = s.read.format("graft-status-live")
-            .option("url", s"http://127.0.0.1:${server.getAddress.getPort}")
+            .option("url", url)
             .option("batchSize", "500")
             .load()
-            .select(expr("unix_micros(time)").as("tie_us"),
-              get_json_object(col("data"), "$.cents").cast("long").as("cents"))
-            .groupBy(col("tie_us"))
-            .agg(count(lit(1)).as("n_docs"), sum(col("cents")).as("cents"))
+            .withColumn("tie_us", expr("unix_micros(time)"))
+            .transform(centsPer("tie_us"))
           live.localCheckpoint(true) // materialize THROUGH the PIT-drained live stack
-        } finally server.stop(0)
+        }
       },
       Some("""SELECT (1704000000000000 +
                       ((CAST(round(value*100) AS BIGINT) % 3 + 3) % 3) * 60000000)::BIGINT AS tie_us,
@@ -1509,19 +1483,10 @@ object LiveQueries {
       "q228_live_tls",
       (s, d) => {
         import graft.sources.{ClickHouseDdl, ClickHouseHttpClient}
-        import org.apache.spark.sql.types._
-        val signals = Tables.load(s, d, "events")
-          .where(col("ts").isNotNull && col("user_id").isNotNull)
-          .select(col("user_id").cast(LongType).as("token_id"),
-            col("ts").cast(TimestampType).as("timestamp"),
-            col("event_type").cast(StringType).as("name"),
-            round(col("value") * 100).cast(DoubleType).as("value_number"),
-            col("event_id").cast(StringType).as("value_string"))
+        val signals = chSignals(s, d)
           .repartition(8) // the distributed fan-out, every task handshaking
         val m = TlsStub.shared
-        val server = ChSignalStub.start(TlsStub.httpsServer(m, needClientAuth = true))
-        try {
-          val base = s"https://127.0.0.1:${server.getAddress.getPort}"
+        withServer(ChSignalStub.start(TlsStub.httpsServer(m, needClientAuth = true))) { base =>
           // negative pins BEFORE any data moves: a silently-succeeding
           // untrusted or certificate-less client would be the bug
           val defaultTrust = new ClickHouseHttpClient(base, timeoutMs = 3000)
@@ -1557,7 +1522,7 @@ object LiveQueries {
               sum(col("value_number")).cast(LongType).as("cents"),
               expr("min(unix_micros(timestamp))").as("oldest_us"))
             .localCheckpoint(true) // materialize THROUGH the mTLS wire stack
-        } finally server.stop(0)
+        }
       },
       Some("""SELECT CAST(user_id AS BIGINT) AS token_id,
                count(*)::BIGINT AS n_rows,
@@ -1582,18 +1547,8 @@ object LiveQueries {
       "q229_live_gzip",
       (s, d) => {
         import graft.sources.{ClickHouseDdl, ClickHouseHttpClient, LiveWire}
-        import org.apache.spark.sql.types._
-        val signals = Tables.load(s, d, "events")
-          .where(col("ts").isNotNull && col("user_id").isNotNull)
-          .select(col("user_id").cast(LongType).as("token_id"),
-            col("ts").cast(TimestampType).as("timestamp"),
-            col("event_type").cast(StringType).as("name"),
-            round(col("value") * 100).cast(DoubleType).as("value_number"),
-            col("event_id").cast(StringType).as("value_string"))
-          .repartition(8)
-        val server = ChSignalStub.start(gzip = true)
-        try {
-          val base = s"http://127.0.0.1:${server.getAddress.getPort}"
+        val signals = chSignals(s, d).repartition(8)
+        withServer(ChSignalStub.start(gzip = true)) { base =>
           val gz = LiveWire(gzip = true)
           new ClickHouseHttpClient(base, wire = gz)
             .execute(ClickHouseDdl.signalTableDdl(graft.sources.SignalLiveSource.Schema))
@@ -1615,7 +1570,7 @@ object LiveQueries {
               sum(col("value_number")).cast(LongType).as("cents"),
               expr("max(unix_micros(timestamp))").as("newest_us"))
             .localCheckpoint(true) // materialize THROUGH the compressed wire stack
-        } finally server.stop(0)
+        }
       },
       Some("""SELECT CAST(user_id AS BIGINT) AS token_id,
                count(*)::BIGINT AS n_rows,
@@ -1638,19 +1593,9 @@ object LiveQueries {
       "q230_live_auth",
       (s, d) => {
         import graft.sources.{ChHttpStatusException, ClickHouseDdl, ClickHouseHttpClient, LiveWire}
-        import org.apache.spark.sql.types._
-        val signals = Tables.load(s, d, "events")
-          .where(col("ts").isNotNull && col("user_id").isNotNull)
-          .select(col("user_id").cast(LongType).as("token_id"),
-            col("ts").cast(TimestampType).as("timestamp"),
-            col("event_type").cast(StringType).as("name"),
-            round(col("value") * 100).cast(DoubleType).as("value_number"),
-            col("event_id").cast(StringType).as("value_string"))
-          .repartition(8)
+        val signals = chSignals(s, d).repartition(8)
         val (user, pass) = ("sync_user", "gate-s3cret")
-        val server = ChSignalStub.start(auth = Some((user, pass)))
-        try {
-          val base = s"http://127.0.0.1:${server.getAddress.getPort}"
+        withServer(ChSignalStub.start(auth = Some((user, pass)))) { base =>
           val wire = LiveWire(username = Some(user), password = Some(pass))
           new ClickHouseHttpClient(base, wire = wire)
             .execute(ClickHouseDdl.signalTableDdl(graft.sources.SignalLiveSource.Schema))
@@ -1670,7 +1615,7 @@ object LiveQueries {
               sum(col("value_number")).cast(LongType).as("cents"),
               countDistinct(col("token_id")).as("n_tokens"))
             .localCheckpoint(true) // materialize THROUGH the authenticated wire stack
-        } finally server.stop(0)
+        }
       },
       Some("""SELECT event_type AS name,
                count(*)::BIGINT AS n_rows,
@@ -1696,41 +1641,24 @@ object LiveQueries {
     QueryDef(
       "q231_live_es_sliced",
       (s, d) => {
-        val evs = Tables.load(s, d, "events")
-          .where(col("ts").isNotNull && col("user_id").isNotNull)
-          .select(col("user_id").cast("string").as("subject"),
-            expr("unix_micros(ts)").as("tsu"),
-            round(col("value") * 100).cast(LongType).as("cents"))
-          .collect() // seeds the TEST DOUBLE; the measured read is below
-        val docs: IndexedSeq[StubDoc] =
-          parDocs(evs.toIndexedSeq, 0) { (r, i) =>
-            val (subj, tsu, cents) = (r.getString(0), r.getLong(1), r.getLong(2))
-            StubDoc(s"sl$i", subj, tsu,
-              statusJson(s"sl$i", subj, tsu, "v2.0", s"""{"cents":$cents}"""))
-          }
-        val served = new java.util.concurrent.atomic.AtomicLong
-        val sliceSeen = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
-        val server = startStub(docs, StubModes(pitMode = true),
-          StubCounters(served = served, sliceSeen = sliceSeen))
-        try {
+        val docs = corpus(seedRows(s, d), DocForm("sl", CentsData))
+        val served = new AtomicLong
+        val sliceSeen = new ConcurrentLinkedQueue[Int]()
+        withStub(docs, StubModes(pitMode = true),
+            StubCounters(served = served, sliceSeen = sliceSeen)) { url =>
           val live = s.read.format("graft-status-live")
-            .option("url", s"http://127.0.0.1:${server.getAddress.getPort}")
+            .option("url", url)
             .option("batchSize", "500").option("slices", "8").load()
           require(live.rdd.getNumPartitions == 8, "sliced scan must plan 8 tasks")
-          val out = live
-            .select(col("subject"),
-              get_json_object(col("data"), "$.cents").cast("long").as("cents"))
-            .groupBy(col("subject"))
-            .agg(count(lit(1)).as("n_docs"), sum(col("cents")).as("cents"))
+          val out = centsPer("subject")(live)
             .localCheckpoint(true) // materialize THROUGH the sliced wire stack
-          import scala.jdk.CollectionConverters._
           require(sliceSeen.asScala.toSet == (0 until 8).toSet,
             s"expected all 8 slices requested, saw ${sliceSeen.asScala.toSet}")
           require(served.get() == docs.length.toLong,
             s"wire served ${served.get()} docs for a ${docs.length}-doc corpus " +
               "(slice overlap or loss)")
           out
-        } finally server.stop(0)
+        }
       },
       Some("""SELECT CAST(user_id AS VARCHAR) AS subject,
                count(*)::BIGINT AS n_docs,
@@ -1757,41 +1685,22 @@ object LiveQueries {
     QueryDef(
       "q234_live_es_hot_subject",
       (s, d) => {
-        val evs = Tables.load(s, d, "events")
-          .where(col("ts").isNotNull && col("user_id").isNotNull)
-          .select(
-            when(col("user_id") % 5 === 0, lit("hot"))
-              .otherwise(col("user_id").cast("string")).as("subject"),
-            expr("unix_micros(ts)").as("tsu"),
-            round(col("value") * 100).cast(LongType).as("cents"))
-          .collect() // seeds the TEST DOUBLE; the measured read is below
-        val docs: IndexedSeq[StubDoc] =
-          parDocs(evs.toIndexedSeq, 0) { (r, i) =>
-            val (subj, tsu, cents) = (r.getString(0), r.getLong(1), r.getLong(2))
-            StubDoc(s"hs$i", subj, tsu,
-              statusJson(s"hs$i", subj, tsu, "v2.0", s"""{"cents":$cents}"""))
-          }
+        val docs = corpus(seedRows(s, d, subject = foldedOnto("hot")), DocForm("hs", CentsData))
         val hotTotal = docs.count(_.subject == "hot").toLong
         val subjects = docs.map(_.subject).distinct
-        val sliceSeen = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
-        val slicedSubjects = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-        val servedSliced = new java.util.concurrent.atomic.AtomicLong
-        val server = startStub(docs, StubModes(pitMode = true),
-          StubCounters(sliceSeen = sliceSeen, slicedSubjects = slicedSubjects,
-            servedSliced = servedSliced))
-        try {
+        val sliceSeen = new ConcurrentLinkedQueue[Int]()
+        val slicedSubjects = new ConcurrentLinkedQueue[String]()
+        val servedSliced = new AtomicLong
+        withStub(docs, StubModes(pitMode = true),
+            StubCounters(sliceSeen = sliceSeen, slicedSubjects = slicedSubjects,
+              servedSliced = servedSliced)) { url =>
           val live = s.read.format("graft-status-live")
-            .option("url", s"http://127.0.0.1:${server.getAddress.getPort}")
+            .option("url", url)
             .option("batchSize", "64").option("slices", "8")
             .option("hotSubjectPages", "2").load()
             .where(col("subject").isin(subjects: _*))
-          val out = live
-            .select(col("subject"),
-              get_json_object(col("data"), "$.cents").cast("long").as("cents"))
-            .groupBy(col("subject"))
-            .agg(count(lit(1)).as("n_docs"), sum(col("cents")).as("cents"))
+          val out = centsPer("subject")(live)
             .localCheckpoint(true) // materialize THROUGH the hot-sliced stack
-          import scala.jdk.CollectionConverters._
           require(slicedSubjects.asScala.toSet == Set("hot"),
             s"only the hot subject may ride the sliced drain, saw ${slicedSubjects.asScala.toSet}")
           require(sliceSeen.asScala.toSet == (0 until 8).toSet,
@@ -1800,7 +1709,7 @@ object LiveQueries {
             s"sliced path served ${servedSliced.get()} docs for a $hotTotal-doc hot subject " +
               "(slice overlap or loss)")
           out
-        } finally server.stop(0)
+        }
       },
       Some("""WITH m AS (
                SELECT CASE WHEN user_id % 5 = 0 THEN 'hot'
@@ -1826,58 +1735,33 @@ object LiveQueries {
     QueryDef(
       "q236_live_es_ranged_census",
       (s, d) => {
-        import org.apache.spark.sql.types.LongType
-        val evs = Tables.load(s, d, "events")
-          .where(col("ts").isNotNull && col("user_id").isNotNull)
-          .select(col("user_id").cast("string").as("subject"),
-            expr("unix_micros(ts)").as("tsu"),
-            round(col("value") * 100).cast(LongType).as("cents"),
-            col("user_id").cast(LongType).as("uid"))
-          .collect() // seeds the TEST DOUBLE; the measured read is below
+        val evs = seedRows(s, d, extra = Seq(col("user_id").cast(LongType).as("uid")))
         val msAll = evs.map(_.getLong(1) / 1000)
         val cut = (msAll.min + msAll.max) / 2 // the even-user watermark
-        val docs: IndexedSeq[StubDoc] =
-          parDocs(evs.toIndexedSeq, 0) { (r, i) =>
-            val (subj, tsu, cents) = (r.getString(0), r.getLong(1), r.getLong(2))
-            StubDoc(s"rc$i", subj, tsu,
-              statusJson(s"rc$i", subj, tsu, "v2.0", s"""{"cents":$cents}"""))
-          }
+        val docs = corpus(evs, DocForm("rc", CentsData))
         val census = evs.map(_.getString(0)).distinct.sorted
         val stops = census.filter(_.toLong % 2 == 0).map(sub => s"$sub\t$cut")
-        def stage(lines: Seq[String]): java.nio.file.Path = {
-          val f = java.nio.file.Files.createTempFile("graft-q236", ".txt")
-          java.nio.file.Files.write(f, lines.mkString("", "\n", "\n")
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          f
-        }
-        val cPath = stage(census)
-        val sPath = stage(stops)
         val expected = evs.count(r => r.getLong(3) % 2 == 1 || r.getLong(1) / 1000 < cut)
-        val served = new java.util.concurrent.atomic.AtomicLong
-        val server = startStub(docs, counters = StubCounters(served = served))
-        try {
-          val live = s.read.format("graft-status-live")
-            .option("url", s"http://127.0.0.1:${server.getAddress.getPort}")
-            .option("batchSize", "200")
-            .option("subjectsPath", cPath.toString)
-            .option("stopBySubjectPath", sPath.toString)
-            .option("censusRanges", "6").load()
-          require(live.rdd.getNumPartitions == 6,
-            s"expected 6 byte-range groups, planned ${live.rdd.getNumPartitions}")
-          val out = live
-            .select(col("subject"),
-              get_json_object(col("data"), "$.cents").cast("long").as("cents"))
-            .groupBy(col("subject"))
-            .agg(count(lit(1)).as("n_docs"), sum(col("cents")).as("cents"))
-            .localCheckpoint(true) // materialize THROUGH the ranged plan
-          require(served.get() == expected.toLong,
-            s"wire served ${served.get()} docs, watermark-surviving set is $expected " +
-              "(a stop failed to ride its byte range, or a range re-read subjects)")
-          out
-        } finally {
-          server.stop(0)
-          java.nio.file.Files.deleteIfExists(cPath)
-          java.nio.file.Files.deleteIfExists(sPath)
+        val served = new AtomicLong
+        withTempDirs("q236") { case Seq(dir) =>
+          val cPath = writeLines(dir, "census", census)
+          val sPath = writeLines(dir, "stops", stops)
+          withStub(docs, counters = StubCounters(served = served)) { url =>
+            val live = s.read.format("graft-status-live")
+              .option("url", url)
+              .option("batchSize", "200")
+              .option("subjectsPath", cPath.toString)
+              .option("stopBySubjectPath", sPath.toString)
+              .option("censusRanges", "6").load()
+            require(live.rdd.getNumPartitions == 6,
+              s"expected 6 byte-range groups, planned ${live.rdd.getNumPartitions}")
+            val out = centsPer("subject")(live)
+              .localCheckpoint(true) // materialize THROUGH the ranged plan
+            require(served.get() == expected.toLong,
+              s"wire served ${served.get()} docs, watermark-surviving set is $expected " +
+                "(a stop failed to ride its byte range, or a range re-read subjects)")
+            out
+          }
         }
       },
       Some("""WITH e AS (SELECT CAST(user_id AS BIGINT) uid,
@@ -1906,49 +1790,30 @@ object LiveQueries {
     QueryDef(
       "q239_live_es_window_cuts",
       (s, d) => {
-        val evs = Tables.load(s, d, "events")
-          .where(col("ts").isNotNull && col("user_id").isNotNull)
-          .select(
-            when(col("user_id") % 5 === 0, lit("hot"))
-              .otherwise(col("user_id").cast("string")).as("subject"),
-            expr("unix_micros(ts)").as("tsu"),
-            round(col("value") * 100).cast(LongType).as("cents"))
-          .collect() // seeds the TEST DOUBLE; the measured read is below
-        val docs: IndexedSeq[StubDoc] =
-          parDocs(evs.toIndexedSeq, 0) { (r, i) =>
-            val (subj, tsu, cents) = (r.getString(0), r.getLong(1), r.getLong(2))
-            StubDoc(s"wc$i", subj, tsu,
-              statusJson(s"wc$i", subj, tsu, "v2.0", s"""{"cents":$cents}"""))
-          }
+        val docs = corpus(seedRows(s, d, subject = foldedOnto("hot")), DocForm("wc", CentsData))
         val subjects = docs.map(_.subject).distinct
         // the scan's cold-subject cap: two groups per core
         val coldGroups = math.min(2 * s.sparkContext.defaultParallelism, subjects.length - 1)
-        val sliceSeen = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
-        val pitOpened = new java.util.concurrent.atomic.AtomicLong
-        val server = startStub(docs, StubModes(pitMode = false),
-          StubCounters(sliceSeen = sliceSeen, pitOpened = pitOpened))
-        try {
+        val sliceSeen = new ConcurrentLinkedQueue[Int]()
+        val pitOpened = new AtomicLong
+        withStub(docs, StubModes(pitMode = false),
+            StubCounters(sliceSeen = sliceSeen, pitOpened = pitOpened)) { url =>
           val live = s.read.format("graft-status-live")
-            .option("url", s"http://127.0.0.1:${server.getAddress.getPort}")
+            .option("url", url)
             .option("batchSize", "64").option("slices", "8")
             .option("hotSubjectPages", "2").load()
             .where(col("subject").isin(subjects: _*))
           val parts = live.rdd.getNumPartitions
           require(parts > coldGroups + 1 && parts <= coldGroups + 8,
             s"expected $coldGroups cold groups + 2..8 whale time tiles, planned $parts")
-          val out = live
-            .select(col("subject"),
-              get_json_object(col("data"), "$.cents").cast("long").as("cents"))
-            .groupBy(col("subject"))
-            .agg(count(lit(1)).as("n_docs"), sum(col("cents")).as("cents"))
+          val out = centsPer("subject")(live)
             .localCheckpoint(true) // materialize THROUGH the tiled plan
-          import scala.jdk.CollectionConverters._
           require(sliceSeen.asScala.isEmpty,
             "no slice request may reach a PIT-less server")
           require(pitOpened.get() == 0L,
             "no PIT may be opened against a PIT-less server")
           out
-        } finally server.stop(0)
+        }
       },
       Some("""WITH m AS (
                SELECT CASE WHEN user_id % 5 = 0 THEN 'hot'
@@ -1978,76 +1843,48 @@ object LiveQueries {
     QueryDef(
       "q237_live_es_ranged_hotlist",
       (s, d) => {
-        import org.apache.spark.sql.types.LongType
-        val evs = Tables.load(s, d, "events")
-          .where(col("ts").isNotNull && col("user_id").isNotNull)
-          .select(
-            when(col("user_id") % 5 === 0, lit("hot"))
-              .otherwise(col("user_id").cast("string")).as("subject"),
-            expr("unix_micros(ts)").as("tsu"),
-            round(col("value") * 100).cast(LongType).as("cents"))
-          .collect() // seeds the TEST DOUBLE; the measured read is below
-        val docs: IndexedSeq[StubDoc] =
-          parDocs(evs.toIndexedSeq, 0) { (r, i) =>
-            val (subj, tsu, cents) = (r.getString(0), r.getLong(1), r.getLong(2))
-            StubDoc(s"rh$i", subj, tsu,
-              statusJson(s"rh$i", subj, tsu, "v2.0", s"""{"cents":$cents}"""))
-          }
+        val evs = seedRows(s, d, subject = foldedOnto("hot"))
+        val docs = corpus(evs, DocForm("rh", CentsData))
         val hotMs = evs.filter(_.getString(0) == "hot").map(_.getLong(1) / 1000)
         val cut = (hotMs.min + hotMs.max) / 2 // the whale's midpoint watermark
         val census = evs.map(_.getString(0)).distinct.sorted
-        def stage(lines: Seq[String]): java.nio.file.Path = {
-          val f = java.nio.file.Files.createTempFile("graft-q237", ".txt")
-          java.nio.file.Files.write(f, lines.mkString("", "\n", "\n")
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          f
-        }
-        val cPath = stage(census)
-        val sPath = stage(Seq(s"hot\t$cut"))
-        val hPath = stage(Seq("hot"))
         val hotSurviving = evs.count(r =>
           r.getString(0) == "hot" && r.getLong(1) / 1000 < cut)
         val expected = evs.count(_.getString(0) != "hot") + hotSurviving
-        val served = new java.util.concurrent.atomic.AtomicLong
-        val servedSliced = new java.util.concurrent.atomic.AtomicLong
-        val sliceSeen = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
-        val slicedSubjects = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-        val server = startStub(docs, StubModes(pitMode = true),
-          StubCounters(served = served, servedSliced = servedSliced, sliceSeen = sliceSeen,
-            slicedSubjects = slicedSubjects))
-        try {
-          val live = s.read.format("graft-status-live")
-            .option("url", s"http://127.0.0.1:${server.getAddress.getPort}")
-            .option("batchSize", "200")
-            .option("subjectsPath", cPath.toString)
-            .option("stopBySubjectPath", sPath.toString)
-            .option("hotSubjectsPath", hPath.toString)
-            .option("censusRanges", "6").option("slices", "8").load()
-          require(live.rdd.getNumPartitions == 14,
-            s"expected 6 byte-range groups + 8 whale slices, planned ${live.rdd.getNumPartitions}")
-          val out = live
-            .select(col("subject"),
-              get_json_object(col("data"), "$.cents").cast("long").as("cents"))
-            .groupBy(col("subject"))
-            .agg(count(lit(1)).as("n_docs"), sum(col("cents")).as("cents"))
-            .localCheckpoint(true) // materialize THROUGH the hot-list ranged plan
-          import scala.jdk.CollectionConverters._
-          require(slicedSubjects.asScala.toSet == Set("hot"),
-            s"only the hot-list may ride the sliced drain, saw ${slicedSubjects.asScala.toSet}")
-          require(sliceSeen.asScala.toSet == (0 until 8).toSet,
-            s"expected the whale across all 8 slices, saw ${sliceSeen.asScala.toSet}")
-          require(servedSliced.get() == hotSurviving.toLong,
-            s"sliced path served ${servedSliced.get()} of a $hotSurviving-doc watermarked whale " +
-              "(the stops-file watermark must ride the slice windows)")
-          require(served.get() == expected.toLong,
-            s"wire served ${served.get()}, surviving set is $expected " +
-              "(a tile failed to exclude the whale, or excluded a cold subject)")
-          out
-        } finally {
-          server.stop(0)
-          java.nio.file.Files.deleteIfExists(cPath)
-          java.nio.file.Files.deleteIfExists(sPath)
-          java.nio.file.Files.deleteIfExists(hPath)
+        val served = new AtomicLong
+        val servedSliced = new AtomicLong
+        val sliceSeen = new ConcurrentLinkedQueue[Int]()
+        val slicedSubjects = new ConcurrentLinkedQueue[String]()
+        withTempDirs("q237") { case Seq(dir) =>
+          val cPath = writeLines(dir, "census", census)
+          val sPath = writeLines(dir, "stops", Seq(s"hot\t$cut"))
+          val hPath = writeLines(dir, "hot", Seq("hot"))
+          withStub(docs, StubModes(pitMode = true),
+              StubCounters(served = served, servedSliced = servedSliced, sliceSeen = sliceSeen,
+                slicedSubjects = slicedSubjects)) { url =>
+            val live = s.read.format("graft-status-live")
+              .option("url", url)
+              .option("batchSize", "200")
+              .option("subjectsPath", cPath.toString)
+              .option("stopBySubjectPath", sPath.toString)
+              .option("hotSubjectsPath", hPath.toString)
+              .option("censusRanges", "6").option("slices", "8").load()
+            require(live.rdd.getNumPartitions == 14,
+              s"expected 6 byte-range groups + 8 whale slices, planned ${live.rdd.getNumPartitions}")
+            val out = centsPer("subject")(live)
+              .localCheckpoint(true) // materialize THROUGH the hot-list ranged plan
+            require(slicedSubjects.asScala.toSet == Set("hot"),
+              s"only the hot-list may ride the sliced drain, saw ${slicedSubjects.asScala.toSet}")
+            require(sliceSeen.asScala.toSet == (0 until 8).toSet,
+              s"expected the whale across all 8 slices, saw ${sliceSeen.asScala.toSet}")
+            require(servedSliced.get() == hotSurviving.toLong,
+              s"sliced path served ${servedSliced.get()} of a $hotSurviving-doc watermarked whale " +
+                "(the stops-file watermark must ride the slice windows)")
+            require(served.get() == expected.toLong,
+              s"wire served ${served.get()}, surviving set is $expected " +
+                "(a tile failed to exclude the whale, or excluded a cold subject)")
+            out
+          }
         }
       },
       Some("""WITH m AS (
@@ -2080,71 +1917,35 @@ object LiveQueries {
       "q238_live_sync_ranged",
       (s, d) => {
         import graft.jobs.{SyncJob, SyncOptions}
-        import graft.sources.{DeviceDim, SignalSink}
-        val evs = Tables.load(s, d, "events")
-          .where(col("ts").isNotNull && col("user_id").isNotNull)
-          .select(
-            when(col("user_id") % 5 === 0, lit("1"))
-              .otherwise(col("user_id").cast("string")).as("subject"),
-            expr("unix_micros(ts)").as("tsu"),
-            round(col("value") * 100).cast(LongType).as("cents"))
-          .collect() // seeds the TEST DOUBLE; the measured path is below
-        val mid = { val ts = evs.map(_.getLong(1)); (ts.min + ts.max) / 2 }
-        def mkDoc(r: org.apache.spark.sql.Row, i: Int): StubDoc = {
-          val (subj, tsu, cents) = (r.getString(0), r.getLong(1), r.getLong(2))
-          StubDoc(s"g$subj-$tsu-$i", subj, tsu,
-            statusJson(s"g$i", subj, tsu, "v1.0", s"""{"speed":$cents,"make":"m"}"""))
-        }
-        val (newer, older) = evs.toIndexedSeq.partition(_.getLong(1) >= mid)
-        // seeded once each (parDocs), round 2 = round 1's docs + the backfill
-        val docs1 = parDocs(newer, 0)(mkDoc)
-        val docs2 = docs1 ++ parDocs(older, newer.length)(mkDoc)
+        import graft.sources.DeviceDim
+        val evs = seedRows(s, d, subject = foldedOnto("1"))
+        val (newer, older) = halves(evs, ms = false)
+        // round 2 = round 1's docs + the backfill
+        val (docs1, docs2) = generations(newer, older,
+          DocForm("g", SpeedData, version = "v1.0", id = IdForm.Keyed))
         val tokens = evs.map(_.getString(0)).distinct.sorted
-        val dim = DeviceDim.identityDim(s, tokens.map(_.toLong).toSeq.sorted)
-        val opts = SyncOptions(tokens = tokens.toSeq,
+        val dim = DeviceDim.identityDim(s, tokens.map(_.toLong).sorted)
+        val opts = SyncOptions(tokens = tokens,
           start = Some(new java.sql.Timestamp(0L)),
           stop = Some(new java.sql.Timestamp(9999999999999L)))
-        val sinkDir = java.nio.file.Files
-          .createTempDirectory("graft-q238-sink").resolve("signals").toString
-        val staging = java.nio.file.Files.createTempDirectory("graft-q238-staging")
-        def url(server: HttpServer) = s"http://127.0.0.1:${server.getAddress.getPort}"
-        try {
-          val sliceSeen = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
-          val slicedSubjects = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-          val server1 = startStub(docs1, StubModes(pitMode = true),
-            StubCounters(sliceSeen = sliceSeen, slicedSubjects = slicedSubjects))
-          try {
-            val round1 = SyncJob.runLiveRanged(s, url(server1), dim, existingSink = None,
+        withTempDirs("q238-sink", "q238-staging") { case Seq(dir, staging) =>
+          val sinkDir = dir.resolve("signals").toString
+          def round(url: String, sink: Option[DataFrame]) =
+            SyncJob.runLiveRanged(s, url, dim, existingSink = sink,
               opts, stagingDir = staging.toString, batchSize = 2000,
               censusRanges = 6, slices = 8, hotSubjects = Seq("1"))
-            SignalSink.appendParquet(round1, sinkDir, buckets = 8)
-          } finally server1.stop(0)
-          import scala.jdk.CollectionConverters._
+          val sliceSeen = new ConcurrentLinkedQueue[Int]()
+          val slicedSubjects = new ConcurrentLinkedQueue[String]()
+          syncRound(s, docs1, sinkDir, StubModes(pitMode = true),
+            StubCounters(sliceSeen = sliceSeen, slicedSubjects = slicedSubjects))(round)
           require(slicedSubjects.asScala.toSet == Set("1"),
             s"only the whale may ride the sliced drain, saw ${slicedSubjects.asScala.toSet}")
           require(sliceSeen.asScala.toSet == (0 until 8).toSet,
             s"expected the whale across all 8 slices, saw ${sliceSeen.asScala.toSet}")
           require(java.nio.file.Files.list(staging).iterator().asScala.nonEmpty,
             "caller-owned staging must survive the action (tasks read it mid-flight)")
-          val server2 = startStub(docs2, StubModes(pitMode = true))
-          try {
-            val sink1 = SignalSink.readParquet(s, sinkDir)
-            val round2 = SyncJob.runLiveRanged(s, url(server2), dim,
-              existingSink = Some(sink1), opts, stagingDir = staging.toString,
-              batchSize = 2000, censusRanges = 6, slices = 8, hotSubjects = Seq("1"))
-            SignalSink.appendParquet(round2, sinkDir, buckets = 8)
-          } finally server2.stop(0)
-          SignalSink.readParquet(s, sinkDir)
-            .groupBy(col("tokenId").as("token_id"))
-            .agg(count(lit(1)).as("n_signals"),
-              sum(when(col("name") === "Vehicle.Speed", col("valueNumber"))
-                .otherwise(lit(0.0))).cast(LongType).as("speed_sum"),
-              expr("min(unix_micros(timestamp))").as("oldest_us"),
-              expr("max(unix_micros(timestamp))").as("newest_us"))
-        } finally {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(staging).iterator().asScala.toSeq.reverse
-            .foreach(java.nio.file.Files.deleteIfExists(_))
+          syncRound(s, docs2, sinkDir, StubModes(pitMode = true))(round)
+          signalAggregate(SignalSink.readParquet(s, sinkDir)).localCheckpoint(true)
         }
       },
       Some("""WITH m AS (
@@ -2178,25 +1979,12 @@ object LiveQueries {
       "q240_live_sync_hot_discovery",
       (s, d) => {
         import graft.jobs.{SyncJob, SyncOptions}
-        import graft.sources.{DeviceDim, SignalSink}
-        val evs = Tables.load(s, d, "events")
-          .where(col("ts").isNotNull && col("user_id").isNotNull)
-          .select(
-            when(col("user_id") % 5 === 0, lit("1"))
-              .otherwise(col("user_id").cast("string")).as("subject"),
-            expr("unix_micros(ts)").as("tsu"),
-            round(col("value") * 100).cast(LongType).as("cents"))
-          .collect() // seeds the TEST DOUBLE; the measured path is below
-        val mid = { val ts = evs.map(_.getLong(1)); (ts.min + ts.max) / 2 }
-        def mkDoc(r: org.apache.spark.sql.Row, i: Int): StubDoc = {
-          val (subj, tsu, cents) = (r.getString(0), r.getLong(1), r.getLong(2))
-          StubDoc(s"h$subj-$tsu-$i", subj, tsu,
-            statusJson(s"h$i", subj, tsu, "v1.0", s"""{"speed":$cents,"make":"m"}"""))
-        }
-        val (newer, older) = evs.toIndexedSeq.partition(_.getLong(1) >= mid)
-        // seeded once each (parDocs), round 2 = round 1's docs + the backfill
-        val docs1 = parDocs(newer, 0)(mkDoc)
-        val docs2 = docs1 ++ parDocs(older, newer.length)(mkDoc)
+        import graft.sources.DeviceDim
+        val evs = seedRows(s, d, subject = foldedOnto("1"))
+        val (newer, older) = halves(evs, ms = false)
+        // round 2 = round 1's docs + the backfill
+        val (docs1, docs2) = generations(newer, older,
+          DocForm("h", SpeedData, version = "v1.0", id = IdForm.Keyed))
         // the discovery threshold, derived from the fixture itself: the
         // whale's round-1 sink depth (2 signal rows per doc) must clear
         // it, every cold token must not — the midpoint is the widest
@@ -2208,53 +1996,30 @@ object LiveQueries {
           s"fixture: the folded whale ($whaleRows rows) must out-weigh every cold token ($maxCold)")
         val hotMin = (whaleRows + maxCold) / 2
         val tokens = evs.map(_.getString(0)).distinct.sorted
-        val dim = DeviceDim.identityDim(s, tokens.map(_.toLong).toSeq.sorted)
-        val opts = SyncOptions(tokens = tokens.toSeq,
+        val dim = DeviceDim.identityDim(s, tokens.map(_.toLong).sorted)
+        val opts = SyncOptions(tokens = tokens,
           start = Some(new java.sql.Timestamp(0L)),
           stop = Some(new java.sql.Timestamp(9999999999999L)))
-        val sinkDir = java.nio.file.Files
-          .createTempDirectory("graft-q240-sink").resolve("signals").toString
-        val staging = java.nio.file.Files.createTempDirectory("graft-q240-staging")
-        def url(server: HttpServer) = s"http://127.0.0.1:${server.getAddress.getPort}"
-        try {
-          import scala.jdk.CollectionConverters._
-          val sliced1 = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-          val server1 = startStub(docs1, StubModes(pitMode = true),
-            StubCounters(slicedSubjects = sliced1))
-          try {
-            val round1 = SyncJob.runLiveRanged(s, url(server1), dim, existingSink = None,
+        withTempDirs("q240-sink", "q240-staging") { case Seq(dir, staging) =>
+          val sinkDir = dir.resolve("signals").toString
+          def round(url: String, sink: Option[DataFrame]) =
+            SyncJob.runLiveRanged(s, url, dim, existingSink = sink,
               opts, stagingDir = staging.toString, batchSize = 2000,
               censusRanges = 6, slices = 8, hotMinRows = hotMin)
-            SignalSink.appendParquet(round1, sinkDir, buckets = 8)
-          } finally server1.stop(0)
+          val sliced1 = new ConcurrentLinkedQueue[String]()
+          syncRound(s, docs1, sinkDir, StubModes(pitMode = true),
+            StubCounters(slicedSubjects = sliced1))(round)
           require(sliced1.asScala.isEmpty,
             s"round 1 has no sink to probe — plain tiles, saw sliced ${sliced1.asScala.toSet}")
-          val sliceSeen = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
-          val sliced2 = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-          val server2 = startStub(docs2, StubModes(pitMode = true),
-            StubCounters(sliceSeen = sliceSeen, slicedSubjects = sliced2))
-          try {
-            val sink1 = SignalSink.readParquet(s, sinkDir)
-            val round2 = SyncJob.runLiveRanged(s, url(server2), dim,
-              existingSink = Some(sink1), opts, stagingDir = staging.toString,
-              batchSize = 2000, censusRanges = 6, slices = 8, hotMinRows = hotMin)
-            SignalSink.appendParquet(round2, sinkDir, buckets = 8)
-          } finally server2.stop(0)
+          val sliceSeen = new ConcurrentLinkedQueue[Int]()
+          val sliced2 = new ConcurrentLinkedQueue[String]()
+          syncRound(s, docs2, sinkDir, StubModes(pitMode = true),
+            StubCounters(sliceSeen = sliceSeen, slicedSubjects = sliced2))(round)
           require(sliced2.asScala.toSet == Set("1"),
             s"round 2 must discover EXACTLY the whale from the sink, saw ${sliced2.asScala.toSet}")
           require(sliceSeen.asScala.toSet == (0 until 8).toSet,
             s"expected the discovered whale across all 8 slices, saw ${sliceSeen.asScala.toSet}")
-          SignalSink.readParquet(s, sinkDir)
-            .groupBy(col("tokenId").as("token_id"))
-            .agg(count(lit(1)).as("n_signals"),
-              sum(when(col("name") === "Vehicle.Speed", col("valueNumber"))
-                .otherwise(lit(0.0))).cast(LongType).as("speed_sum"),
-              expr("min(unix_micros(timestamp))").as("oldest_us"),
-              expr("max(unix_micros(timestamp))").as("newest_us"))
-        } finally {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(staging).iterator().asScala.toSeq.reverse
-            .foreach(java.nio.file.Files.deleteIfExists(_))
+          signalAggregate(SignalSink.readParquet(s, sinkDir)).localCheckpoint(true)
         }
       },
       Some("""WITH m AS (
@@ -2288,20 +2053,8 @@ object LiveQueries {
     QueryDef(
       "q241_live_es_ranged_weighted",
       (s, d) => {
-        val evs = Tables.load(s, d, "events")
-          .where(col("ts").isNotNull && col("user_id").isNotNull)
-          .select(
-            when(col("user_id") % 5 === 0, lit("0-hot"))
-              .otherwise(col("user_id").cast("string")).as("subject"),
-            expr("unix_micros(ts)").as("tsu"),
-            round(col("value") * 100).cast(LongType).as("cents"))
-          .collect() // seeds the TEST DOUBLE; the measured read is below
-        val docs: IndexedSeq[StubDoc] =
-          parDocs(evs.toIndexedSeq, 0) { (r, i) =>
-            val (subj, tsu, cents) = (r.getString(0), r.getLong(1), r.getLong(2))
-            StubDoc(s"wb$i", subj, tsu,
-              statusJson(s"wb$i", subj, tsu, "v2.0", s"""{"cents":$cents}"""))
-          }
+        val evs = seedRows(s, d, subject = foldedOnto("0-hot"))
+        val docs = corpus(evs, DocForm("wb", CentsData))
         val wOf: Map[String, Long] =
           evs.groupBy(_.getString(0)).view.mapValues(_.length.toLong).toMap
         val census = wOf.keys.toSeq.sorted
@@ -2314,57 +2067,44 @@ object LiveQueries {
         // is not the deterministic outcome) and sort FIRST in the census
         require(wOf("0-hot") > share && census.head == "0-hot",
           s"fixture: whale ${wOf("0-hot")} must exceed share $share and sort first")
-        def stage(lines: Seq[String]): java.nio.file.Path = {
-          val f = java.nio.file.Files.createTempFile("graft-q241", ".txt")
-          java.nio.file.Files.write(f, lines.mkString("", "\n", "\n")
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          f
-        }
-        val cPath = stage(census)
-        val wPath = stage(census.map(sub => s"$sub\t${wOf(sub)}"))
-        // the planner's own tiling, checked against the model BEFORE the
-        // read: whale isolated, every cold group within the provable bound
-        val ranges = graft.sources.StatusLiveSource.planCensusRangesHot(
-          cPath.toString, None, g, Set.empty, Some(wPath.toString)).ranges
-        val tiles = ranges.map(r => graft.sources.StatusLiveSource.readRange(
-          cPath.toString, r.cStart, r.cEnd))
-        require(tiles.flatten == census, "weighted tiles must reconstruct the census")
-        require(tiles.head == Seq("0-hot"),
-          s"the whale must own its group, got head tile ${tiles.head.take(3)}…")
-        val coldLoads = tiles.tail.map(_.map(wOf).sum)
-        require(coldLoads.forall(_ <= share + maxCold),
-          s"cold group past the provable bound ${share + maxCold}: $coldLoads")
-        val served = new java.util.concurrent.atomic.AtomicLong
-        val server = startStub(docs, counters = StubCounters(served = served))
-        try {
-          val live = s.read.format("graft-status-live")
-            .option("url", s"http://127.0.0.1:${server.getAddress.getPort}")
-            .option("batchSize", "500")
-            .option("subjectsPath", cPath.toString)
-            .option("censusWeightsPath", wPath.toString)
-            .option("censusRanges", g.toString).load()
-          require(live.rdd.getNumPartitions == ranges.length,
-            s"expected ${ranges.length} weighted groups, planned ${live.rdd.getNumPartitions}")
-          val out = live
-            .select(col("subject"),
-              get_json_object(col("data"), "$.cents").cast("long").as("cents"))
-            .groupBy(col("subject"))
-            .agg(count(lit(1)).as("n_docs"), sum(col("cents")).as("cents"))
-            .localCheckpoint(true) // materialize THROUGH the weighted ranged plan
-          // exactly-once on the WIRE, modulo the page loop's deliberate
-          // boundary overlap: each page beyond a loop's first may
-          // re-serve one boundary-tie doc (deduped by id in the reader),
-          // so the ceiling is the modeled extra-page count — a tile
-          // lost to the tiling (under) or re-read whole (over by a
-          // subject's weight) breaks either side
-          val extraPages = wOf.values.map(w => (w + 499) / 500 - 1).sum
-          require(served.get() >= total && served.get() - total <= extraPages,
-            s"wire served ${served.get()} of $total docs (allowed overlap $extraPages)")
-          out
-        } finally {
-          server.stop(0)
-          java.nio.file.Files.deleteIfExists(cPath)
-          java.nio.file.Files.deleteIfExists(wPath)
+        withTempDirs("q241") { case Seq(dir) =>
+          val cPath = writeLines(dir, "census", census)
+          val wPath = writeLines(dir, "weights", census.map(sub => s"$sub\t${wOf(sub)}"))
+          // the planner's own tiling, checked against the model BEFORE the
+          // read: whale isolated, every cold group within the provable bound
+          val ranges = graft.sources.StatusLiveSource.planCensusRangesHot(
+            cPath.toString, None, g, Set.empty, Some(wPath.toString)).ranges
+          val tiles = ranges.map(r => graft.sources.StatusLiveSource.readRange(
+            cPath.toString, r.cStart, r.cEnd))
+          require(tiles.flatten == census, "weighted tiles must reconstruct the census")
+          require(tiles.head == Seq("0-hot"),
+            s"the whale must own its group, got head tile ${tiles.head.take(3)}…")
+          val coldLoads = tiles.tail.map(_.map(wOf).sum)
+          require(coldLoads.forall(_ <= share + maxCold),
+            s"cold group past the provable bound ${share + maxCold}: $coldLoads")
+          val served = new AtomicLong
+          withStub(docs, counters = StubCounters(served = served)) { url =>
+            val live = s.read.format("graft-status-live")
+              .option("url", url)
+              .option("batchSize", "500")
+              .option("subjectsPath", cPath.toString)
+              .option("censusWeightsPath", wPath.toString)
+              .option("censusRanges", g.toString).load()
+            require(live.rdd.getNumPartitions == ranges.length,
+              s"expected ${ranges.length} weighted groups, planned ${live.rdd.getNumPartitions}")
+            val out = centsPer("subject")(live)
+              .localCheckpoint(true) // materialize THROUGH the weighted ranged plan
+            // exactly-once on the WIRE, modulo the page loop's deliberate
+            // boundary overlap: each page beyond a loop's first may
+            // re-serve one boundary-tie doc (deduped by id in the reader),
+            // so the ceiling is the modeled extra-page count — a tile
+            // lost to the tiling (under) or re-read whole (over by a
+            // subject's weight) breaks either side
+            val extraPages = wOf.values.map(w => (w + 499) / 500 - 1).sum
+            require(served.get() >= total && served.get() - total <= extraPages,
+              s"wire served ${served.get()} of $total docs (allowed overlap $extraPages)")
+            out
+          }
         }
       },
       Some("""WITH m AS (
@@ -2394,20 +2134,8 @@ object LiveQueries {
     QueryDef(
       "q242_live_es_ranged_weighted_tail",
       (s, d) => {
-        val evs = Tables.load(s, d, "events")
-          .where(col("ts").isNotNull && col("user_id").isNotNull)
-          .select(
-            when(col("user_id") % 5 === 0, lit("z-hot"))
-              .otherwise(col("user_id").cast("string")).as("subject"),
-            expr("unix_micros(ts)").as("tsu"),
-            round(col("value") * 100).cast(LongType).as("cents"))
-          .collect() // seeds the TEST DOUBLE; the measured read is below
-        val docs: IndexedSeq[StubDoc] =
-          parDocs(evs.toIndexedSeq, 0) { (r, i) =>
-            val (subj, tsu, cents) = (r.getString(0), r.getLong(1), r.getLong(2))
-            StubDoc(s"wt$i", subj, tsu,
-              statusJson(s"wt$i", subj, tsu, "v2.0", s"""{"cents":$cents}"""))
-          }
+        val evs = seedRows(s, d, subject = foldedOnto("z-hot"))
+        val docs = corpus(evs, DocForm("wt", CentsData))
         val wOf: Map[String, Long] =
           evs.groupBy(_.getString(0)).view.mapValues(_.length.toLong).toMap
         val census = wOf.keys.toSeq.sorted
@@ -2417,49 +2145,36 @@ object LiveQueries {
         val maxCold = (wOf - "z-hot").values.max
         require(census.last == "z-hot" && wOf("z-hot") > share && wOf("z-hot") < total / 4,
           s"fixture: trailing whale ${wOf("z-hot")} must sit in (share=$share, W/4=${total / 4})")
-        def stage(lines: Seq[String]): java.nio.file.Path = {
-          val f = java.nio.file.Files.createTempFile("graft-q242", ".txt")
-          java.nio.file.Files.write(f, lines.mkString("", "\n", "\n")
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          f
-        }
-        val cPath = stage(census)
-        val wPath = stage(census.map(sub => s"$sub\t${wOf(sub)}"))
-        val ranges = graft.sources.StatusLiveSource.planCensusRangesHot(
-          cPath.toString, None, g, Set.empty, Some(wPath.toString)).ranges
-        val tiles = ranges.map(r => graft.sources.StatusLiveSource.readRange(
-          cPath.toString, r.cStart, r.cEnd))
-        require(tiles.flatten == census, "weighted tiles must reconstruct the census")
-        require(tiles.last == Seq("z-hot"),
-          s"the TRAILING whale must own its group, got last tile ${tiles.last.takeRight(3)}")
-        val coldLoads = tiles.init.map(_.map(wOf).sum)
-        require(coldLoads.forall(_ <= share + maxCold),
-          s"cold group past the provable bound ${share + maxCold}: $coldLoads")
-        val served = new java.util.concurrent.atomic.AtomicLong
-        val server = startStub(docs, counters = StubCounters(served = served))
-        try {
-          val live = s.read.format("graft-status-live")
-            .option("url", s"http://127.0.0.1:${server.getAddress.getPort}")
-            .option("batchSize", "500")
-            .option("subjectsPath", cPath.toString)
-            .option("censusWeightsPath", wPath.toString)
-            .option("censusRanges", g.toString).load()
-          require(live.rdd.getNumPartitions == ranges.length,
-            s"expected ${ranges.length} weighted groups, planned ${live.rdd.getNumPartitions}")
-          val out = live
-            .select(col("subject"),
-              get_json_object(col("data"), "$.cents").cast("long").as("cents"))
-            .groupBy(col("subject"))
-            .agg(count(lit(1)).as("n_docs"), sum(col("cents")).as("cents"))
-            .localCheckpoint(true) // materialize THROUGH the weighted ranged plan
-          val extraPages = wOf.values.map(w => (w + 499) / 500 - 1).sum
-          require(served.get() >= total && served.get() - total <= extraPages,
-            s"wire served ${served.get()} of $total docs (allowed overlap $extraPages)")
-          out
-        } finally {
-          server.stop(0)
-          java.nio.file.Files.deleteIfExists(cPath)
-          java.nio.file.Files.deleteIfExists(wPath)
+        withTempDirs("q242") { case Seq(dir) =>
+          val cPath = writeLines(dir, "census", census)
+          val wPath = writeLines(dir, "weights", census.map(sub => s"$sub\t${wOf(sub)}"))
+          val ranges = graft.sources.StatusLiveSource.planCensusRangesHot(
+            cPath.toString, None, g, Set.empty, Some(wPath.toString)).ranges
+          val tiles = ranges.map(r => graft.sources.StatusLiveSource.readRange(
+            cPath.toString, r.cStart, r.cEnd))
+          require(tiles.flatten == census, "weighted tiles must reconstruct the census")
+          require(tiles.last == Seq("z-hot"),
+            s"the TRAILING whale must own its group, got last tile ${tiles.last.takeRight(3)}")
+          val coldLoads = tiles.init.map(_.map(wOf).sum)
+          require(coldLoads.forall(_ <= share + maxCold),
+            s"cold group past the provable bound ${share + maxCold}: $coldLoads")
+          val served = new AtomicLong
+          withStub(docs, counters = StubCounters(served = served)) { url =>
+            val live = s.read.format("graft-status-live")
+              .option("url", url)
+              .option("batchSize", "500")
+              .option("subjectsPath", cPath.toString)
+              .option("censusWeightsPath", wPath.toString)
+              .option("censusRanges", g.toString).load()
+            require(live.rdd.getNumPartitions == ranges.length,
+              s"expected ${ranges.length} weighted groups, planned ${live.rdd.getNumPartitions}")
+            val out = centsPer("subject")(live)
+              .localCheckpoint(true) // materialize THROUGH the weighted ranged plan
+            val extraPages = wOf.values.map(w => (w + 499) / 500 - 1).sum
+            require(served.get() >= total && served.get() - total <= extraPages,
+              s"wire served ${served.get()} of $total docs (allowed overlap $extraPages)")
+            out
+          }
         }
       },
       Some("""WITH m AS (
@@ -2497,25 +2212,16 @@ object LiveQueries {
         // stays exactly 2x — a modulus-style mapping packs hundreds of
         // tokens per subject at sf0.1 and turns the join into the
         // fixture's own blow-up (first bench run: 18.9 s)
-        val evs = Tables.load(s, d, "events")
-          .where(col("ts").isNotNull && col("user_id").isNotNull)
-          .select(col("user_id").cast(LongType).as("token"),
-            concat(lit("v"), expr("user_id DIV 2").cast("string")).as("subject"),
-            expr("unix_micros(ts)").as("tsu"),
-            round(col("value") * 100).cast(LongType).as("cents"))
-          .collect() // seeds the TEST DOUBLE; the measured sync is below
-        val docs: IndexedSeq[StubDoc] =
-          parDocs(evs.toIndexedSeq, 0) { (r, i) =>
-            val (subj, tsu, cents) = (r.getString(1), r.getLong(2), r.getLong(3))
-            StubDoc(s"al$i", subj, tsu,
-              statusJson(s"al$i", subj, tsu, "v1.0", s"""{"speed":$cents,"make":"m"}"""))
-          }
-        val tokens = evs.map(_.getLong(0)).distinct.sorted.toSeq
+        val evs = seedRows(s, d,
+          subject = concat(lit("v"), expr("user_id DIV 2").cast("string")),
+          extra = Seq(col("user_id").cast(LongType).as("token")))
+        val docs = corpus(evs, DocForm("al", SpeedData, version = "v1.0"))
+        val tokens = evs.map(_.getLong(3)).distinct.sorted
         val subjOf: Map[Long, String] = tokens.map(t => t -> s"v${t / 2}").toMap
         // per-TOKEN watermarks, deterministically spread so tokens of one
         // subject DIFFER (integer arithmetic mirrored exactly in the
         // oracle SQL's // divisions)
-        val tsAll = evs.map(_.getLong(2))
+        val tsAll = evs.map(_.getLong(1))
         val wmin = tsAll.min
         val span = tsAll.max - wmin
         def wOfTok(t: Long): Long = wmin + span / 2 + (t % 3) * (span / 8)
@@ -2532,45 +2238,32 @@ object LiveQueries {
         val opts = SyncOptions(tokens = tokens.map(_.toString),
           start = Some(new java.sql.Timestamp(0L)),
           stop = Some(new java.sql.Timestamp(9999999999999L)))
-        val staging = java.nio.file.Files.createTempDirectory("graft-q243-staging")
-        val server = startStub(docs, StubModes(pitMode = true))
-        try {
-          val out = SyncJob.runLiveRanged(s,
-            s"http://127.0.0.1:${server.getAddress.getPort}", dim,
-            existingSink = Some(sink), opts, stagingDir = staging.toString,
-            batchSize = 2000, censusRanges = 4, weightBySinkDepth = true)
-            .groupBy(col("tokenId").as("token_id"))
-            .agg(count(lit(1)).as("n_signals"),
-              sum(when(col("name") === "Vehicle.Speed", col("valueNumber"))
-                .otherwise(lit(0.0))).cast(LongType).as("speed_sum"),
-              expr("min(unix_micros(timestamp))").as("oldest_us"),
-              expr("max(unix_micros(timestamp))").as("newest_us"))
-            .localCheckpoint(true) // materialize THROUGH the staged plan
-          // the staging contract, RAISED: exactly ONE line per subject —
-          // stops at the ceil-ms of the subject's MAX token watermark,
-          // weights at the subject's SUMMED sink depth (1 row per token)
-          import scala.jdk.CollectionConverters._
-          def staged(name: String): Seq[String] = {
-            val f = java.nio.file.Files.list(staging.resolve(name)).iterator().asScala
-              .find(_.getFileName.toString.startsWith("part-")).get
-            java.nio.file.Files.readAllLines(f).asScala.filter(_.nonEmpty).toSeq
+        withTempDirs("q243-staging") { case Seq(staging) =>
+          withStub(docs, StubModes(pitMode = true)) { url =>
+            val out = signalAggregate(SyncJob.runLiveRanged(s, url, dim,
+              existingSink = Some(sink), opts, stagingDir = staging.toString,
+              batchSize = 2000, censusRanges = 4, weightBySinkDepth = true))
+              .localCheckpoint(true) // materialize THROUGH the staged plan
+            // the staging contract, RAISED: exactly ONE line per subject —
+            // stops at the ceil-ms of the subject's MAX token watermark,
+            // weights at the subject's SUMMED sink depth (1 row per token)
+            def staged(name: String): Seq[String] = {
+              val f = java.nio.file.Files.list(staging.resolve(name)).iterator().asScala
+                .find(_.getFileName.toString.startsWith("part-")).get
+              java.nio.file.Files.readAllLines(f).asScala.filter(_.nonEmpty).toSeq
+            }
+            val subjects = bySubj.keys.toSeq.sorted
+            val wantStops = subjects.map { sub =>
+              val stopMs = (bySubj(sub).map(wOfTok).max + 999L) / 1000L
+              s"$sub\t$stopMs"
+            }
+            require(staged("stops") == wantStops,
+              s"stops must stage ONE max-watermark line per subject: ${staged("stops")}")
+            val wantWeights = subjects.map(sub => s"$sub\t${bySubj(sub).size}")
+            require(staged("weights") == wantWeights,
+              s"weights must stage ONE summed-depth line per subject: ${staged("weights")}")
+            out
           }
-          val subjects = bySubj.keys.toSeq.sorted
-          val wantStops = subjects.map { sub =>
-            val stopMs = (bySubj(sub).map(wOfTok).max + 999L) / 1000L
-            s"$sub\t$stopMs"
-          }
-          require(staged("stops") == wantStops,
-            s"stops must stage ONE max-watermark line per subject: ${staged("stops")}")
-          val wantWeights = subjects.map(sub => s"$sub\t${bySubj(sub).size}")
-          require(staged("weights") == wantWeights,
-            s"weights must stage ONE summed-depth line per subject: ${staged("weights")}")
-          out
-        } finally {
-          server.stop(0)
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(staging).iterator().asScala.toSeq.reverse
-            .foreach(java.nio.file.Files.deleteIfExists(_))
         }
       },
       Some("""WITH e AS (
@@ -2610,37 +2303,22 @@ object LiveQueries {
       "q232_live_stream_es_to_ch",
       (s, d) => {
         import graft.sources.{ClickHouseDdl, ClickHouseHttpClient}
-        val evs = Tables.load(s, d, "events")
-          .where(col("ts").isNotNull && col("user_id").isNotNull)
-          .select(col("user_id").cast("string").as("subject"),
-            expr("unix_micros(ts)").as("tsu"),
-            round(col("value") * 100).cast(LongType).as("cents"))
-          .collect() // seeds the TEST DOUBLE; the measured path is the stream
-        val mid = { val ts = evs.map(_.getLong(1)); (ts.min + ts.max) / 2 }
-        def mkDoc(r: org.apache.spark.sql.Row, i: Int): StubDoc = {
-          val (subj, tsu, cents) = (r.getString(0), r.getLong(1), r.getLong(2))
-          StubDoc(s"sc$subj-$tsu-$i", subj, tsu,
-            statusJson(s"sc$i", subj, tsu, "v2.0", s"""{"cents":$cents}"""))
-        }
         // ms-boundary split: the ES tail's offsets are ms-granular
-        val (newer, older) = evs.toIndexedSeq.partition(_.getLong(1) / 1000 >= mid / 1000)
-        // seeded once each (parDocs), phase 2 = phase 1's docs + the newer half
-        val docs1 = parDocs(older, 0)(mkDoc)
-        val docs2 = docs1 ++ parDocs(newer, older.length)(mkDoc)
-        val chServer = ChSignalStub.start()
-        try {
-          val chUrl = s"http://127.0.0.1:${chServer.getAddress.getPort}"
+        val (newer, older) = halves(seedRows(s, d), ms = true)
+        // phase 2 = phase 1's docs + the newer half
+        val (docs1, docs2) = generations(older, newer,
+          DocForm("sc", CentsData, id = IdForm.Keyed))
+        withServer(ChSignalStub.start()) { chUrl =>
           new ClickHouseHttpClient(chUrl)
             .execute(ClickHouseDdl.signalTableDdl(graft.sources.SignalLiveSource.Schema))
-          val ckpt = java.nio.file.Files.createTempDirectory("graft-q232-ck").toString
-          def pipeOnce(docs: IndexedSeq[StubDoc]): Unit = {
-            val esServer = startStub(docs)
-            try {
+          withTempDirs("q232-ck") { case Seq(ck) =>
+            val ckpt = ck.toString
+            def pipeOnce(docs: IndexedSeq[StubDoc]): Unit = withStub(docs) { esUrl =>
               // slices=8 (r19): parallel window-cut drain per micro-batch —
               // the q217 rationale; the CH writer inherits the 8-way read
               // partitioning, so inserts overlap the drain too.
               val q = s.readStream.format("graft-status-live")
-                .option("url", s"http://127.0.0.1:${esServer.getAddress.getPort}")
+                .option("url", esUrl)
                 .option("batchSize", "2000").option("slices", "8").load()
                 .select(col("subject").cast(LongType).as("token_id"),
                   col("time").as("timestamp"),
@@ -2652,17 +2330,17 @@ object LiveQueries {
                 .option("checkpointLocation", ckpt)
                 .start()
               try q.processAllAvailable() finally q.stop()
-            } finally esServer.stop(0)
+            }
+            pipeOnce(docs1) // phase 1: the older half
+            pipeOnce(docs2) // phase 2: restart; only the newer half ships
+            s.read.format("graft-signal-live").option("url", chUrl).load()
+              .groupBy(col("token_id"))
+              .agg(count(lit(1)).as("n_rows"),
+                sum(col("value_number")).cast(LongType).as("cents"),
+                expr("max(unix_micros(timestamp))").as("newest_us"))
+              .localCheckpoint(true) // materialize THROUGH both wire stacks
           }
-          pipeOnce(docs1) // phase 1: the older half
-          pipeOnce(docs2) // phase 2: restart; only the newer half ships
-          s.read.format("graft-signal-live").option("url", chUrl).load()
-            .groupBy(col("token_id"))
-            .agg(count(lit(1)).as("n_rows"),
-              sum(col("value_number")).cast(LongType).as("cents"),
-              expr("max(unix_micros(timestamp))").as("newest_us"))
-            .localCheckpoint(true) // materialize THROUGH both wire stacks
-        } finally chServer.stop(0)
+        }
       },
       Some("""SELECT CAST(user_id AS BIGINT) AS token_id,
                count(*)::BIGINT AS n_rows,
@@ -2688,14 +2366,7 @@ object LiveQueries {
       "q233_live_ch_balanced",
       (s, d) => {
         import graft.sources.{ClickHouseDdl, ClickHouseHttpClient}
-        import org.apache.spark.sql.types._
-        val signals = Tables.load(s, d, "events")
-          .where(col("ts").isNotNull && col("user_id").isNotNull)
-          .select(col("user_id").cast(LongType).as("token_id"),
-            col("ts").cast(TimestampType).as("timestamp"),
-            col("event_type").cast(StringType).as("name"),
-            round(col("value") * 100).cast(DoubleType).as("value_number"),
-            col("event_id").cast(StringType).as("value_string"))
+        val signals = chSignals(s, d)
           .union(s.range(1).select( // the skew: one token a billion away
             lit(1000000000L).as("token_id"),
             lit(java.sql.Timestamp.valueOf("2030-01-01 00:00:00")).as("timestamp"),
@@ -2703,9 +2374,7 @@ object LiveQueries {
             lit(42.0).as("value_number"),
             lit("o1").cast(StringType).as("value_string")))
           .repartition(8)
-        val server = ChSignalStub.start()
-        try {
-          val base = s"http://127.0.0.1:${server.getAddress.getPort}"
+        withServer(ChSignalStub.start()) { base =>
           new ClickHouseHttpClient(base)
             .execute(ClickHouseDdl.signalTableDdl(graft.sources.SignalLiveSource.Schema))
           signals.write.format("graft-signal-live")
@@ -2729,7 +2398,7 @@ object LiveQueries {
               sum(col("value_number")).cast(LongType).as("cents"),
               max(col("token_id")).as("max_token"))
             .localCheckpoint(true) // materialize THROUGH the balanced plan
-        } finally server.stop(0)
+        }
       },
       Some("""WITH sig AS (
                SELECT CAST(user_id AS BIGINT) AS token_id, event_type AS name,
@@ -2760,21 +2429,11 @@ object LiveQueries {
       "q235_live_ch_subtoken",
       (s, d) => {
         import graft.sources.{ClickHouseDdl, ClickHouseHttpClient}
-        import org.apache.spark.sql.types._
-        val signals = Tables.load(s, d, "events")
-          .where(col("ts").isNotNull && col("user_id").isNotNull)
-          .select(
-            // the skew: ~90% of users fold into token 7 (one hot device)
-            when(col("user_id") % 10 =!= 0, lit(7L))
-              .otherwise(col("user_id").cast(LongType)).as("token_id"),
-            col("ts").cast(TimestampType).as("timestamp"),
-            col("event_type").cast(StringType).as("name"),
-            round(col("value") * 100).cast(DoubleType).as("value_number"),
-            col("event_id").cast(StringType).as("value_string"))
+        val signals = chSignals(s, d,
+          // the skew: ~90% of users fold into token 7 (one hot device)
+          token = when(col("user_id") % 10 =!= 0, lit(7L)).otherwise(col("user_id").cast(LongType)))
           .repartition(8)
-        val server = ChSignalStub.start()
-        try {
-          val base = s"http://127.0.0.1:${server.getAddress.getPort}"
+        withServer(ChSignalStub.start()) { base =>
           new ClickHouseHttpClient(base)
             .execute(ClickHouseDdl.signalTableDdl(graft.sources.SignalLiveSource.Schema))
           signals.write.format("graft-signal-live")
@@ -2801,7 +2460,7 @@ object LiveQueries {
               countDistinct(col("token_id")).as("n_tokens"),
               expr("max(unix_micros(timestamp))").as("newest_us"))
             .localCheckpoint(true) // materialize THROUGH the sub-token plan
-        } finally server.stop(0)
+        }
       },
       Some("""SELECT event_type AS name, count(*)::BIGINT AS n_rows,
                sum(CAST(round(value*100) AS BIGINT))::BIGINT AS cents,
@@ -2825,61 +2484,43 @@ object LiveQueries {
     QueryDef(
       "q223_live_ch_stream_tail",
       (s, d) => {
-        import graft.sources.{ClickHouseDdl, ClickHouseHttpClient}
-        import org.apache.spark.sql.types._
-        val schema = StructType(Seq(
-          StructField("token_id", LongType, nullable = false),
-          StructField("timestamp", TimestampType, nullable = false),
-          StructField("name", StringType, nullable = false),
-          StructField("value_number", DoubleType, nullable = true),
-          StructField("value_string", StringType, nullable = true)))
-        val signals = Tables.load(s, d, "events")
-          .where(col("ts").isNotNull && col("user_id").isNotNull)
-          .select(col("user_id").cast(LongType).as("token_id"),
-            col("ts").cast(TimestampType).as("timestamp"),
-            col("event_type").cast(StringType).as("name"),
-            round(col("value") * 100).cast(DoubleType).as("value_number"),
-            col("event_id").cast(StringType).as("value_string"))
+        import graft.sources.{ClickHouseDdl, ClickHouseHttpClient, SignalLiveSource}
         // split by VALUE at the micro midpoint: halves never share a
         // microsecond, so the phase-2 floor (olderMax + 1µs) is exact
-        val bounds = signals.agg(expr("min(unix_micros(timestamp))"),
-          expr("max(unix_micros(timestamp))")).head()
-        val midUs = (bounds.getLong(0) + bounds.getLong(1)) / 2
-        val older = signals.where(expr(s"unix_micros(timestamp) < $midUs")).repartition(4)
-        val newer = signals.where(expr(s"unix_micros(timestamp) >= $midUs")).repartition(4)
-        val server = ChSignalStub.start()
-        try {
-          val url = s"http://127.0.0.1:${server.getAddress.getPort}"
+        val (older, newer) = signalHalves(chSignals(s, d))
+        withServer(ChSignalStub.start()) { url =>
           val client = new ClickHouseHttpClient(url)
-          client.execute(ClickHouseDdl.signalTableDdl(schema))
-          val outDir = java.nio.file.Files
-            .createTempDirectory("graft-q223-out").toString + "/tail"
-          val ckpt = java.nio.file.Files.createTempDirectory("graft-q223-ck").toString
-          def tailOnce(): Unit = {
-            val q = s.readStream.format("graft-signal-live")
-              .option("url", url).option("partitions", "4").load()
-              .select(col("token_id"), expr("unix_micros(timestamp)").as("us"),
-                col("value_number"))
-              .writeStream.format("parquet")
-              .option("path", outDir).option("checkpointLocation", ckpt)
-              .start()
-            try q.processAllAvailable() finally q.stop()
+          client.execute(ClickHouseDdl.signalTableDdl(SignalLiveSource.Schema))
+          withTempDirs("q223-out", "q223-ck") { case Seq(out, ck) =>
+            val outDir = out.toString + "/tail"
+            val ckpt = ck.toString
+            def tailOnce(): Unit = {
+              val q = s.readStream.format("graft-signal-live")
+                .option("url", url).option("partitions", "4").load()
+                .select(col("token_id"), expr("unix_micros(timestamp)").as("us"),
+                  col("value_number"))
+                .writeStream.format("parquet")
+                .option("path", outDir).option("checkpointLocation", ckpt)
+                .start()
+              try q.processAllAvailable() finally q.stop()
+            }
+            // each phase is its own logical run, tagged by (table, window
+            // identity): a re-submitted phase would dedup end-to-end
+            client.insertSignals(older, "signal",
+              runTag = Some(ClickHouseHttpClient.jobRunTag("signal", "q223-older-half")))
+            tailOnce() // phase 1: the older half
+            client.insertSignals(newer, "signal",
+              runTag = Some(ClickHouseHttpClient.jobRunTag("signal", "q223-newer-half")))
+            tailOnce() // phase 2: restart; only the newer half may arrive
+            s.read.parquet(outDir)
+              .groupBy(col("token_id"))
+              .agg(count(lit(1)).as("n_rows"),
+                sum(col("value_number")).cast(LongType).as("cents"),
+                min(col("us")).as("oldest_us"),
+                max(col("us")).as("newest_us"))
+              .localCheckpoint(true)
           }
-          // each phase is its own logical run, tagged by (table, window
-          // identity): a re-submitted phase would dedup end-to-end
-          client.insertSignals(older, "signal",
-            runTag = Some(ClickHouseHttpClient.jobRunTag("signal", "q223-older-half")))
-          tailOnce() // phase 1: the older half
-          client.insertSignals(newer, "signal",
-            runTag = Some(ClickHouseHttpClient.jobRunTag("signal", "q223-newer-half")))
-          tailOnce() // phase 2: restart; only the newer half may arrive
-          s.read.parquet(outDir)
-            .groupBy(col("token_id"))
-            .agg(count(lit(1)).as("n_rows"),
-              sum(col("value_number")).cast(LongType).as("cents"),
-              min(col("us")).as("oldest_us"),
-              max(col("us")).as("newest_us"))
-        } finally server.stop(0)
+        }
       },
       Some("""SELECT CAST(user_id AS BIGINT) AS token_id,
                count(*)::BIGINT AS n_rows,

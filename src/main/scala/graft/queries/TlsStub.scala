@@ -71,11 +71,16 @@ object TlsStub {
     val pass = "graft-test-pass"
     val (serverKs, serverCer) = identity(dir, "server", pass)
     val (clientKs, clientCer) = identity(dir, "client", pass)
-    Material(dir, pass,
+    val m = Material(dir, pass,
       serverKeystore = serverKs,
       truststore = trustOf(dir, "trust", "server", serverCer, pass),
       clientKeystore = clientKs,
       serverTruststore = trustOf(dir, "servertrust", "client", clientCer, pass))
+    // exit-time deletes run in reverse registration order: the files go
+    // first, so the directory is empty when its own delete runs
+    val files = java.nio.file.Files.list(dir)
+    try files.forEach(_.toFile.deleteOnExit()) finally files.close()
+    m
   }
 
   private def load(path: String, pass: String): KeyStore = {

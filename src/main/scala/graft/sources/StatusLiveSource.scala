@@ -54,7 +54,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * trims, sync.go:246), `stopBySubject` (inline JSON per-subject stops),
   * and the FLEET-SCALE side-channel pair `stopBySubjectPath` /
   * `subjectsPath`: files the TABLE consumes once at load() (the watermark
-  * map and the subject census, [[StatusLiveSource.writeStops]] /
+  * map as `subject<TAB>stopMs` lines and the subject census as one
+  * subject per line, [[StatusLiveSource.writeStops]] /
   * [[StatusLiveSource.writeSubjects]]), so a million-token sync never
   * rides a ~30 MB JSON string through catalog properties — each task
   * still receives only its own group's slice, and the caller may delete
@@ -194,61 +195,39 @@ object StatusLiveSource {
     mapper.writeValueAsString(node)
   }
 
-  /** Stage a watermark map for the `stopBySubjectPath` option — STREAMED
-    * through a JsonGenerator so a million-token map never materializes as
-    * one driver-side string (the fleet-scale form of [[stopsJson]]).
+  /** Stage a watermark map for the `stopBySubjectPath` option: one
+    * `subject<TAB>stopMs` line per subject, sorted in UTF-8 byte order
+    * ([[utf8Lt]], the order the ranged planner verifies) — the same file
+    * [[graft.jobs.SyncJob.runLive]] stages on the cluster with a
+    * single-partition `write.text`. Streamed line by line, so a
+    * million-token map never materializes as one driver-side string.
+    * Subjects must keep the [[writeSubjects]] newline framing contract.
     */
   def writeStops(stops: Map[String, Long], path: String): Unit = {
-    val gen = new com.fasterxml.jackson.core.JsonFactory()
-      .createGenerator(new java.io.File(path), com.fasterxml.jackson.core.JsonEncoding.UTF8)
-    try {
-      gen.writeStartObject()
-      stops.toSeq.sortBy(_._1).foreach { case (s, v) => gen.writeNumberField(s, v) }
-      gen.writeEndObject()
-    } finally gen.close()
+    val w = java.nio.file.Files.newBufferedWriter(java.nio.file.Paths.get(path),
+      java.nio.charset.StandardCharsets.UTF_8)
+    try stops.toSeq.sortWith((a, b) => utf8Lt(a._1, b._1)).foreach { case (s, ms) =>
+      requireFramed(s)
+      w.write(s); w.write('\t'); w.write(ms.toString); w.write('\n')
+    }
+    finally w.close()
   }
 
-  /** Read a staged watermark map (planner-side, once per scan). Two
-    * formats, sniffed by the first byte: a JSON object (`{...}` — the
-    * driver-streamed [[writeStops]] form) or `subject<TAB>stopMs` LINES —
-    * the cluster-written form ([[graft.jobs.SyncJob.runLive]] stages it
-    * with a single-partition `write.text` so a fleet-as-big-data census
-    * never materializes on the driver). A subject beginning with `{`
-    * would mis-sniff a lines file as JSON and fail LOUDLY at parse — no
-    * silent misread is possible.
+  /** Read a staged `subject<TAB>stopMs` watermark map (planner-side, once
+    * per scan). Only the LAST tab splits, so a tab inside a subject parses
+    * intact.
     */
   private[graft] def readStops(path: String): Map[String, Long] = {
-    val in = java.nio.file.Files.newInputStream(java.nio.file.Paths.get(path))
-    val isJson = try { in.read() == '{' } finally in.close()
-    if (!isJson) {
-      val b = Map.newBuilder[String, Long]
-      val reader = java.nio.file.Files.newBufferedReader(
-        java.nio.file.Paths.get(path), java.nio.charset.StandardCharsets.UTF_8)
-      try {
-        var line = reader.readLine()
-        while (line != null) {
-          if (line.nonEmpty) {
-            val tab = line.lastIndexOf('\t')
-            require(tab > 0, s"stopBySubjectPath line is not subject<TAB>ms: $line")
-            b += (line.substring(0, tab) -> line.substring(tab + 1).toLong)
-          }
-          line = reader.readLine()
-        }
-      } finally reader.close()
-      return b.result()
-    }
-    val p = new com.fasterxml.jackson.core.JsonFactory().createParser(new java.io.File(path))
-    try {
-      val b = Map.newBuilder[String, Long]
-      require(p.nextToken() == com.fasterxml.jackson.core.JsonToken.START_OBJECT,
-        s"stopBySubjectPath must hold a JSON object: $path")
-      while (p.nextToken() == com.fasterxml.jackson.core.JsonToken.FIELD_NAME) {
-        val k = p.currentName()
-        p.nextToken()
-        b += (k -> p.getLongValue)
-      }
-      b.result()
-    } finally p.close()
+    val b = Map.newBuilder[String, Long]
+    eachLineWithOffset(path)((line, _) => b += parseStopLine(line))
+    b.result()
+  }
+
+  /** One `subject<TAB>stopMs` line of a staged stops file. */
+  private def parseStopLine(line: String): (String, Long) = {
+    val tab = line.lastIndexOf('\t')
+    require(tab > 0, s"stopBySubjectPath line is not subject<TAB>ms: $line")
+    line.substring(0, tab) -> line.substring(tab + 1).toLong
   }
 
   /** Stage a subject census for the `subjectsPath` option: one subject
@@ -266,14 +245,15 @@ object StatusLiveSource {
   def writeSubjects(subjects: Seq[String], path: String): Unit = {
     val w = java.nio.file.Files.newBufferedWriter(java.nio.file.Paths.get(path),
       java.nio.charset.StandardCharsets.UTF_8)
-    try subjects.foreach { s =>
-      require(!s.contains('\n') && !s.contains('\r'),
-        s"staged subject breaks the newline framing contract (contains \\n or \\r): " +
-          s.replace("\n", "\\n").replace("\r", "\\r"))
-      w.write(s); w.write('\n')
-    }
+    try subjects.foreach { s => requireFramed(s); w.write(s); w.write('\n') }
     finally w.close()
   }
+
+  /** The newline framing guard of the driver-side staging writers. */
+  private def requireFramed(subject: String): Unit =
+    require(!subject.contains('\n') && !subject.contains('\r'),
+      s"staged subject breaks the newline framing contract (contains \\n or \\r): " +
+        subject.replace("\n", "\\n").replace("\r", "\\r"))
 
   /** Read a staged subject census (planner-side, once per scan). */
   private[graft] def readSubjects(path: String): Seq[String] = {
@@ -583,10 +563,7 @@ object StatusLiveSource {
     * the same cap, or one equality) — so this STREAMS both files with
     * O(keep) memory instead of materializing a 10M-token census for a
     * 3-subject lookup (the exact driver wall `censusRanges` exists to
-    * avoid). The stops file streams when it is the cluster-staged TSV
-    * form; a driver-written JSON stops map (sniffed like [[readStops]])
-    * parses whole — it was driver-held at write time, so that is no new
-    * state. Neither file needs to be sorted here (membership lookups).
+    * avoid). Neither file needs to be sorted here (membership lookups).
     */
   private[graft] def filterStaged(censusPath: String, stopsPath: Option[String],
       keep: Set[String]): (Seq[String], Map[String, Long]) = {
@@ -595,19 +572,12 @@ object StatusLiveSource {
     val stops: Map[String, Long] = stopsPath match {
       case None => Map.empty
       case Some(sp) =>
-        val in = java.nio.file.Files.newInputStream(java.nio.file.Paths.get(sp))
-        val isJson = try in.read() == '{' finally in.close()
-        if (isJson) readStops(sp).view.filterKeys(keep).toMap
-        else {
-          val b = Map.newBuilder[String, Long]
-          eachLineWithOffset(sp) { (line, _) =>
-            val tab = line.lastIndexOf('\t')
-            require(tab > 0, s"stopBySubjectPath line is not subject<TAB>ms: $line")
-            val subj = line.substring(0, tab)
-            if (keep.contains(subj)) b += (subj -> line.substring(tab + 1).toLong)
-          }
-          b.result()
+        val b = Map.newBuilder[String, Long]
+        eachLineWithOffset(sp) { (line, _) =>
+          val stop = parseStopLine(line)
+          if (keep.contains(stop._1)) b += stop
         }
+        b.result()
     }
     (present.result(), stops)
   }

@@ -46,8 +46,9 @@ object LiveProbe {
       val n = read().count()
       val wall = (System.nanoTime() - t0) / 1e9
       require(n == nDocs, s"live read lost rows: $n of $nDocs")
+      val tasks = read().rdd.getNumPartitions
       println(f"[liveprobe] full census read: $n docs in $wall%.2f s " +
-        f"(${n / wall}%.0f docs/s through the wire stack, 64-task fan-out)")
+        f"(${n / wall}%.0f docs/s through the wire stack, $tasks-task fan-out)")
     } finally server.stop(0)
 
     // ── section 2: incremental-resume wire traffic — the r12 watermark

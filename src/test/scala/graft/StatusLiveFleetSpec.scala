@@ -139,23 +139,33 @@ class StatusLiveFleetSpec extends SparkTestBase {
       "an oversized runtime set must be ignored (unfiltered single loop), never wrong")
   }
 
-  test("readStops sniffs both staged formats: driver JSON and cluster TSV lines") {
-    // the cluster-written form (runLive path mode stages subject<TAB>ms
-    // lines via a single-partition write.text) and the driver-streamed
-    // JSON object must parse to the same map
+  test("readStops parses the staged subject<TAB>ms lines") {
+    // the cluster-written form: runLive path mode stages subject<TAB>ms
+    // lines via a single-partition write.text
     val want = Map("vehA" -> 1704000000000L, "vehB" -> 1704000060000L)
     val tsv = Files.createTempFile("graft-stops-tsv", ".txt")
     Files.writeString(tsv, "vehA\t1704000000000\nvehB\t1704000060000\n")
     assert(StatusLiveSource.readStops(tsv.toString) === want)
-    val json = Files.createTempFile("graft-stops-json", ".json")
-    StatusLiveSource.writeStops(want, json.toString)
-    assert(StatusLiveSource.readStops(json.toString) === want)
     // a tab inside the subject: only the LAST tab splits (subjects may
     // not contain tabs in practice, but the parse must not mis-split)
     val odd = Files.createTempFile("graft-stops-odd", ".txt")
     Files.writeString(odd, "veh\tX\t42\n")
     assert(StatusLiveSource.readStops(odd.toString) === Map("veh\tX" -> 42L))
-    Seq(tsv, json, odd).foreach(Files.deleteIfExists(_))
+    Seq(tsv, odd).foreach(Files.deleteIfExists(_))
+  }
+
+  test("writeStops stages the same lines, in UTF-8 byte order, framing guarded") {
+    // U+E000 sorts below a non-BMP subject in UTF-16 but above it in
+    // UTF-8 bytes: the file must follow the bytes, as the planner checks
+    val want = Map("veh\uE000" -> 2L, "veh\uD83D\uDE97" -> 3L, "vehA" -> 1L)
+    val f = Files.createTempFile("graft-stops-write", ".txt")
+    StatusLiveSource.writeStops(want, f.toString)
+    assert(Files.readString(f) === "vehA\t1\nveh\uE000\t2\nveh\uD83D\uDE97\t3\n")
+    assert(StatusLiveSource.readStops(f.toString) === want)
+    val e = intercept[IllegalArgumentException](
+      StatusLiveSource.writeStops(Map("bad\nsubject" -> 1L), f.toString))
+    assert(e.getMessage.contains("newline framing contract"))
+    Files.deleteIfExists(f)
   }
 
   test("runLiveRanged: caller-owned staging, ranged groups, whale slices, watermark resume") {

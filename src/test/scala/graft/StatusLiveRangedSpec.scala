@@ -374,12 +374,6 @@ class StatusLiveRangedSpec extends SparkTestBase {
       Set("k3", "k1", "stranger"))
     assert(present === Seq("k1", "k3"), "census ∩ keep, in census order; strangers dropped")
     assert(stops === Map("k1" -> 5L, "k3" -> 7L), "stops lifted for kept subjects only")
-    // the driver-written JSON stops form sniffs and filters too
-    val jPath = java.nio.file.Files.createTempFile("graft-json-stops", ".json").toString
-    StatusLiveSource.writeStops(Map("k1" -> 5L, "k2" -> 6L), jPath)
-    assert(StatusLiveSource.filterStaged(cPath, Some(jPath), Set("k2"))._2 ===
-      Map("k2" -> 6L))
-    java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(jPath))
     // and through the SCAN: a DPP runtime set against a 5000-token ranged
     // census plans exactly the intersection's point loops
     val census = (0 until 5000).map(i => f"w$i%04d")
