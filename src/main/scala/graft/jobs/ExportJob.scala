@@ -18,7 +18,7 @@ import org.apache.spark.sql.types.LongType
   * launcher reads to plan its data loader.
   *
   * Publish discipline (the house two-phase commit, as in
-  * `DedupIndexJob` / `SignalV2Sink`): everything lands in
+  * `DedupIndexJob` / `ShardedBatchWrite`): everything lands in
   * `outDir/_tmp-<epoch>`, and a single atomic rename publishes it as
   * `outDir/vN` with a `LATEST` pointer written last. Readers either see a
   * complete versioned snapshot or the previous one — never a torn export.

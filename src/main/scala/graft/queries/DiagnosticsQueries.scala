@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -15,6 +16,24 @@ object DiagnosticsQueries {
 
   private def docs(s: org.apache.spark.sql.SparkSession, d: String) = Tables.load(s, d, "documents")
   private def events(s: org.apache.spark.sql.SparkSession, d: String) = Tables.load(s, d, "events")
+
+  /** `rows` (`doc_id`, weight `w`) laid on their weight line: `cum` is the
+    * running sum of `w` in `doc_id` order through each doc. Computed
+    * two-phase, so no task sees the whole corpus: 1,000-doc shards total
+    * their weights, a window over those totals gives each shard its
+    * offset, and a running sum within the shard adds the rest.
+    */
+  private[queries] def weightLine(rows: DataFrame): DataFrame = {
+    val base = rows.withColumn("shard", expr("doc_id div 1000"))
+    val offs = base.groupBy(col("shard")).agg(sum(col("w")).as("sw"))
+      .select(col("shard"), coalesce(sum(col("sw")).over(
+        Window.orderBy(col("shard")).rowsBetween(Window.unboundedPreceding, -1)),
+        lit(0L)).as("off"))
+    base.join(broadcast(offs), "shard")
+      .withColumn("cum", col("off") + sum(col("w")).over(
+        Window.partitionBy(col("shard")).orderBy(col("doc_id"))
+          .rowsBetween(Window.unboundedPreceding, 0)))
+  }
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -32,18 +51,9 @@ object DiagnosticsQueries {
       (s, d) => {
         val k = 20L
         val base = docs(s, d).select(col("doc_id"), col("n_chars").as("w"))
-          .withColumn("shard", expr("doc_id div 1000"))
-        val shardTot = base.groupBy(col("shard")).agg(sum(col("w")).as("sw"))
-        val offs = shardTot.select(col("shard"),
-          coalesce(sum(col("sw")).over(
-            Window.orderBy(col("shard")).rowsBetween(Window.unboundedPreceding, -1)),
-            lit(0L)).as("off"))
         val tot = base.agg(sum(col("w")).as("wt"))
-        val ws = Window.partitionBy(col("shard")).orderBy(col("doc_id"))
-          .rowsBetween(Window.unboundedPreceding, 0)
-        base.join(broadcast(offs), "shard")
-          .withColumn("cum_end", col("off") + sum(col("w")).over(ws))
-          .withColumn("cum_start", col("cum_end") - col("w"))
+        weightLine(base)
+          .withColumn("cum_start", col("cum") - col("w"))
           .crossJoin(broadcast(tot))
           // selection points p_i at (2i+1)·wt/(2k) on the weight line;
           // F(x) = #points ≤ x = (2k·x + wt − 1) div (2·wt) — shifted by
@@ -51,7 +61,7 @@ object DiagnosticsQueries {
           // `div` truncates toward zero while DuckDB's `//` floors; they
           // only agree on non-negative operands). hits = F(end) − F(start).
           .withColumn("hits",
-            expr(s"((2 * $k * cum_end + wt - 1) div (2 * wt)) " +
+            expr(s"((2 * $k * cum + wt - 1) div (2 * wt)) " +
               s"- ((2 * $k * cum_start + wt - 1) div (2 * wt))"))
           .where(col("hits") > 0)
           .select(col("doc_id"), col("w").as("weight"), col("hits"))

@@ -3,12 +3,13 @@ package graft.queries
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths}
-import java.util.concurrent.{ConcurrentLinkedQueue, Executor, Executors}
+import java.util.concurrent.{ConcurrentLinkedQueue, Executor, ExecutorService, Executors}
 import java.util.concurrent.atomic.AtomicLong
 
 import scala.jdk.CollectionConverters._
 
-import com.sun.net.httpserver.{HttpContext, HttpExchange, HttpHandler, HttpServer, HttpsServer}
+import com.sun.net.httpserver.{HttpContext, HttpExchange, HttpHandler, HttpServer,
+  HttpsConfigurator, HttpsServer}
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -129,40 +130,70 @@ object LiveQueries {
       msearchRequests: AtomicLong = new AtomicLong,
       requests: Option[ConcurrentLinkedQueue[String]] = None)
 
-  /** Sends `body` with status `code` (no body when empty) and closes. */
-  private def respond(ex: HttpExchange, code: Int, body: String): Unit = {
-    val bytes = body.getBytes(StandardCharsets.UTF_8)
+  /** Does the request offer `Accept-Encoding: gzip`? */
+  private[queries] def acceptsGzip(ex: HttpExchange): Boolean =
+    Option(ex.getRequestHeaders.getFirst("Accept-Encoding"))
+      .exists(_.toLowerCase.contains("gzip"))
+
+  /** Sends `body` with status `code` (no body when empty) and closes. With
+    * `gzip`, a non-empty 200 body goes out gzipped to a client that
+    * accepts it.
+    */
+  private[queries] def respond(ex: HttpExchange, code: Int, body: String,
+      gzip: Boolean = false): Unit = {
+    val plain = body.getBytes(StandardCharsets.UTF_8)
+    val bytes =
+      if (gzip && code == 200 && plain.nonEmpty && acceptsGzip(ex)) {
+        ex.getResponseHeaders.set("Content-Encoding", "gzip")
+        graft.sources.LiveHttp.gzipBytes(plain)
+      } else plain
     ex.sendResponseHeaders(code, if (bytes.isEmpty) -1 else bytes.length)
     if (bytes.nonEmpty) ex.getResponseBody.write(bytes)
     ex.close()
   }
 
-  /** A started [[loopbackServer]] whose `/` handler runs on a pool of 32
-    * daemon threads named `name`. The JDK server never shuts down an
-    * executor it was given, so the returned server's `stop` releases the
-    * pool too: a stopped stub leaves no thread behind.
+  /** `server` (default a plain [[loopbackServer]]), started with its `/`
+    * handler on a pool of 32 daemon threads named `name`. The JDK server
+    * never shuts down an executor it was given, so the returned server's
+    * `stop` releases the pool too: a stopped stub leaves no thread behind.
+    * An `HttpsServer` comes back as one, so [[urlOf]] still reads https.
     */
-  private def pooledServer(name: String, handler: HttpHandler): HttpServer = {
-    val pool = Executors.newFixedThreadPool(32, (r: Runnable) => {
+  private[queries] def pooledServer(name: String, handler: HttpHandler,
+      server: HttpServer = loopbackServer(1024)): HttpServer = {
+    val threads = Executors.newFixedThreadPool(32, (r: Runnable) => {
       val t = new Thread(r, name); t.setDaemon(true); t
     })
-    val inner = loopbackServer(1024)
-    inner.setExecutor(pool)
-    inner.createContext("/", handler)
-    inner.start()
-    new HttpServer {
-      override def bind(addr: InetSocketAddress, backlog: Int): Unit = inner.bind(addr, backlog)
-      override def start(): Unit = inner.start()
-      override def setExecutor(e: Executor): Unit = inner.setExecutor(e)
-      override def getExecutor: Executor = inner.getExecutor
-      override def stop(delay: Int): Unit = try inner.stop(delay) finally pool.shutdown()
-      override def createContext(path: String, h: HttpHandler): HttpContext =
-        inner.createContext(path, h)
-      override def createContext(path: String): HttpContext = inner.createContext(path)
-      override def removeContext(path: String): Unit = inner.removeContext(path)
-      override def removeContext(ctx: HttpContext): Unit = inner.removeContext(ctx)
-      override def getAddress: InetSocketAddress = inner.getAddress
+    server.setExecutor(threads)
+    server.createContext("/", handler)
+    server.start()
+    server match {
+      case tls: HttpsServer => new HttpsServer with PoolOwner {
+        val inner = tls; val pool = threads
+        override def setHttpsConfigurator(c: HttpsConfigurator): Unit = tls.setHttpsConfigurator(c)
+        override def getHttpsConfigurator: HttpsConfigurator = tls.getHttpsConfigurator
+      }
+      case plain => new HttpServer with PoolOwner { val inner = plain; val pool = threads }
     }
+  }
+
+  /** A started server that owns its handler pool: `stop` releases it, and
+    * the pool cannot be swapped out.
+    */
+  private trait PoolOwner extends HttpServer {
+    val inner: HttpServer
+    val pool: ExecutorService
+    override def bind(addr: InetSocketAddress, backlog: Int): Unit = inner.bind(addr, backlog)
+    override def start(): Unit = inner.start()
+    override def setExecutor(e: Executor): Unit =
+      throw new UnsupportedOperationException("a pooled stub owns its executor")
+    override def getExecutor: Executor = inner.getExecutor
+    override def stop(delay: Int): Unit = try inner.stop(delay) finally pool.shutdown()
+    override def createContext(path: String, h: HttpHandler): HttpContext =
+      inner.createContext(path, h)
+    override def createContext(path: String): HttpContext = inner.createContext(path)
+    override def removeContext(path: String): Unit = inner.removeContext(path)
+    override def removeContext(ctx: HttpContext): Unit = inner.removeContext(ctx)
+    override def getAddress: InetSocketAddress = inner.getAddress
   }
 
   /** The fixed-corpus `_search` double every gate row, spec and probe
@@ -489,74 +520,6 @@ object LiveQueries {
     startStub(docs, StubModes(requireSignalClauses = requireSignalClauses),
       StubCounters(served = served))
 
-  /** Minimal stateful ClickHouse-HTTP stub: enforces DDL-before-INSERT,
-    * stores every CSV insert batch, and answers exactly three statement
-    * shapes — the reference's two literal reads (`tokenIdsSql`,
-    * `oldestSignalSql`) plus one integrity aggregate. Rows live in a
-    * concurrent queue (executor partitions POST in parallel).
-    */
-  private[graft] def startChStub(): (HttpServer, java.util.concurrent.ConcurrentLinkedQueue[(Long, String, String, Long)]) = {
-    // (token_id, timestamp-as-sent, name, value_cents)
-    val rows = new java.util.concurrent.ConcurrentLinkedQueue[(Long, String, String, Long)]()
-    val created = new java.util.concurrent.atomic.AtomicBoolean(false)
-    // a real ClickHouse serves point reads from its primary-key index, not
-    // a full scan per query — the stub memoizes a per-token index, rebuilt
-    // lazily after inserts (1500 oldest-signal probes × 100k rows would
-    // otherwise be 150M queue traversals and dominate the gate's wall)
-    val dirty = new java.util.concurrent.atomic.AtomicBoolean(true)
-    @volatile var byToken: Map[Long, IndexedSeq[(Long, String, String, Long)]] = Map.empty
-    def index(): Map[Long, IndexedSeq[(Long, String, String, Long)]] = {
-      if (dirty.getAndSet(false)) {
-        import scala.jdk.CollectionConverters._
-        byToken = rows.asScala.toIndexedSeq.groupBy(_._1)
-      }
-      byToken
-    }
-    val oldestRe = java.util.regex.Pattern.compile(
-      "SELECT `timestamp` FROM `signal` WHERE `token_id` = (\\d+) " +
-        "ORDER BY `timestamp` ASC LIMIT 1 FORMAT TabSeparated\\s*")
-    val server = pooledServer("live-ch-stub", new HttpHandler {
-      override def handle(ex: HttpExchange): Unit = {
-        val q = Option(ex.getRequestURI.getRawQuery).flatMap(_.split("&").collectFirst {
-          case kv if kv.startsWith("query=") =>
-            java.net.URLDecoder.decode(kv.substring(6), "UTF-8")
-        }).getOrElse("")
-        val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-        import scala.jdk.CollectionConverters._
-        if (q.startsWith("INSERT INTO `signal`")) {
-          if (!created.get()) { respond(ex, 400, "Table signal does not exist"); return }
-          // CSV: token,(epoch decimal),("quoted name"|empty),cents
-          body.split("\n").iterator.filter(_.nonEmpty).foreach { line =>
-            val m = java.util.regex.Pattern
-              .compile("^(\\d+),([0-9.]+),(?:\"((?:[^\"]|\"\")*)\")?,(-?\\d+)$").matcher(line)
-            require(m.matches(), s"stub cannot parse CSV line: $line")
-            rows.add((m.group(1).toLong, m.group(2),
-              Option(m.group(3)).map(_.replace("\"\"", "\"")).getOrElse(""),
-              m.group(4).toLong))
-          }
-          dirty.set(true)
-          respond(ex, 200, "")
-        } else if (body.startsWith("CREATE TABLE")) {
-          created.set(true); respond(ex, 200, "")
-        } else if (body.startsWith("SELECT DISTINCT `token_id` FROM `signal`")) {
-          val ids = index().keys.toSeq.sorted
-          respond(ex, 200, ids.mkString("", "\n", if (ids.isEmpty) "" else "\n"))
-        } else if (body.startsWith("SELECT `timestamp` FROM `signal` WHERE")) {
-          val m = oldestRe.matcher(body)
-          if (!m.matches()) { respond(ex, 400, s"unsupported statement: $body"); return }
-          val tok = m.group(1).toLong
-          val oldest = index().get(tok).flatMap(_.map(_._2).minByOption(BigDecimal(_)))
-          respond(ex, 200, oldest.map(_ + "\n").getOrElse(""))
-        } else if (body.startsWith("SELECT `token_id`, count(), sum(`value_cents`)")) {
-          val agg = index().toSeq.sortBy(_._1)
-            .map { case (tok, rs) => s"$tok\t${rs.size}\t${rs.map(_._4).sum}" }
-          respond(ex, 200, agg.mkString("", "\n", if (agg.isEmpty) "" else "\n"))
-        } else respond(ex, 400, s"unsupported statement: $q$body")
-      }
-    })
-    (server, rows)
-  }
-
   // ── The live-gate fixture: the entries below and `graft.tools.PhaseProbe`
   //    seed, serve, sync and stage through these helpers.
 
@@ -703,6 +666,18 @@ object LiveQueries {
   private[graft] def withStub[T](docs: IndexedSeq[StubDoc], modes: StubModes = StubModes(),
       counters: StubCounters = StubCounters())(f: String => T): T =
     withServer(startStub(docs, modes, counters))(f)
+
+  /** Serves `stub` (default a plain [[ChSignalStub]]) holding an empty
+    * `signal` table in [[graft.sources.SignalLiveSource.Schema]], created
+    * by a client connecting with `wire`, for the length of `f`.
+    */
+  private[graft] def withSignalTable[T](stub: HttpServer = ChSignalStub.start(),
+      wire: graft.sources.LiveWire = graft.sources.LiveWire.default)(f: String => T): T =
+    withServer(stub) { url =>
+      new graft.sources.ClickHouseHttpClient(url, wire = wire).execute(
+        graft.sources.ClickHouseDdl.signalTableDdl(graft.sources.SignalLiveSource.Schema))
+      f(url)
+    }
 
   /** Runs `f` with dynamic partition pruning forced on, so stats
     * heuristics cannot decide whether a runtime-filtering entry's declared
@@ -882,13 +857,9 @@ object LiveQueries {
             col("event_type").cast(StringType).as("name"),
             cents.as("value_cents"))
           .repartition(8) // the distributed insert fan-out under test
-        withServer(startChStub()._1) { clientUrl =>
+        withServer(ChSignalStub.start()) { clientUrl =>
           val client = new ClickHouseHttpClient(clientUrl)
-          client.execute(ClickHouseDdl.signalTableDdl(StructType(Seq(
-            StructField("token_id", LongType, nullable = false),
-            StructField("timestamp", TimestampType, nullable = false),
-            StructField("name", StringType, nullable = false),
-            StructField("value_cents", LongType, nullable = false)))))
+          client.execute(ClickHouseDdl.signalTableDdl(signals.schema))
           // executors POST CSV batches; the JOB-identity tag (sink table +
           // window) makes a re-submitted identical run dedup end-to-end,
           // not just its own task retries
@@ -921,14 +892,8 @@ object LiveQueries {
           val rows = tokens.sorted.map { tok =>
             org.apache.spark.sql.Row(tok, oldestUs(tok), agg(tok)._1, agg(tok)._2)
           }
-          s.createDataFrame(
-            new java.util.ArrayList[org.apache.spark.sql.Row](
-              scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
-            StructType(Seq(
-              StructField("token_id", LongType, nullable = false),
-              StructField("oldest_us", LongType, nullable = false),
-              StructField("n_rows", LongType, nullable = false),
-              StructField("cents", LongType, nullable = false))))
+          s.createDataFrame(rows.asJava, StructType.fromDDL("token_id BIGINT NOT NULL, " +
+            "oldest_us BIGINT NOT NULL, n_rows BIGINT NOT NULL, cents BIGINT NOT NULL"))
         }
       },
       Some("""SELECT CAST(user_id AS BIGINT) AS token_id,
@@ -1001,11 +966,8 @@ object LiveQueries {
     QueryDef(
       "q216_live_ch_scan",
       (s, d) => {
-        import graft.sources.{ClickHouseDdl, ClickHouseHttpClient, SignalLiveSource}
         val signals = chSignals(s, d).repartition(8)
-        withServer(ChSignalStub.start()) { url =>
-          new ClickHouseHttpClient(url)
-            .execute(ClickHouseDdl.signalTableDdl(SignalLiveSource.Schema))
+        withSignalTable() { url =>
           // the DSv2 writer (q214 gates the function-form insertSignals,
           // this row gates the idiomatic df.write form)
           signals.write.format("graft-signal-live").option("url", url)
@@ -1153,11 +1115,8 @@ object LiveQueries {
     QueryDef(
       "q219_live_ch_row_scan",
       (s, d) => {
-        import graft.sources.{ClickHouseDdl, ClickHouseHttpClient, SignalLiveSource}
         val signals = chSignals(s, d).repartition(8)
-        withServer(ChSignalStub.start()) { url =>
-          new ClickHouseHttpClient(url)
-            .execute(ClickHouseDdl.signalTableDdl(SignalLiveSource.Schema))
+        withSignalTable() { url =>
           signals.write.format("graft-signal-live").option("url", url)
             .mode("append").save()
           val rows = s.read.format("graft-signal-live")
@@ -1226,17 +1185,14 @@ object LiveQueries {
     QueryDef(
       "q221_live_ch_dpp",
       (s, d) => {
-        import graft.sources.{ClickHouseDdl, ClickHouseHttpClient, SignalLiveSource}
         val signals = chSignals(s, d).repartition(8)
         val vips = seedEvents(s, d).where(col("event_type") === "purchase")
           .groupBy(col("user_id"))
           .agg(sum(cents).as("spend"))
           .where(col("spend") > 120000L)
           .select(col("user_id").cast(LongType).as("token_id"))
-        withServer(ChSignalStub.start()) { url =>
+        withSignalTable() { url =>
           withDppForced(s) {
-            new ClickHouseHttpClient(url)
-              .execute(ClickHouseDdl.signalTableDdl(SignalLiveSource.Schema))
             signals.write.format("graft-signal-live").option("url", url)
               .mode("append").save()
             val joined = s.read.format("graft-signal-live")
@@ -1546,12 +1502,9 @@ object LiveQueries {
     QueryDef(
       "q229_live_gzip",
       (s, d) => {
-        import graft.sources.{ClickHouseDdl, ClickHouseHttpClient, LiveWire}
+        import graft.sources.{ClickHouseHttpClient, LiveWire}
         val signals = chSignals(s, d).repartition(8)
-        withServer(ChSignalStub.start(gzip = true)) { base =>
-          val gz = LiveWire(gzip = true)
-          new ClickHouseHttpClient(base, wire = gz)
-            .execute(ClickHouseDdl.signalTableDdl(graft.sources.SignalLiveSource.Schema))
+        withSignalTable(ChSignalStub.start(gzip = true), LiveWire(gzip = true)) { base =>
           // negative pin: an identity-posture statement cannot pass
           val identity = new ClickHouseHttpClient(base)
           val rejected =
@@ -1592,13 +1545,11 @@ object LiveQueries {
     QueryDef(
       "q230_live_auth",
       (s, d) => {
-        import graft.sources.{ChHttpStatusException, ClickHouseDdl, ClickHouseHttpClient, LiveWire}
+        import graft.sources.{ChHttpStatusException, ClickHouseHttpClient, LiveWire}
         val signals = chSignals(s, d).repartition(8)
         val (user, pass) = ("sync_user", "gate-s3cret")
-        withServer(ChSignalStub.start(auth = Some((user, pass)))) { base =>
-          val wire = LiveWire(username = Some(user), password = Some(pass))
-          new ClickHouseHttpClient(base, wire = wire)
-            .execute(ClickHouseDdl.signalTableDdl(graft.sources.SignalLiveSource.Schema))
+        withSignalTable(ChSignalStub.start(auth = Some((user, pass))),
+            LiveWire(username = Some(user), password = Some(pass))) { base =>
           // negative pin: anonymity must be refused, typed
           val refused =
             try { new ClickHouseHttpClient(base).query("SELECT count() FROM `signal`"); false }
@@ -2302,15 +2253,12 @@ object LiveQueries {
     QueryDef(
       "q232_live_stream_es_to_ch",
       (s, d) => {
-        import graft.sources.{ClickHouseDdl, ClickHouseHttpClient}
         // ms-boundary split: the ES tail's offsets are ms-granular
         val (newer, older) = halves(seedRows(s, d), ms = true)
         // phase 2 = phase 1's docs + the newer half
         val (docs1, docs2) = generations(older, newer,
           DocForm("sc", CentsData, id = IdForm.Keyed))
-        withServer(ChSignalStub.start()) { chUrl =>
-          new ClickHouseHttpClient(chUrl)
-            .execute(ClickHouseDdl.signalTableDdl(graft.sources.SignalLiveSource.Schema))
+        withSignalTable() { chUrl =>
           withTempDirs("q232-ck") { case Seq(ck) =>
             val ckpt = ck.toString
             def pipeOnce(docs: IndexedSeq[StubDoc]): Unit = withStub(docs) { esUrl =>
@@ -2365,7 +2313,7 @@ object LiveQueries {
     QueryDef(
       "q233_live_ch_balanced",
       (s, d) => {
-        import graft.sources.{ClickHouseDdl, ClickHouseHttpClient}
+        import graft.sources.ClickHouseHttpClient
         val signals = chSignals(s, d)
           .union(s.range(1).select( // the skew: one token a billion away
             lit(1000000000L).as("token_id"),
@@ -2374,9 +2322,7 @@ object LiveQueries {
             lit(42.0).as("value_number"),
             lit("o1").cast(StringType).as("value_string")))
           .repartition(8)
-        withServer(ChSignalStub.start()) { base =>
-          new ClickHouseHttpClient(base)
-            .execute(ClickHouseDdl.signalTableDdl(graft.sources.SignalLiveSource.Schema))
+        withSignalTable() { base =>
           signals.write.format("graft-signal-live")
             .option("url", base).mode("append").save()
           // plan audit: the ranges the scan would run, executed directly —
@@ -2428,14 +2374,12 @@ object LiveQueries {
     QueryDef(
       "q235_live_ch_subtoken",
       (s, d) => {
-        import graft.sources.{ClickHouseDdl, ClickHouseHttpClient}
+        import graft.sources.ClickHouseHttpClient
         val signals = chSignals(s, d,
           // the skew: ~90% of users fold into token 7 (one hot device)
           token = when(col("user_id") % 10 =!= 0, lit(7L)).otherwise(col("user_id").cast(LongType)))
           .repartition(8)
-        withServer(ChSignalStub.start()) { base =>
-          new ClickHouseHttpClient(base)
-            .execute(ClickHouseDdl.signalTableDdl(graft.sources.SignalLiveSource.Schema))
+        withSignalTable() { base =>
           signals.write.format("graft-signal-live")
             .option("url", base).mode("append").save()
           // plan audit BEFORE any oracle math: the hot token must have

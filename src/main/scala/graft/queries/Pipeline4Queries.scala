@@ -292,17 +292,9 @@ object Pipeline4Queries {
       "q170_pps_sample",
       (s, d) => {
         val w = docs(s, d)
-          .select(col("doc_id"), (length(col("text")) + 1).cast(LongType).as("w"),
-            expr("doc_id div 1000").as("shard"))
-        val shardTotals = w.groupBy(col("shard")).agg(sum(col("w")).as("sw"))
-          .withColumn("prev",
-            coalesce(sum(col("sw")).over(
-              Window.orderBy(col("shard")).rowsBetween(Window.unboundedPreceding, -1)),
-              lit(0L)))
+          .select(col("doc_id"), (length(col("text")) + 1).cast(LongType).as("w"))
         val tot = w.agg(sum(col("w")).as("total"))
-        w.join(broadcast(shardTotals.select(col("shard"), col("prev"))), "shard")
-          .withColumn("cum", col("prev") + sum(col("w")).over(
-            Window.partitionBy(col("shard")).orderBy(col("doc_id"))))
+        DiagnosticsQueries.weightLine(w)
           .crossJoin(broadcast(tot))
           .withColumn("step", expr("total div 50"))
           .withColumn("offs", expr("step div 2"))

@@ -83,7 +83,7 @@ object TlsStub {
     m
   }
 
-  private def load(path: String, pass: String): KeyStore = {
+  private[graft] def load(path: String, pass: String): KeyStore = {
     val ks = KeyStore.getInstance("PKCS12")
     val in = new FileInputStream(path)
     try ks.load(in, pass.toCharArray) finally in.close()

@@ -325,6 +325,11 @@ private[graft] object ClickHouseHttpClient {
   def jobRunTag(table: String, runIdentity: String): String =
     s"job-$table-${java.lang.Integer.toHexString(runIdentity.hashCode)}"
 
+  /** A string's body as a ClickHouse single-quoted literal: `\` escapes
+    * `\` and `'`. Every statement builder quotes names with it.
+    */
+  def escapeStr(s: String): String = s.replace("\\", "\\\\").replace("'", "\\'")
+
   /** The reference's `QueryOldestSignal` statement (clickhouse.go:65-87
     * [ext]): sqlboiler with the backtick dialect, placeholders inlined.
     */
@@ -332,7 +337,7 @@ private[graft] object ClickHouseHttpClient {
       table: String = "signal"): String = {
     val in =
       if (signalNames.isEmpty) ""
-      else signalNames.map(n => s"'${n.replace("'", "''")}'")
+      else signalNames.map(n => s"'${escapeStr(n)}'")
         .mkString(" AND `name` IN (", ",", ")")
     s"SELECT `timestamp` FROM `$table` WHERE `token_id` = $tokenId$in " +
       "ORDER BY `timestamp` ASC LIMIT 1"

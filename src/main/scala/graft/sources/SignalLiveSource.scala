@@ -13,6 +13,8 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.sources.ClickHouseHttpClient.escapeStr
+
 /** LIVE ClickHouse signal-table source (`graft-signal-live`) — the READ
   * half of the wire tier whose write half is
   * [[ClickHouseHttpClient.insertSignals]]: a DSv2 batch source whose
@@ -66,8 +68,6 @@ object SignalLiveSource {
     StructField("name", StringType, nullable = false),
     StructField("value_number", DoubleType, nullable = true),
     StructField("value_string", StringType, nullable = true)))
-
-  private def escapeStr(s: String): String = s.replace("\\", "\\\\").replace("'", "\\'")
 
   /** One SELECT-list item; `timestamp` reads as epoch micros (TZ-safe). */
   def selectExpr(col: String): String =

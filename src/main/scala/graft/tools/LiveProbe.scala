@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 
-import graft.queries.LiveQueries.{startStub, statusJson, StubCounters, StubModes}
+import graft.queries.LiveQueries.{startStub, statusJson, withServer, StubCounters, StubModes}
 
 /** Measures the LIVE wire tier's throughput against a loopback stub: N
   * synthetic status docs across K subjects served by the in-process
@@ -32,11 +32,10 @@ object LiveProbe {
         val json = statusJson(s"e$i", subj, tsu, "v2.0", s"""{"vehicle":{"cents":$i}}""")
         graft.queries.LiveQueries.StubDoc(s"e$i", subj, tsu, json)
       }
-    val server = startStub(docs)
-    try {
+    withServer(startStub(docs)) { url =>
       val subjects = (0 until nSubjects).map(_.toString)
       def read() = spark.read.format("graft-status-live")
-        .option("url", s"http://127.0.0.1:${server.getAddress.getPort}")
+        .option("url", url)
         .option("batchSize", batch.toString)
         .load()
         .where(col("subject").isin(subjects: _*))
@@ -49,7 +48,7 @@ object LiveProbe {
       val tasks = read().rdd.getNumPartitions
       println(f"[liveprobe] full census read: $n docs in $wall%.2f s " +
         f"(${n / wall}%.0f docs/s through the wire stack, $tasks-task fan-out)")
-    } finally server.stop(0)
+    }
 
     // ── section 2: incremental-resume wire traffic — the r12 watermark
     // pushdown (runLive ships per-token stop windows in the request
@@ -85,9 +84,7 @@ object LiveProbe {
         start = Some(new java.sql.Timestamp(0L)),
         stop = Some(new java.sql.Timestamp(9999999999999L)))
       val served = new java.util.concurrent.atomic.AtomicLong
-      val server2 = startStub(syncedDocs, counters = StubCounters(served = served))
-      try {
-        val url = s"http://127.0.0.1:${server2.getAddress.getPort}"
+      withServer(startStub(syncedDocs, counters = StubCounters(served = served))) { url =>
         def naive() = {
           val docs = spark.read.format("graft-status-live")
             .option("url", url).option("batchSize", batch.toString).load()
@@ -111,7 +108,7 @@ object LiveProbe {
           f"in $wallN%.2f s; runLive watermark pushdown shipped $shippedL docs in $wallL%.2f s " +
           f"(${shippedN.toDouble / math.max(shippedL, 1)}%.1fx less wire traffic, " +
           f"output $nL rows both)")
-      } finally server2.stop(0)
+      }
     }
 
     // ── section 3: the CH read source's aggregate pushdown — the wire
@@ -119,18 +116,11 @@ object LiveProbe {
     // the pushdown (partial per token range, Spark merges) and (b) from
     // the full row scan with the aggregation in Spark.
     {
-      import org.apache.spark.sql.types._
       val nRows = nDocs // reuse the probe's scale knob
-      val server3 = graft.queries.ChSignalStub.start()
-      try {
-        val url = s"http://127.0.0.1:${server3.getAddress.getPort}"
+      withServer(graft.queries.ChSignalStub.start()) { url =>
         val client = new graft.sources.ClickHouseHttpClient(url)
-        client.execute(graft.sources.ClickHouseDdl.signalTableDdl(StructType(Seq(
-          StructField("token_id", LongType, nullable = false),
-          StructField("timestamp", TimestampType, nullable = false),
-          StructField("name", StringType, nullable = false),
-          StructField("value_number", DoubleType, nullable = true),
-          StructField("value_string", StringType, nullable = true)))))
+        client.execute(graft.sources.ClickHouseDdl.signalTableDdl(
+          graft.sources.SignalLiveSource.Schema))
         val df = spark.range(0, nRows, 1, 8).selectExpr(
           s"id % $nSubjects as token_id",
           "timestamp_micros(1704000000000000 + id * 1000) as timestamp",
@@ -160,7 +150,7 @@ object LiveProbe {
         println(f"[liveprobe] CH read ($nRows rows, $g1 groups): pushed agg ships " +
           f"≤ ${g1 * 8} partial rows (wall $wallP%.2f s), row-ship ships $nRows rows " +
           f"(wall $wallR%.2f s) — ${nRows.toDouble / (g1 * 8)}%.0fx fewer wire rows")
-      } finally server3.stop(0)
+      }
     }
 
     // ── section 4 (r13): the STREAMED row scan's memory posture —
@@ -170,18 +160,11 @@ object LiveProbe {
     // mid-drain. This is the difference between "the declared plans are
     // safe" and "an unbounded row SELECT per token range is safe".
     {
-      import org.apache.spark.sql.types._
       val nRows = 2000000
-      val server4 = graft.queries.ChSignalStub.start()
-      try {
-        val url = s"http://127.0.0.1:${server4.getAddress.getPort}"
+      withServer(graft.queries.ChSignalStub.start()) { url =>
         val client = new graft.sources.ClickHouseHttpClient(url, timeoutMs = 300000)
-        client.execute(graft.sources.ClickHouseDdl.signalTableDdl(StructType(Seq(
-          StructField("token_id", LongType, nullable = false),
-          StructField("timestamp", TimestampType, nullable = false),
-          StructField("name", StringType, nullable = false),
-          StructField("value_number", DoubleType, nullable = true),
-          StructField("value_string", StringType, nullable = true)))))
+        client.execute(graft.sources.ClickHouseDdl.signalTableDdl(
+          graft.sources.SignalLiveSource.Schema))
         spark.range(0, nRows, 1, 8).selectExpr(
           "id % 1000 as token_id",
           "timestamp_micros(1704000000000000 + id * 1000) as timestamp",
@@ -216,7 +199,7 @@ object LiveProbe {
         println(f"[liveprobe] row scan x$nRows: buffered query() retains ~${bufMb}MB " +
           f"(wall $wallB%.2f s); queryStream retains ~${math.max(midMb, 0)}MB mid-drain " +
           f"(wall $wallS%.2f s) — the reader's memory is one row, not one partition")
-      } finally server4.stop(0)
+      }
     }
 
     // ── section 5 (r13): the search_after tie drain's wire shape — a tie
@@ -416,10 +399,9 @@ object LiveProbe {
       }
       val subjects = "hot" +: (0 until coldSubjects).map(s => s"c$s")
       val expected = (0L until hotN).sum + coldSubjects.toLong * (0L until coldN).sum
-      val server = startStub(probeDocs, StubModes(pitMode = true))
-      try {
+      withServer(startStub(probeDocs, StubModes(pitMode = true))) { url =>
         def read(slices: Int): Long = spark.read.format("graft-status-live")
-          .option("url", s"http://127.0.0.1:${server.getAddress.getPort}")
+          .option("url", url)
           .option("batchSize", "1000")
           .option("slices", slices.toString)
           .load()
@@ -438,7 +420,7 @@ object LiveProbe {
         println(f"[liveprobe] hot-subject drain ($hotN hot + ${coldSubjects * coldN} cold docs, " +
           f"page 1000, full decode): per-subject loops $seq1%.2f s vs slices=8 $par8%.2f s " +
           f"(${seq1 / par8}%.1fx — the hot device no longer serializes the scan)")
-      } finally server.stop(0)
+      }
     }
 
     // ── section 11 (r16): the HOT-LIST under the RANGED census — the

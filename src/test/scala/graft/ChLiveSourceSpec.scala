@@ -1,5 +1,7 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -30,8 +32,10 @@ class ChLiveSourceSpec extends SparkTestBase {
       if (i % 7 == 0) null else (t * 100 + i).toDouble,
       if (i % 3 == 0) null else s"s$t-$i")
 
-  private def withStore(rows: Seq[Row])(body: String => Unit): Unit = {
-    val server = graft.queries.ChSignalStub.start()
+  private def withStore(rows: Seq[Row],
+      statements: ConcurrentLinkedQueue[String] = new ConcurrentLinkedQueue[String]())(
+      body: String => Unit): Unit = {
+    val server = graft.queries.ChSignalStub.start(statements = statements)
     try {
       val url = s"http://127.0.0.1:${server.getAddress.getPort}"
       val client = new graft.sources.ClickHouseHttpClient(url)
@@ -337,6 +341,30 @@ class ChLiveSourceSpec extends SparkTestBase {
       val none = live(url).where(col("token_id") === 999L)
       assert(none.rdd.getNumPartitions === 0)
       assert(none.collect().isEmpty)
+    }
+  }
+
+  test("a name holding a quote, a backslash and a comma survives both statement builders") {
+    val odd = """it's\a,b"""
+    val t0 = 1704000000000000L
+    val rows = Seq(
+      Row(1L, ts(t0), "speed", 1.0, null),
+      Row(1L, ts(t0 + 1000000L), odd, 2.0, null),
+      Row(2L, ts(t0 + 2000000L), odd, 3.0, null),
+      Row(2L, ts(t0 + 3000000L), "x", 4.0, null))
+    val statements = new ConcurrentLinkedQueue[String]()
+    withStore(rows, statements) { url =>
+      // the pushed `name IN` filter of graft-signal-live
+      val got = live(url).where(col("name").isin(odd, "x,y"))
+        .select("token_id", "value_number").collect().map(r => (r.getLong(0), r.getDouble(1)))
+      assert(got.sorted.toSeq === Seq((1L, 2.0), (2L, 3.0)))
+      import scala.jdk.CollectionConverters._
+      assert(statements.asScala.exists(_.contains("""`name` IN ('it\'s\\a,b','x,y')""")),
+        s"the IN list reached the double as one literal per name: $statements")
+      // the reference's oldest-signal probe with the same names
+      val oldest = new graft.sources.ClickHouseHttpClient(url).query(
+        graft.sources.ClickHouseHttpClient.oldestSignalSql(1L, Seq(odd, "x,y")))
+      assert(oldest.map(_.toSeq) === Seq(Seq("1704000001.000000")))
     }
   }
 }

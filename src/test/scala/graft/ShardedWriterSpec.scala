@@ -184,4 +184,20 @@ class ShardedWriterSpec extends SparkTestBase {
     assert(!new java.io.File(dir, "_SUCCESS").exists())
     assert(spark.read.format("graft-sharded").load(dir).count() === 0)
   }
+
+  test("an aborted write publishes no part and leaves no staging directory") {
+    val dir = tmpDir()
+    messyInput(2, 10).write.format("graft-sharded").mode("append").save(dir)
+    // shard 3's task fails on its last row; the other shards' tasks may
+    // have committed their files to staging before the job aborts
+    val rows = (0 until 40).map(i => Row(i % 4, i.toLong, i * 1000L,
+      if (i == 39) "a,b" else s"sig_$i", i * 0.5))
+    intercept[Exception] {
+      spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), schema)
+        .write.format("graft-sharded").mode("append").save(dir)
+    }
+    val names = new java.io.File(dir).listFiles().map(_.getName).toSet
+    assert(!names.exists(_.startsWith("_tmp-write-")), s"abort must sweep staging: $names")
+    assert(readBack(dir).count() === 20, "the aborted append publishes none of its rows")
+  }
 }
